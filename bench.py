@@ -570,17 +570,10 @@ def main() -> None:
     # that records them).  Unpersist + clear so every shared build
     # lands in its first timed consumer's cold run.
     from terraform_aws_lambda_kinesis_to_s3_spark.plans.queries import (
-        SHARED_STAGE_CACHES,
+        clear_shared_stages,
     )
 
-    for _cache in SHARED_STAGE_CACHES.values():
-        for _v in _cache.values():
-            for _df in (_v if isinstance(_v, tuple) else (_v,)):
-                try:
-                    _df.unpersist()
-                except Exception:
-                    pass
-        _cache.clear()
+    clear_shared_stages()
 
     # Fixed per-entry scheduling overhead (noop plan through the same
     # write path): median of 5 so one scheduler hiccup can't inflate

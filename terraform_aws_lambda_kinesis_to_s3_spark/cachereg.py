@@ -3,9 +3,12 @@ items 2-3).
 
 Two kinds of persist exist in the query paths:
 
-- SESSION-SHARED stages (``plans.queries.SHARED_STAGE_CACHES``): built
-  once per (applicationId, sf) and deliberately reused across sibling
-  queries; tooling snapshots/rolls them back explicitly.
+- SESSION-SHARED stages: helpers in ``plans.queries`` decorated with
+  ``@shared_stage``, built once per (applicationId, sf, table loader)
+  and deliberately reused across sibling queries.  The decorator
+  registers each helper's cache in ``SHARED_STAGE_CACHES``; tooling
+  snapshots/rolls those back, or drops them all with
+  ``clear_shared_stages()``.
 - QUERY-LOCAL caches: ``persist()`` calls inside one query builder
   (triangle edge builds, kmeans centroids, the blocked-cumsum census,
   ...) whose useful life ends when that query's result is

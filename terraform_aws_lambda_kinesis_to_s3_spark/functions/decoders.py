@@ -163,19 +163,6 @@ def kpl_deaggregate(blobs: pd.Series) -> pd.Series:
     return blobs.map(kpl_deaggregate_bytes)
 
 
-@pandas_udf(T.BinaryType())
-def gunzip(blobs: pd.Series) -> pd.Series:
-    def one(b):
-        if b is None or not bytes(b).startswith(GZIP_MAGIC):
-            return b
-        try:
-            return _gzip.GzipFile(fileobj=io.BytesIO(bytes(b))).read()
-        except (OSError, EOFError, struct.error):
-            return b  # corrupt gzip -> passthrough, ends up non-JSON/unknown
-
-    return blobs.map(one)
-
-
 @pandas_udf(T.StringType())
 def gunzip_to_text(blobs: pd.Series) -> pd.Series:
     """gunzip + UTF-8 decode in one Arrow pass.

@@ -23,6 +23,7 @@ the reference contract (``/root/reference/README.md:9-15``).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -56,20 +57,44 @@ def _t(spark: SparkSession, sf_dir: str, name: str, parallelize: bool = False) -
     return load_table(spark, sf_dir, name, parallelize)
 
 
-#: The canonical loader, captured at import.  Session-shared stage
-#: caches key on (applicationId, sf_dir), which is only a valid
-#: identity while tables actually come from that on-disk directory;
-#: tests swap ``_t`` for in-memory fixtures (a NEW dataset per call
-#: under the same sf string), so shared-cache helpers call
-#: ``_loader_is_canonical()`` and bypass their cache when the loader
-#: has been replaced.  An instrumenting wrapper that still delegates
-#: to load_table (tools/plan_cost.py) marks itself with
-#: ``__wraps_canonical__ = True`` to keep the cache live.
-_T_CANONICAL = _t
+#: THE inventory of session-shared persisted stages: helper name ->
+#: {(applicationId, sf_dir, loader): persisted value}.  Filled by
+#: ``@shared_stage``; tooling (bench.py warmup, plan_cost rollback,
+#: bench_diff builder inclusion, perfbench) snapshots, rolls back or
+#: clears these plain dicts instead of keeping its own copies.
+SHARED_STAGE_CACHES: dict[str, dict] = {}
 
 
-def _loader_is_canonical() -> bool:
-    return _t is _T_CANONICAL or getattr(_t, "__wraps_canonical__", False)
+def shared_stage(build):
+    """Build a persisted stage once per (applicationId, sf_dir, loader)
+    and hand every later caller in the session the same object.  The
+    loader is the module's ``_t`` at call time: an sf string names an
+    on-disk table only under the canonical loader, so a fixture swapped
+    in under a reused sf string gets its own entry instead of another
+    dataset's rows."""
+    cache = SHARED_STAGE_CACHES[build.__name__] = {}
+
+    @functools.wraps(build)
+    def stage(spark, sf):
+        key = (spark.sparkContext.applicationId, sf, _t)
+        if key not in cache:
+            cache[key] = build(spark, sf)
+        return cache[key]
+
+    return stage
+
+
+def clear_shared_stages() -> None:
+    """Unpersist every shared stage (members of tuple values too) and
+    forget it.  Safe on half-built or already-released entries."""
+    for cache in SHARED_STAGE_CACHES.values():
+        for v in cache.values():
+            for df in v if isinstance(v, tuple) else (v,):
+                try:
+                    df.unpersist()
+                except Exception:
+                    pass
+        cache.clear()
 
 
 def _dec(c) -> F.Column:
@@ -108,7 +133,7 @@ def _events_payload(ev: DataFrame, drop_time=None, drop_type=None) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: (applicationId, sf_dir) -> persisted parse->validate envelope over
+#: Session-shared persisted parse->validate envelope over
 #: the standard replayed payloads (no planted failures).  The
 #: expensive half of every Tier-A routing query is the payload
 #: serialize + PERMISSIVE from_json parse + permissive timestamp
@@ -121,24 +146,16 @@ def _events_payload(ev: DataFrame, drop_time=None, drop_type=None) -> DataFrame:
 #: test_envelope_cache_equivalence).  pipeline_unknown_routing and
 #: pipeline_schema_profile plant per-row failures into the PAYLOAD
 #: itself, so they cannot ride this stage.
-_ENVELOPE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_stage
 def _routed_envelope(spark, sf) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _ENVELOPE_CACHE.get(key)
-    if cached is not None:
-        return cached
     ev = _t(spark, sf, "events", parallelize=True)
     cfg = PipelineConfig()
-    env = validate(extract_envelope(_events_payload(ev), cfg), cfg).persist()
-    _ENVELOPE_CACHE[key] = env
-    return env
+    return validate(extract_envelope(_events_payload(ev), cfg), cfg).persist()
 
 
 def q_pipeline_route(spark, sf):
     """A3-A9: parse -> validate -> route -> (log_type, ym, dd) counts.
-    Rides the session-shared _ENVELOPE_CACHE parse stage."""
+    Rides the session-shared _routed_envelope parse stage."""
     routed = route_records_on_envelope(_routed_envelope(spark, sf), PipelineConfig())
     return (
         routed.groupBy(F.col("route").alias("log_type"), "ym", "dd")
@@ -176,7 +193,7 @@ FROM events GROUP BY 1
 def q_pipeline_whitelist(spark, sf):
     """A6: whitelist semi-filter keeps only listed log types.  The
     whitelist is a post-envelope filter, so this rides the shared
-    _ENVELOPE_CACHE parse stage."""
+    _routed_envelope parse stage."""
     cfg = PipelineConfig(log_type_whitelist=("purchase", "click"))
     routed = route_records_on_envelope(_routed_envelope(spark, sf), cfg)
     return routed.groupBy("route").agg(F.count("*").alias("n_records"))
@@ -191,7 +208,7 @@ FROM events WHERE event_type IN ('purchase', 'click') GROUP BY 1
 def q_pipeline_tz(spark, sf):
     """A7/A9: TZ-shifted partition dates (Asia/Tokyo = UTC+9, no DST).
     The timezone enters only in add_route's partition-date columns, so
-    this rides the shared _ENVELOPE_CACHE parse stage."""
+    this rides the shared _routed_envelope parse stage."""
     cfg = PipelineConfig(timezone="Asia/Tokyo")
     routed = route_records_on_envelope(_routed_envelope(spark, sf), cfg)
     return routed.groupBy("ym", "dd").agg(F.count("*").alias("n_records"))
@@ -1607,7 +1624,7 @@ def q_ngram_jaccard_capped(spark, sf):
     space before the inverted-index self-join — the scale guard that
     bounds the join's sum(df^2) blowup on boilerplate shingles. The
     oracle reproduces the identical DF-filtered similarity space.
-    Rides the shared persisted ``_NGRAM_PAIRS_CACHE`` threshold-0
+    Rides the shared persisted ``_ngram_pairs_capped`` threshold-0
     superset; the post-hoc ``jaccard >= 0.1`` filter is bit-identical
     to passing ``threshold=0.1`` (6-dp round happens BEFORE any
     threshold compare — test-pinned equivalence)."""
@@ -1652,49 +1669,43 @@ WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.1
 """
 
 
-#: (applicationId, sf_dir) -> persisted verified-pairs DataFrame. The
+#: Session-shared persisted verified-pairs DataFrame. The
 #: LSH pipeline is the most expensive stage in the registry and feeds
 #: two entries (dedup_minhash_lsh + dedup_clusters); sharing the
 #: persisted result means clusters pays only for the union-find, not a
 #: full recompute (VERDICT r1 item 3).
-_LSH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_stage
 def _minhash_verified_pairs(spark, sf) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _LSH_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = _t(spark, sf, "documents", parallelize=True)
     # in-row pipeline: the per-doc shingle ARRAY feeds map-only
     # signatures and the array-intersect verify — no exploded index is
     # ever shuffled (the signature stage used to shuffle |shingles|
-    # rows; now the only shuffles are the banded candidate join)
-    arrs = D.shingle_arrays(d, n=3).persist()
+    # rows; now the only shuffles are the banded candidate join).
+    # The shingle arrays are query-local: tracked, so release_all
+    # frees them once the shared pairs are built.
+    arrs = CR.track(D.shingle_arrays(d, n=3).persist())
     sig = D.minhash_signatures_inrow(arrs)
     bands = D.lsh_bands(sig)
     cand = D.lsh_candidate_pairs(bands)
-    pairs = (
+    return (
         D.jaccard_on_pairs_arrays(cand, arrs, threshold=0.05)
         .select("doc_a", "doc_b", "jaccard")
         .persist()
     )
-    _LSH_PAIRS_CACHE[key] = pairs
-    return pairs
 
 
 def q_minhash_lsh_pairs(spark, sf):
     return _minhash_verified_pairs(spark, sf)
 
 
-#: (applicationId, sf_dir) -> persisted DF-capped exact 3-gram pair
+#: Session-shared persisted DF-capped exact 3-gram pair
 #: table at threshold 0 (n=3, max_df=2) — the SECOND most expensive
 #: shared stage after the LSH pipeline.  Four eval queries score
 #: against this identical pair space (lsh_band_tuning,
 #: dedup_method_agreement, hash_embedding_fidelity_eval,
 #: hash_dim_fidelity_sweep); sharing the persisted result means each
 #: pays only for its own scoring join, not a fresh shingle-index
-#: self-join (same pattern and rationale as _LSH_PAIRS_CACHE).
+#: self-join (same pattern and rationale as _minhash_verified_pairs).
 #: Threshold-0 is the common superset: jaccard is 6-dp-rounded BEFORE
 #: any threshold filter in operators.dedup.ngram_jaccard_pairs, so a
 #: post-hoc ``jaccard >= t`` filter is bit-identical to passing
@@ -1708,21 +1719,13 @@ def q_minhash_lsh_pairs(spark, sf):
 #: scorer derives its unrounded n_common/n_a ratios from the SAME
 #: integers the dedicated operator divides — bit-identical, pinned
 #: in test_ngram_pair_stats_equivalence.
-_NGRAM_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_stage
 def _ngram_pairs_capped(spark, sf) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _NGRAM_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = _t(spark, sf, "documents", parallelize=True)
-    pairs = D.ngram_pair_stats(d, n=3, max_df=2).persist()
-    _NGRAM_PAIRS_CACHE[key] = pairs
-    return pairs
+    return D.ngram_pair_stats(d, n=3, max_df=2).persist()
 
 
-#: (applicationId, sf_dir) -> persisted 32-bit SimHash signature table
+#: Session-shared persisted 32-bit SimHash signature table
 #: (doc_id, simhash) — the third session-shared stage.  The expensive
 #: part of every SimHash consumer is the signature build (explode all
 #: tokens -> one groupBy computing 32 bit-majorities); banding, bit
@@ -1734,23 +1737,10 @@ def _ngram_pairs_capped(spark, sf) -> DataFrame:
 #: on_sig seam is the SAME banding code simhash_hamming_pairs always
 #: ran, now over a persisted instead of inline signature subtree
 #: (equivalence pinned in test_simhash_sig_cache_equivalence).
-_SIMHASH_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_stage
 def _simhash_signatures(spark, sf) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _SIMHASH_SIG_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = _t(spark, sf, "documents", parallelize=True)
-    sig = D.simhash(d).persist()
-    _SIMHASH_SIG_CACHE[key] = sig
-    return sig
-
-
-# (SHARED_STAGE_CACHES — the single tooling-facing inventory of these
-# session-shared stages — is defined after the last cache declaration;
-# search for "SHARED_STAGE_CACHES: dict".)
+    return D.simhash(d).persist()
 
 
 def _minhash_sql() -> str:
@@ -1801,7 +1791,7 @@ SQL_MINHASH_LSH = _minhash_sql()
 
 def q_simhash(spark, sf):
     """Per-doc 32-bit SimHash signatures — the persisted
-    ``_SIMHASH_SIG_CACHE`` stage itself (shared with
+    ``_simhash_signatures`` stage itself (shared with
     dedup_simhash_hamming, dedup_method_agreement,
     simhash_bit_balance)."""
     return _simhash_signatures(spark, sf)
@@ -1831,7 +1821,7 @@ SQL_SIMHASH = _simhash_sql()
 
 def q_simhash_hamming(spark, sf):
     """Banded hamming<=2 SimHash pairs over the shared persisted
-    signature stage (``_SIMHASH_SIG_CACHE``) — pays only banding +
+    signature stage (``_simhash_signatures``) — pays only banding +
     verify, not a fresh tokenize-and-bit-majority groupBy."""
     return D.simhash_hamming_pairs_on_sig(_simhash_signatures(spark, sf), k=2)
 
@@ -1853,42 +1843,27 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 2
 # ---------------------------------------------------------------------------
 
 
-#: (applicationId, sf_dir) -> persisted exact brute-force top-5 of the
+#: Session-shared persisted exact brute-force top-5 of the
 #: standard 10-query probe (vec_id < 10) — embedding_cosine_topk IS
 #: this stage; ivf_eval_recall reads it as the ground-truth side of
 #: its recall join instead of re-running the BLAS scan (same pattern
 #: as the embedding near-dup stages).
-_COSINE_TOPK10_CACHE: dict[tuple[str, str], DataFrame] = {}
+@shared_stage
+def _cosine_topk10(spark, sf) -> DataFrame:
+    e = _t(spark, sf, "embeddings")
+    return S.cosine_topk_blas(e, e.filter(F.col("vec_id") < 10), k=5).persist()
 
-#: (applicationId, sf_dir) -> persisted IVF-probed (nprobe=3) top-5 of
+
+#: Session-shared persisted IVF-probed (nprobe=3) top-5 of
 #: the same probe set — embedding_ivf_topk IS this stage;
 #: ivf_eval_recall reads it as the approximate side.
-_IVF_TOPK10_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _cosine_topk10(spark, sf) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _COSINE_TOPK10_CACHE.get(key)
-    if cached is not None:
-        return cached
-    e = _t(spark, sf, "embeddings")
-    out = S.cosine_topk_blas(e, e.filter(F.col("vec_id") < 10), k=5).persist()
-    _COSINE_TOPK10_CACHE[key] = out
-    return out
-
-
+@shared_stage
 def _ivf_topk10(spark, sf) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _IVF_TOPK10_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = _t(spark, sf, "embeddings")
     cents = S.label_centroids(e)
-    out = S.ivf_topk(
+    return S.ivf_topk(
         e, e.filter(F.col("vec_id") < 10), cents, k=5, nprobe=3
     ).persist()
-    _IVF_TOPK10_CACHE[key] = out
-    return out
 
 
 def q_cosine_topk(spark, sf):
@@ -1896,7 +1871,7 @@ def q_cosine_topk(spark, sf):
     per Arrow batch + per-batch top-k pruning; see cosine_topk_blas).
     The Catalyst-lambda formulation (S.cosine_topk) is kept as the
     reference implementation and pinned equivalent by unit test.
-    This query IS the session-shared _COSINE_TOPK10_CACHE stage."""
+    This query IS the session-shared _cosine_topk10 stage."""
     return _cosine_topk10(spark, sf)
 
 
@@ -1999,40 +1974,23 @@ SELECT bucket, COUNT(*) AS n_vectors FROM buckets GROUP BY 1
 """
 
 
-#: (applicationId, sf_dir) -> persisted hyperplane-LSH near-dup pair
+#: Session-shared persisted hyperplane-LSH near-dup pair
 #: table at cosine threshold 0.45 — shared by embedding_lsh_near_dup
 #: (the table itself) and lsh_eval_pr (its approximate side).  Same
-#: session-shared-stage pattern as the document pair caches; listed
-#: in SHARED_STAGE_CACHES.
-_EMB_LSH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: session-shared-stage pattern as the document pair caches.
+@shared_stage
 def _emb_lsh_near_dup_pairs(spark, sf) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _EMB_LSH_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = _t(spark, sf, "embeddings")
-    pairs = S.lsh_near_dup_pairs(e, threshold=0.45).persist()
-    _EMB_LSH_PAIRS_CACHE[key] = pairs
-    return pairs
+    return S.lsh_near_dup_pairs(e, threshold=0.45).persist()
 
 
-#: (applicationId, sf_dir) -> persisted EXACT cosine near-dup pair
+#: Session-shared persisted EXACT cosine near-dup pair
 #: table at threshold 0.45 — shared by embedding_near_dup (the
 #: ground-truth table itself) and lsh_eval_pr (its exact side).
-_EMB_EXACT_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_stage
 def _emb_exact_near_dup_pairs(spark, sf) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _EMB_EXACT_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = _t(spark, sf, "embeddings", parallelize=True)
-    pairs = S.cosine_near_dup_pairs(e, threshold=0.45).persist()
-    _EMB_EXACT_PAIRS_CACHE[key] = pairs
-    return pairs
+    return S.cosine_near_dup_pairs(e, threshold=0.45).persist()
 
 
 def q_lsh_near_dup(spark, sf):
@@ -2040,7 +1998,7 @@ def q_lsh_near_dup(spark, sf):
     path. Deterministic md5 hyperplanes make even this *approximate*
     method exactly oracle-checkable: DuckDB reproduces the identical
     bucket assignment and therefore the identical pair set.  The
-    result IS the shared persisted ``_EMB_LSH_PAIRS_CACHE`` stage
+    result IS the shared persisted ``_emb_lsh_near_dup_pairs`` stage
     (lsh_eval_pr scores against the same table)."""
     return _emb_lsh_near_dup_pairs(spark, sf)
 
@@ -2087,7 +2045,7 @@ def q_embedding_near_dup(spark, sf):
     approximate-recall method can't be hash-compared against an exact
     oracle, so the registry checks the exact form.
 
-    The result IS the shared persisted ``_EMB_EXACT_PAIRS_CACHE``
+    The result IS the shared persisted ``_emb_exact_near_dup_pairs``
     stage (lsh_eval_pr's ground-truth side reads the same table).
     """
     return _emb_exact_near_dup_pairs(spark, sf)
@@ -2515,7 +2473,7 @@ def _synth_video_blobs(spark, sf):
     return d.mapInPandas(synth, "doc_id long, blob binary")
 
 
-#: (applicationId, sf_dir) -> persisted parsed video metadata over the
+#: Session-shared persisted parsed video metadata over the
 #: shared mixed corpus.  Three consumers (video_meta_probe,
 #: video_frame_sample_plan, video_byte_plan_audit) each re-ran the
 #: synth+parse Arrow pass — and the audit consumed the subtree TWICE
@@ -2526,21 +2484,13 @@ def _synth_video_blobs(spark, sf):
 #: 0.81 s (audit 1.31 -> 0.53, plan 0.71 -> 0.24, probe 0.57 -> 0.05);
 #: video_frame_byte_index keeps its OWN chunked corpus and stays
 #: uncached.
-_VIDEO_META_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_stage
 def _video_meta(spark, sf) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _VIDEO_META_CACHE.get(key)
-    if cached is not None:
-        return cached
     from terraform_aws_lambda_kinesis_to_s3_spark.operators import (
         multimodal as MM,
     )
 
-    meta = MM.decode_video_meta(_synth_video_blobs(spark, sf)).persist()
-    _VIDEO_META_CACHE[key] = meta
-    return meta
+    return MM.decode_video_meta(_synth_video_blobs(spark, sf)).persist()
 
 
 def q_video_meta_probe(spark, sf):
@@ -2558,7 +2508,7 @@ def q_video_meta_probe(spark, sf):
     VIDEO_FRAG_CONST, pinned against the synthesizers in unit tests).
     Scale shape: map-only Arrow batches end to end — the 100 TB form
     of \"audit a petabyte of video WITHOUT decoding a single frame\";
-    the parse stage is the session-shared _VIDEO_META_CACHE build."""
+    the parse stage is the session-shared _video_meta build."""
     return _video_meta(spark, sf)
 
 
@@ -2636,7 +2586,7 @@ def q_video_frame_sample_plan(spark, sf):
     doc_id arithmetic, so the oracle cross-checks the classify path
     too.  Scale shape: the metadata probe is map-only; the plan adds
     one in-row sequence explode (k rows per video, no shuffle, no
-    UDF) over the session-shared _VIDEO_META_CACHE parse stage —
+    UDF) over the session-shared _video_meta parse stage —
     Catalyst end to end."""
     from terraform_aws_lambda_kinesis_to_s3_spark.operators import (
         multimodal as MM,
@@ -2681,7 +2631,7 @@ def q_video_byte_plan_audit(spark, sf):
     every progressive range must be in-bounds (in_bounds ==
     n_byte_ranges) and fragmented slots must plan zero ranges — the
     oracle proves both from the synthesis arithmetic alone.  Scale
-    shape: ONE persisted Arrow parse (_VIDEO_META_CACHE — both sides
+    shape: ONE persisted Arrow parse (_video_meta — both sides
     of the join read the same cached stage, not two recomputes) + one
     doc-grain equi-join + a 2-group aggregate; planned_bytes is
     exactly the I/O a 100 TB frame fetch would issue, so this query
@@ -3013,7 +2963,7 @@ def q_ivf_topk(spark, sf):
     mirrors the whole pipeline exactly: cell assignment (cosine argmax,
     ties to the smaller label), nprobe=3 probe selection per query, and
     exact re-scoring inside the probed cells (r5 verdict item 3).
-    This query IS the session-shared _IVF_TOPK10_CACHE stage."""
+    This query IS the session-shared _ivf_topk10 stage."""
     return _ivf_topk10(spark, sf)
 
 
@@ -7433,8 +7383,8 @@ def q_lsh_eval_pr(spark, sf):
     banding parameters trade away.
 
     Both sides are the shared persisted stages the production queries
-    already materialize (``_EMB_EXACT_PAIRS_CACHE``,
-    ``_EMB_LSH_PAIRS_CACHE``), so this eval pays only the
+    already materialize (``_emb_exact_near_dup_pairs``,
+    ``_emb_lsh_near_dup_pairs``), so this eval pays only the
     confusion join."""
     exact = _emb_exact_near_dup_pairs(spark, sf).select("va", "vb")
     lsh = _emb_lsh_near_dup_pairs(spark, sf).select("va", "vb")
@@ -7632,17 +7582,11 @@ LOGREG_ITERS = 10
 LOGREG_LR = 1.0
 
 
-_LOGREG_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@shared_stage
 def _logreg_feats_and_weights(spark, sf):
     """(persisted feature table, 1-row trained weights) — shared by the
     training readout and the calibration query (same cache pattern as
     the LSH pairs stage: train once per session/sf)."""
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _LOGREG_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = _t(spark, sf, "documents")
     feats = d.select(
         F.col("doc_id"),
@@ -7671,9 +7615,7 @@ def _logreg_feats_and_weights(spark, sf):
                 for i in (1, 2, 3)
             ]
         )
-    w = w.persist()
-    _LOGREG_CACHE[key] = (feats, w)
-    return feats, w
+    return feats, w.persist()
 
 
 def q_quality_logreg_train(spark, sf):
@@ -8068,7 +8010,7 @@ def q_ivf_eval_recall(spark, sf):
     recall nprobe=3 buys, as a hard oracle-checked number). Both
     sides share deterministic tie-breaks (cos desc, id asc), so the
     hit counts are engine-exact.  Both sides are the session-shared
-    persisted stages (_COSINE_TOPK10_CACHE / _IVF_TOPK10_CACHE — the
+    persisted stages (_cosine_topk10 / _ivf_topk10 — the
     embedding_cosine_topk and embedding_ivf_topk results themselves),
     so this eval pays only for its recall join."""
     exact = _cosine_topk10(spark, sf).select("query_id", "nn_id")
@@ -8637,25 +8579,17 @@ FROM f GROUP BY 1
 """
 
 
-#: (applicationId, sf_dir) -> persisted (source, term, c) census —
+#: Session-shared persisted (source, term, c) census —
 #: shared by corpus_kl_divergence and distinctive_terms_logodds (same
-#: cache pattern as _LOGREG_CACHE / the LSH pairs stage)
-_TERM_CENSUS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+#: cache pattern as _logreg_feats_and_weights / the LSH pairs stage)
+@shared_stage
 def _term_census(spark, sf) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _TERM_CENSUS_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = _t(spark, sf, "documents")
     tok = d.select("source", F.explode(F.split("text", " ")).alias("term"))
-    sc = tok.groupBy("source", "term").agg(F.count("*").alias("c")).persist()
-    _TERM_CENSUS_CACHE[key] = sc
-    return sc
+    return tok.groupBy("source", "term").agg(F.count("*").alias("c")).persist()
 
 
-#: (applicationId, sf) -> persisted quarter-graph co-occurrence edges
+#: Session-shared persisted quarter-graph co-occurrence edges
 #: (distinct (src, dst) parts pairs over the l_orderkey % 4 == 0 basket
 #: quarter) — shared by graph_adamic_adar and aa_cap_eval (r11 verdict
 #: item 4).  Both queries previously ran the lineitem scan + basket
@@ -8670,27 +8604,9 @@ def _term_census(spark, sf) -> DataFrame:
 #: operators persist + release edges internally, and the r11 plan_cost
 #: trial showed the full-graph consumers losing parquet-stats exchange
 #: reuse.
-_QUARTER_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_stage
 def _quarter_edges(spark, sf) -> DataFrame:
     li = _t(spark, sf, "lineitem").filter(F.col("l_orderkey") % 4 == 0)
-    # The (applicationId, sf) key names an IMMUTABLE on-disk table; a
-    # fixture-injected loader (tests rebind Q._t per synthetic dataset
-    # under the same sf string) breaks that premise, so the session
-    # cache must stand down or the second fixture silently reads the
-    # first one's edges.  Per-call persist keeps the within-query
-    # reuse (degrees + pair enumeration) on the bypass path.
-    if not _loader_is_canonical():
-        e = CR.track(
-            G.cooccurrence_edges(li, "l_orderkey", "l_partkey").persist()
-        )
-        CR.materialize(e)
-        return e
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _QUARTER_EDGES_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = G.cooccurrence_edges(li, "l_orderkey", "l_partkey").persist()
     # EAGER, once per session (not per call, so the r11 round-close
     # lazy-beats-eager A/B for adamic's PER-CALL persist does not
@@ -8700,36 +8616,7 @@ def _quarter_edges(spark, sf) -> DataFrame:
     # measured bimodal 3.2/6.1/10.1 s adamic sessions.  One count at
     # first use gives every consumer known-size cache reads.
     CR.materialize(e)
-    _QUARTER_EDGES_CACHE[key] = e
     return e
-
-
-#: THE inventory of session-shared persisted stages: helper function
-#: name -> its (applicationId, sf) cache dict.  Tooling consumes this
-#: single registry instead of keeping its own copies (which drifted:
-#: plan_cost rolled back 3 of 5 caches, bench_diff listed all 5) —
-#: plan_cost rolls EVERY listed cache back around its ingest-delta
-#: re-runs (a shared build warm in only one of the two runs would
-#: corrupt the delta), and bench_diff uses the helper names to add
-#: each cache's first sweep-order consumer to a --recheck solo set.
-#: Add any new shared stage HERE in the same commit that introduces
-#: it.  (_LOGREG_CACHE holds (feats, weights) tuples rather than one
-#: DataFrame per key — tools only snapshot/restore the dicts, so the
-#: value shape doesn't matter.)
-SHARED_STAGE_CACHES: dict[str, dict] = {
-    "_minhash_verified_pairs": _LSH_PAIRS_CACHE,
-    "_ngram_pairs_capped": _NGRAM_PAIRS_CACHE,
-    "_simhash_signatures": _SIMHASH_SIG_CACHE,
-    "_emb_lsh_near_dup_pairs": _EMB_LSH_PAIRS_CACHE,
-    "_emb_exact_near_dup_pairs": _EMB_EXACT_PAIRS_CACHE,
-    "_logreg_feats_and_weights": _LOGREG_CACHE,
-    "_term_census": _TERM_CENSUS_CACHE,
-    "_cosine_topk10": _COSINE_TOPK10_CACHE,
-    "_ivf_topk10": _IVF_TOPK10_CACHE,
-    "_routed_envelope": _ENVELOPE_CACHE,
-    "_video_meta": _VIDEO_META_CACHE,
-    "_quarter_edges": _QUARTER_EDGES_CACHE,
-}
 
 
 def q_corpus_kl_divergence(spark, sf):
@@ -9065,7 +8952,7 @@ def q_containment_pairs(spark, sf):
     Jaccard/capped entries; the oracle replays the identical
     DF-filtered shingle space.
 
-    Rides the shared persisted ``_NGRAM_PAIRS_CACHE`` stats stage:
+    Rides the shared persisted ``_ngram_pairs_capped`` stats stage:
     containment_a/b derive as n_common/n_a and n_common/n_b — the
     SAME integer divisions the dedicated operator performs, so the
     filter-on-unrounded-then-round-for-output contract is bit-exact
@@ -11355,7 +11242,7 @@ def q_simhash_bit_balance(spark, sf):
     pigeonhole bound assumes away — this is the audit that catches it.
 
     100 TB shape: rides the shared persisted signature stage
-    (``_SIMHASH_SIG_CACHE`` — one tokenize-and-bit-majority shuffle
+    (``_simhash_signatures`` — one tokenize-and-bit-majority shuffle
     per session), then an IN-ROW 32-way bit explode (bounded ×32
     fan-out) into a 32-row aggregate."""
     sig = _simhash_signatures(spark, sf)
@@ -11831,7 +11718,7 @@ def q_dedup_threshold_sensitivity(spark, sf):
     space still yields the full 9-row grid with n_pairs 0 and NULL
     fraction on BOTH engines (sums coalesced, the 0/0 guarded, the
     oracle's cross join turned into an ON TRUE left join).  The pair
-    table IS the shared persisted ``_NGRAM_PAIRS_CACHE`` stage
+    table IS the shared persisted ``_ngram_pairs_capped`` stage
     (threshold 0, n=3, max_df=2 — the identical similarity space)."""
     pairs = _ngram_pairs_capped(spark, sf)
     tot = pairs.agg(F.count("*").alias("t"))
@@ -14095,7 +13982,7 @@ def q_lsh_band_tuning(spark, sf):
 
     Scale shape: reuses the DF-capped pair-similarity space (bounded
     by max_df, never all-pairs; the shared persisted
-    ``_NGRAM_PAIRS_CACHE`` stage, so the four evals scoring this space
+    ``_ngram_pairs_capped`` stage, so the four evals scoring this space
     pay for ONE shingle-index self-join per session), an in-row
     5-config explode feeding a 5-cell map-side-combinable aggregate; collision probabilities are
     summed as DECIMAL(28,12) so the cross-engine sum is
@@ -16714,8 +16601,8 @@ def q_dedup_method_agreement(spark, sf):
     Shape: the three pair pipelines are each bounded candidate spaces
     (banded equi-joins / DF-capped inverted index — never all-pairs);
     ALL THREE now ride session-shared persisted stages
-    (``_LSH_PAIRS_CACHE``, ``_NGRAM_PAIRS_CACHE``,
-    ``_SIMHASH_SIG_CACHE`` — the simhash side pays only banding +
+    (``_minhash_verified_pairs``, ``_ngram_pairs_capped``,
+    ``_simhash_signatures`` — the simhash side pays only banding +
     hamming verify over the persisted signatures), so this census
     pays only for the confusion reduce; the tagged union reduces in
     ONE groupBy over O(flagged pairs) rows to a 1-row confusion — no
@@ -16906,7 +16793,7 @@ def q_hash_embedding_fidelity_eval(spark, sf):
 
     Scale shape: sparse integer components (never dense vectors), the
     DF-capped pair space (never all-pairs; shared persisted
-    ``_NGRAM_PAIRS_CACHE`` stage), and — the decisive cut — the hash
+    ``_ngram_pairs_capped`` stage), and — the decisive cut — the hash
     components are built ONLY for docs that appear in some pair (a
     semi-join on the exploded pair ids BEFORE tokenization), so the
     embedding work is O(pair docs × tokens/doc), corpus-size
@@ -17058,7 +16945,7 @@ def q_hash_dim_fidelity_sweep(spark, sf):
     4-variant featurization is corpus-size independent), a 4-row
     variant grid joined (not cross-joined) through the norm table,
     the same DF-capped pair space as the parent eval (shared
-    persisted ``_NGRAM_PAIRS_CACHE`` stage), exact integer dots, one
+    persisted ``_ngram_pairs_capped`` stage), exact integer dots, one
     O(pairs×4) correlation reduce.  Like the parent eval, the
     documents load is NOT parallelize=True — the ingest repartition
     would move every text byte ahead of a semi-join that keeps 0.4%

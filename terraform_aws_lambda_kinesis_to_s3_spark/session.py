@@ -40,7 +40,7 @@ def get_spark(
         # r11 optimization round: let AQE size CACHED plan output
         # partitions by bytes instead of freezing the pre-AQE
         # partition count at materialization.  Every persisted stage
-        # (SHARED_STAGE_CACHES + the in-query persists) otherwise pins
+        # (@shared_stage helpers + in-query persists) otherwise pins
         # its cache at spark.sql.shuffle.partitions and every consumer
         # stage pays that task count regardless of data size — the
         # triangle family read 568 tasks/query with the flag off vs

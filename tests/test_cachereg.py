@@ -1,10 +1,15 @@
 """Query-local cache inventory (cachereg, ADVICE r11 items 2-3):
 tracked persists are released on demand, and explain-only consumers
-can skip the eager materialization without changing plan shape."""
+can skip the eager materialization without changing plan shape.
+Session-shared stages (``@shared_stage``) hit per (session, sf,
+table loader)."""
 
 from __future__ import annotations
 
+import pytest
+
 from terraform_aws_lambda_kinesis_to_s3_spark import cachereg as CR
+from terraform_aws_lambda_kinesis_to_s3_spark.plans import queries as Q
 
 SF = "/root/testdata/sf0.001"
 
@@ -71,4 +76,47 @@ def test_plan_only_build_keeps_persist_boundaries(spark):
         assert "InMemoryTableScan" in buf.getvalue()
     finally:
         CR.EAGER_MATERIALIZE = True
+        CR.release_all()
+
+
+def test_shared_stage_serves_each_fixture_its_own_rows(spark):
+    """Two documents fixtures under the SAME sf string: the second must
+    not read the first one's cached term census.  The stage key carries
+    the table loader, so each fixture gets its own entry."""
+    def docs(sources):
+        return spark.createDataFrame(
+            [(i, f"w{i} w{i + 1} w0", "en", s, 8) for i, s in enumerate(sources)],
+            "doc_id long, text string, lang string, source string, n_chars long",
+        )
+
+    got = []
+    orig = Q._t
+    for d in (docs(["s0", "s1", "s0"]), docs(["zz", "zz"])):
+        Q._t = lambda spark, sf, name, d=d, **kw: d
+        try:
+            rows = Q.q_corpus_kl_divergence(spark, "x").collect()
+            got.append({r.source for r in rows})
+        finally:
+            Q._t = orig
+    assert got == [{"s0", "s1"}, {"zz"}]
+    Q.clear_shared_stages()
+
+
+@pytest.mark.parametrize("helper", sorted(Q.SHARED_STAGE_CACHES))
+def test_shared_stage_hits_per_loader(spark, helper):
+    """Every registered stage: a second call under the same loader is a
+    cache hit (the same object), while a different loader object —
+    even one delegating to the same tables — builds its own entry."""
+    stage = getattr(Q, helper)
+    first = stage(spark, SF)
+    assert stage(spark, SF) is first
+    orig = Q._t
+    Q._t = lambda spark, sf, name, **kw: orig(spark, sf, name, **kw)
+    try:
+        other = stage(spark, SF)
+        assert other is not first
+        assert stage(spark, SF) is other
+    finally:
+        Q._t = orig
+        Q.clear_shared_stages()
         CR.release_all()

@@ -271,17 +271,19 @@ def test_bench_calibration_admission_gate():
     from bench import CALIB_ADMIT_MAX, calibration_admitted
 
     assert CALIB_ADMIT_MAX == {"cpu_calib_sec": 0.05, "jvm_calib_sec": 0.15}
+    # the r9 readings come from a 32-core sweep: judge them at 32 cores
+    # whatever SPARK_GRAFT_CPUS the suite runs under
     ok, reasons = calibration_admitted(
-        {"cpu_calib_sec": 0.031, "jvm_calib_sec": 0.138}
+        {"cpu_calib_sec": 0.031, "jvm_calib_sec": 0.138}, cpus=32
     )
     assert ok and reasons == []
     # the r9 contaminated sweep's probe reading must be refused
     ok, reasons = calibration_admitted(
-        {"cpu_calib_sec": 0.031, "jvm_calib_sec": 0.306}
+        {"cpu_calib_sec": 0.031, "jvm_calib_sec": 0.306}, cpus=32
     )
     assert not ok and any("jvm_calib_sec" in r for r in reasons)
     # a sweep without its probe block cannot prove its window
-    ok, reasons = calibration_admitted({"jvm_calib_sec": 0.1})
+    ok, reasons = calibration_admitted({"jvm_calib_sec": 0.1}, cpus=32)
     assert not ok and any("cpu_calib_sec" in r for r in reasons)
     # low-core sessions: the jvm probe is a FIXED 32-task reduce, so
     # at 8 cores it runs 4 waves and the ceiling scales with the wave
@@ -305,6 +307,12 @@ def test_bench_calibration_admission_gate():
     # reading exceeds the scaled ceiling
     ok, _ = calibration_admitted(
         {"cpu_calib_sec": 0.031, "jvm_calib_sec": 0.65}, cpus=8
+    )
+    assert not ok
+    # 4 cores: 8 waves, so the jvm ceiling is 0.15 x 8 = 1.2
+    assert effective_calib_limits(4)["jvm_calib_sec"] == 1.2
+    ok, _ = calibration_admitted(
+        {"cpu_calib_sec": 0.031, "jvm_calib_sec": 1.25}, cpus=4
     )
     assert not ok
 
@@ -393,27 +401,20 @@ def test_stale_green_check_live_repo_is_clean():
 
 
 def test_shared_stage_cache_registry_is_total():
-    """SHARED_STAGE_CACHES is THE cache inventory: every module-level
-    *_CACHE dict in plans/queries.py must be registered, so plan_cost's
-    rollback and bench_diff's builder inclusion can never silently miss
-    a new shared stage."""
-    import re
-
+    """SHARED_STAGE_CACHES is THE cache inventory, filled by
+    @shared_stage: plans/queries.py keeps no module-level *_CACHE dict
+    of its own that plan_cost's rollback or bench_diff's builder
+    inclusion could silently miss, and every registered helper is a
+    real module-level callable."""
     import terraform_aws_lambda_kinesis_to_s3_spark.plans.queries as Q
 
-    src = open(Q.__file__).read()
-    declared = set(re.findall(r"^(_[A-Z0-9_]+_CACHE): dict", src, re.M))
-    registered = {
-        name
-        for name, obj in vars(Q).items()
-        if name.endswith("_CACHE") and isinstance(obj, dict)
-        and any(obj is c for c in Q.SHARED_STAGE_CACHES.values())
-    }
-    assert declared == registered, (
-        f"unregistered caches: {declared - registered}; "
-        f"stale registry entries: {registered - declared}"
-    )
-    # and every registry key is a real module-level callable
+    hand_rolled = [
+        name for name, obj in vars(Q).items()
+        if name.startswith("_") and name.endswith("_CACHE")
+        and isinstance(obj, dict)
+    ]
+    assert hand_rolled == []
+    assert len(Q.SHARED_STAGE_CACHES) == 12
     for helper in Q.SHARED_STAGE_CACHES:
         assert callable(getattr(Q, helper))
 

@@ -1028,11 +1028,8 @@ def test_power_iteration_lazy_and_empty_gram(spark):
 
 def _with_docs(spark, Q, rows, fn, *args, **kw):
     """Run a registry query fn against an in-memory documents fixture.
-    Clears the per-session shared-stage caches first — a census cached
-    from a previous fixture would otherwise leak into this one."""
-    Q._TERM_CENSUS_CACHE.clear()
-    Q._NGRAM_PAIRS_CACHE.clear()
-    Q._SIMHASH_SIG_CACHE.clear()
+    The fixture loader keys its own shared-stage entries; they are
+    unpersisted and dropped afterwards."""
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
@@ -1042,9 +1039,7 @@ def _with_docs(spark, Q, rows, fn, *args, **kw):
         return fn(spark, "ignored", *args, **kw).collect()
     finally:
         Q._t = orig
-        Q._TERM_CENSUS_CACHE.clear()
-        Q._NGRAM_PAIRS_CACHE.clear()
-        Q._SIMHASH_SIG_CACHE.clear()
+        Q.clear_shared_stages()
 
 
 def test_top_ngram_frac_semantics(spark):
@@ -3773,30 +3768,15 @@ def _with_tables(tables, fn):
 
     orig = Q._t
 
-    # sf keys repeat across fixtures ("x"): every session-shared stage
-    # cache must be cleared around a mocked-table run, and the single
-    # inventory (SHARED_STAGE_CACHES) is what makes that total — a
-    # hand-maintained list here silently missed new caches before.
-    # Unpersist the cached DataFrames too: clear() alone would orphan
-    # their InMemoryRelations in the suite's shared session, slowly
-    # eating executor storage memory across 1200+ tests.
-    def _drop_caches():
-        for c in Q.SHARED_STAGE_CACHES.values():
-            for v in c.values():
-                for df in (v if isinstance(v, tuple) else (v,)):
-                    try:
-                        df.unpersist()
-                    except Exception:
-                        pass
-            c.clear()
-
-    _drop_caches()
+    # the fixture loader keys its own shared-stage entries; unpersist
+    # them afterwards so their InMemoryRelations do not pile up in the
+    # suite's shared session across 1200+ tests
     try:
         Q._t = lambda spark, sf, name, **k: tables[name]
         return fn(Q)
     finally:
         Q._t = orig
-        _drop_caches()
+        Q.clear_shared_stages()
 
 
 def test_hll_error_eval_matches_python_reimpl(spark):
@@ -4030,7 +4010,7 @@ def test_curriculum_schedule_phases_and_fracs(spark):
 
 
 def test_ngram_pairs_cache_threshold_equivalence(spark):
-    """The `_NGRAM_PAIRS_CACHE` contract: filtering the threshold-0
+    """The `_ngram_pairs_capped` contract: filtering the threshold-0
     pair table by ``jaccard >= t`` is BIT-IDENTICAL to calling
     ``ngram_jaccard_pairs(threshold=t)`` directly, because jaccard is
     6-dp-rounded before any threshold compare.  Pinned on a fixture
@@ -4065,7 +4045,7 @@ def test_ngram_pairs_cache_threshold_equivalence(spark):
 
 
 def test_ngram_pair_stats_equivalence(spark):
-    """The `_NGRAM_PAIRS_CACHE` stats-table contract
+    """The `_ngram_pairs_capped` stats-table contract
     (`ngram_pair_stats`): deriving EITHER set-overlap metric from the
     full per-pair statistics is bit-identical to the dedicated
     operator — (a) select(jaccard) + threshold filter ==
@@ -4136,7 +4116,7 @@ def test_ngram_pair_stats_equivalence(spark):
 
 
 def test_simhash_sig_cache_equivalence(spark):
-    """The `_SIMHASH_SIG_CACHE` contract: (a) banding over a
+    """The `_simhash_signatures` contract: (a) banding over a
     precomputed signature table (`simhash_hamming_pairs_on_sig`) is
     BIT-IDENTICAL to the inline `simhash_hamming_pairs`, (b) the
     registry queries riding the cache return exactly the fresh
@@ -4184,7 +4164,7 @@ def test_simhash_sig_cache_equivalence(spark):
 
 
 def test_topk_stage_caches_hit_and_feed_eval(spark):
-    """The `_COSINE_TOPK10_CACHE` / `_IVF_TOPK10_CACHE` contract:
+    """The `_cosine_topk10` / `_ivf_topk10` contract:
     the registry queries ARE the stages (their collected results equal
     fresh operator runs), the second consumer in a session gets the
     SAME persisted object, and ivf_eval_recall's counts derive from
@@ -4243,7 +4223,7 @@ def test_topk_stage_caches_hit_and_feed_eval(spark):
 
 
 def test_envelope_cache_equivalence(spark):
-    """The `_ENVELOPE_CACHE` contract: (a) routing over the shared
+    """The `_routed_envelope` contract: (a) routing over the shared
     parse->validate envelope (`route_records_on_envelope`) is
     row-identical to the unshared `route_records` path for every
     config the three riding queries ship (default, whitelist,
@@ -4883,14 +4863,10 @@ def test_cross_split_contamination_twin_fixture(spark):
     d = spark.createDataFrame(docs, "doc_id long, text string")
 
     def run(Q):
-        Q._LSH_PAIRS_CACHE.clear()
-        try:
-            return {
-                r.split: r
-                for r in Q.q_cross_split_contamination(spark, "twin-fx").collect()
-            }
-        finally:
-            Q._LSH_PAIRS_CACHE.clear()
+        return {
+            r.split: r
+            for r in Q.q_cross_split_contamination(spark, "twin-fx").collect()
+        }
 
     got = _with_tables({"documents": d}, run)
     assert set(got) == {"val", "test"}
@@ -4953,14 +4929,10 @@ def test_dedup_source_flow_cells(spark):
     d = spark.createDataFrame(docs, "doc_id long, text string, source string")
 
     def run(Q):
-        Q._LSH_PAIRS_CACHE.clear()
-        try:
-            return {
-                (r.src_lo, r.src_hi): r
-                for r in Q.q_dedup_source_flow(spark, "flow-fx").collect()
-            }
-        finally:
-            Q._LSH_PAIRS_CACHE.clear()
+        return {
+            (r.src_lo, r.src_hi): r
+            for r in Q.q_dedup_source_flow(spark, "flow-fx").collect()
+        }
 
     got = _with_tables({"documents": d}, run)
     assert set(got) == {("srcA", "srcB"), ("srcA", "srcC"), ("srcB", "srcB")}

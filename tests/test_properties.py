@@ -75,7 +75,7 @@ def test_route_totality(spark, batch):
 )
 @given(batch=payloads)
 def test_route_on_envelope_equals_route_records_property(spark, batch):
-    """The _ENVELOPE_CACHE seam's contract over ARBITRARY payloads
+    """The _routed_envelope seam's contract over ARBITRARY payloads
     (non-JSON garbage, missing/mistyped envelope keys — everything the
     generator produces): for every post-stage config the riding
     queries ship (default, whitelist, TZ-shifted), routing over a

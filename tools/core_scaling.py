@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 
@@ -139,10 +140,10 @@ def main() -> None:
             "sec_8c": lo,
             "ratio_8c_over_32c": round(lo / hi, 2) if hi else None,
         }
-    ratios = sorted(
+    ratios = [
         v["ratio_8c_over_32c"] for v in queries.values()
         if v["ratio_8c_over_32c"] is not None
-    )
+    ]
     out = {
         "metric": "core_scaling_sf1",
         "sf_dir": sf_dir,
@@ -152,7 +153,7 @@ def main() -> None:
             sum(v["sec_32c"] for v in queries.values()), 3),
         "total_sec_8c": round(
             sum(v["sec_8c"] for v in queries.values()), 3),
-        "median_ratio": ratios[len(ratios) // 2] if ratios else None,
+        "median_ratio": statistics.median(ratios) if ratios else None,
         "harness": ("bench.py --only; master local[N] follows "
                     "SPARK_GRAFT_CPUS; shuffle partitions HELD at "
                     f"{SF1_SHUFFLE_PARTITIONS} in BOTH legs so cores "

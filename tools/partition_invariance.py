@@ -51,7 +51,7 @@ def frame_hash(pdf) -> str:
 def main() -> int:
     from terraform_aws_lambda_kinesis_to_s3_spark.plans.queries import (
         REGISTRY,
-        SHARED_STAGE_CACHES,
+        clear_shared_stages,
     )
     from terraform_aws_lambda_kinesis_to_s3_spark.session import get_spark
 
@@ -72,14 +72,7 @@ def main() -> int:
             spark.conf.set(k, v)
         # shared persisted stages were built under SOME layout; clear
         # them between configs so each pass pays (and tests) its own
-        for cache in SHARED_STAGE_CACHES.values():
-            for v in cache.values():
-                for df in (v if isinstance(v, tuple) else (v,)):
-                    try:
-                        df.unpersist()
-                    except Exception:
-                        pass
-            cache.clear()
+        clear_shared_stages()
         out = {}
         for name in names:
             try:

@@ -119,11 +119,9 @@ def main() -> None:
                 parallelize = False
         return orig_t(spark, sf, name, parallelize=parallelize, **kw)
 
-    # this wrapper still delegates to the canonical on-disk loader, so
-    # session-shared stage caches remain valid under it (the fixture
-    # guard in plans.queries would otherwise bypass them and distort
-    # the shared-stage attribution)
-    instrumented_t.__wraps_canonical__ = True
+    # shared stages key on the loader too: installed once for the whole
+    # sweep, this wrapper keys one entry per stage, so sibling entries
+    # still hit the stage the first consumer built
     Q._t = instrumented_t
 
     def run_once(fn):
