@@ -1,4 +1,4 @@
-"""Record decoding: base64, gzip, CloudWatch Logs envelope, KPL deagg.
+"""Record decoding: base64, KPL deagg, gzip, CloudWatch Logs envelope.
 
 Reference behavior (``kinesis.parse_records`` call-site at
 ``/root/reference/lambda/main.py:47``; accepted formats
@@ -13,19 +13,19 @@ at ``lambda/requirements.txt:4``):
    ``logEvents[].message`` becomes an independent record).
 
 Spark mapping: base64 and the CloudWatch unwrap are pure JVM column
-expressions (``unbase64``, ``from_json`` + ``transform`` + one
-``explode``); gzip and KPL have no Spark builtin, so they are
-Arrow-batched ``pandas_udf`` kernels. The KPL wire format (magic
-``0xF3899AC2`` + protobuf ``AggregatedRecord`` + MD5 trailer) is parsed
-with a ~40-line vendored varint reader so executors need no AWS
+expressions (``try_to_binary``, ``from_json`` + ``transform`` + one
+``explode``). KPL and gzip have no Spark builtin, so steps 2-3 plus
+UTF-8 run in one Arrow-batched ``pandas_udf``: each blob crosses the
+Python boundary once, as :func:`decode_blob`. The KPL wire format
+(magic ``0xF3899AC2`` + protobuf ``AggregatedRecord`` + MD5 trailer) is
+parsed with a ~40-line vendored varint reader so executors need no AWS
 dependency (SURVEY.md §7 hard-part e).
 """
 
 from __future__ import annotations
 
 import gzip as _gzip
-import io
-import struct
+import zlib
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -158,34 +158,31 @@ def kpl_aggregate_bytes(payloads: list[bytes], partition_key: str = "pk") -> byt
 # ---------------------------------------------------------------------------
 
 
-@pandas_udf(T.ArrayType(T.BinaryType()))
-def kpl_deaggregate(blobs: pd.Series) -> pd.Series:
-    return blobs.map(kpl_deaggregate_bytes)
+def decode_blob(blob: bytes | None) -> list[str]:
+    """One Kinesis ``Data`` blob -> its payload texts: KPL deaggregate,
+    then gunzip and UTF-8 decode each unit.
 
-
-@pandas_udf(T.StringType())
-def gunzip_to_text(blobs: pd.Series) -> pd.Series:
-    """gunzip + UTF-8 decode in one Arrow pass.
-
-    Invalid UTF-8 (e.g. a corrupt gzip blob passed through) decodes
-    with replacement characters instead of failing the job — such
-    records fall out as non-JSON and route to the unknown prefix, the
-    dead-letter semantics the reference documents for undecodable
-    input (README.md:9).
+    Never raises. A corrupt gzip unit (bad header, truncated or
+    corrupt deflate body) and invalid UTF-8 decode permissively with
+    replacement characters; such records fall out as non-JSON and
+    route to the unknown prefix, the dead-letter semantics the
+    reference documents for undecodable input (README.md:9).
     """
-
-    def one(b):
-        if b is None:
-            return None
-        b = bytes(b)
-        if b.startswith(GZIP_MAGIC):
+    out = []
+    for unit in kpl_deaggregate_bytes(blob):
+        if unit.startswith(GZIP_MAGIC):
             try:
-                b = _gzip.GzipFile(fileobj=io.BytesIO(b)).read()
-            except (OSError, EOFError, struct.error):
-                pass  # corrupt gzip -> decode raw bytes permissively
-        return b.decode("utf-8", errors="replace")
+                unit = _gzip.decompress(unit)
+            except (OSError, EOFError, zlib.error):
+                pass
+        out.append(unit.decode("utf-8", errors="replace"))
+    return out
 
-    return blobs.map(one)
+
+@pandas_udf(T.ArrayType(T.StringType()))
+def kpl_deaggregate(blobs: pd.Series) -> pd.Series:
+    """:func:`decode_blob` per blob; perfbench counts its rows by this name."""
+    return blobs.map(decode_blob)
 
 
 _CW_SCHEMA = T.StructType(
@@ -240,11 +237,12 @@ def decode_records(df: DataFrame, data_col: str = "data", base64_encoded: bool =
     column, other columns preserved.
 
     Order (matches the reference pipeline semantics): base64 -> KPL
-    deaggregate -> gunzip -> UTF-8 -> CloudWatch unwrap.
+    deaggregate -> gunzip -> UTF-8 -> CloudWatch unwrap. A string that
+    is not valid base64 is kept as its own UTF-8 bytes, so it routes to
+    the unknown prefix instead of failing the batch.
     """
-    raw = F.unbase64(F.col(data_col)) if base64_encoded else F.col(data_col)
-    df = df.withColumn("__units", kpl_deaggregate(raw))
-    df = df.withColumn("__unit", F.explode("__units")).drop("__units")
-    df = df.withColumn("__text", gunzip_to_text(F.col("__unit"))).drop("__unit")
-    df = df.withColumn("payload", F.explode(cloudwatch_unwrap(F.col("__text")))).drop("__text")
-    return df
+    raw = F.col(data_col)
+    if base64_encoded:
+        raw = F.coalesce(F.try_to_binary(raw, F.lit("base64")), raw.cast("binary"))
+    df = df.withColumn("__text", F.explode(kpl_deaggregate(raw)))
+    return df.withColumn("payload", F.explode(cloudwatch_unwrap(F.col("__text")))).drop("__text")

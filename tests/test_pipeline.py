@@ -9,6 +9,7 @@ from __future__ import annotations
 import base64
 import gzip
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -274,6 +275,57 @@ def test_corrupt_gzip_routes_unknown(spark):
     corrupt = b"\x1f\x8b" + b"this is not a valid gzip stream"
     rows = run(spark, [corrupt])
     assert len(rows) == 1 and rows[0].route == "unknown"
+
+
+@pytest.mark.parametrize("kpl", [False, True], ids=["bare", "kpl-unit"])
+def test_corrupt_gzip_body_routes_unknown(spark, kpl):
+    """A valid gzip header over a corrupt deflate body raises
+    ``zlib.error``, which is not an ``OSError``: it must dead-letter
+    next to a valid record, not abort the job."""
+    body = bytearray(gzip.compress(rec(log_id="gz-bad")))
+    for i in range(12, 30):
+        body[i] ^= 0xFF
+    bad = kpl_aggregate_bytes([bytes(body)]) if kpl else bytes(body)
+    rows = run(spark, [bad, rec()])
+    assert sorted(r.route for r in rows) == ["purchase", "unknown"]
+    assert by_id(rows)["e-000042"].route == "purchase"
+
+
+def test_malformed_base64_routes_unknown(tmp_path, spark):
+    """A Kinesis record whose ``data`` is not base64 is dead-lettered
+    with its raw text as payload; the good record in the same event
+    still routes and the batch completes. A NULL ``data`` yields no
+    row."""
+    from terraform_aws_lambda_kinesis_to_s3_spark.job import run_batch
+    from terraform_aws_lambda_kinesis_to_s3_spark.sinks import read_routed
+
+    def kinesis(data):
+        return {"kinesis": {"data": data, "partitionKey": "pk", "sequenceNumber": "1"}}
+
+    event = {
+        "Records": [
+            kinesis(base64.b64encode(rec()).decode()),
+            kinesis("!!not base64@@"),
+            kinesis(None),
+        ]
+    }
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "events.json").write_text(json.dumps(event) + "\n")
+    out = str(tmp_path / "out")
+    run_batch(spark, str(src), out, CFG, input_format="kinesis-event")
+    back = sorted((r.log_type, r.payload) for r in read_routed(spark, out).collect())
+    assert back == [("purchase", rec().decode()), ("unknown", "!!not base64@@")]
+
+
+def test_decode_records_crosses_python_once(spark):
+    """KPL deaggregation, gunzip and UTF-8 run in one Arrow UDF: the
+    executed plan holds exactly one ArrowEvalPython node."""
+    payloads = [rec(), gzip.compress(rec()), kpl_aggregate_bytes([rec(), gzip.compress(rec())])]
+    df = decode_records(payloads_to_df(spark, payloads))
+    assert len(df.collect()) == 4
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1, plan
 
 
 def test_payload_schema_profile_detects_drift(spark):

@@ -3,13 +3,22 @@ idempotence over hypothesis-generated payload batches."""
 
 from __future__ import annotations
 
+import gzip
+import io
 import json
+import zlib
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from terraform_aws_lambda_kinesis_to_s3_spark.config import PipelineConfig
+from terraform_aws_lambda_kinesis_to_s3_spark.functions.decoders import (
+    GZIP_MAGIC,
+    decode_blob,
+    kpl_aggregate_bytes,
+    kpl_deaggregate_bytes,
+)
 from terraform_aws_lambda_kinesis_to_s3_spark.operators.envelope import route_records
 
 CFG = PipelineConfig(unknown_date="2024-06-01")
@@ -203,6 +212,69 @@ def test_special_char_log_type_roundtrips_sink(spark, tmp_path):
     write_routed(route_records(df, CFG), out, mode="overwrite")
     back = read_routed(spark, out).collect()
     assert back[0].log_type == "a/b c" and back[0].payload == p
+
+
+def _two_udf_chain(blob):
+    """The decode this kernel replaced: ``kpl_deaggregate_bytes``, then
+    the old ``gunzip_to_text`` body once per unit. That body let
+    ``zlib.error`` (corrupt deflate data) escape and abort the job; it
+    is the one allowed difference, and there the unit must decode
+    permissively like any other corrupt gzip."""
+    out = []
+    for b in kpl_deaggregate_bytes(blob):
+        if b.startswith(GZIP_MAGIC):
+            try:
+                b = gzip.GzipFile(fileobj=io.BytesIO(b)).read()
+            except (OSError, EOFError):
+                pass
+            except zlib.error:
+                pass  # the old chain raised here
+        out.append(b.decode("utf-8", errors="replace"))
+    return out
+
+
+@st.composite
+def _damaged(draw, blobs):
+    """A blob kept whole, truncated, or with 1-8 bits flipped."""
+    blob = draw(blobs)
+    how = draw(st.sampled_from(["whole", "truncate", "flip"]))
+    if how == "truncate":
+        return blob[: draw(st.integers(0, len(blob)))]
+    if how == "flip" and blob:
+        b = bytearray(blob)
+        for _ in range(draw(st.integers(1, 8))):
+            b[draw(st.integers(0, len(b) - 1))] ^= 1 << draw(st.integers(0, 7))
+        return bytes(b)
+    return blob
+
+
+_json_bytes = st.dictionaries(st.text(max_size=6), field_val, max_size=4).map(
+    lambda d: json.dumps(d).encode()
+)
+_units = _damaged(
+    st.one_of(
+        _json_bytes,
+        _json_bytes.map(lambda b: gzip.compress(b, mtime=0)),
+        st.binary(max_size=64),
+    )
+)
+_blobs = st.one_of(
+    st.none(),
+    _units,
+    _damaged(st.lists(_units, min_size=1, max_size=5).map(kpl_aggregate_bytes)),
+)
+
+
+@settings(max_examples=500, deadline=None)
+@given(blob=_blobs)
+def test_decode_blob_matches_two_udf_chain(blob):
+    """Differential: the one-crossing kernel returns exactly what the
+    old KPL-deagg then gunzip+UTF-8 chain returned, for plain JSON,
+    gzip, KPL aggregates of mixed units, truncations, bit-flips and
+    None."""
+    out = decode_blob(blob)
+    assert out == _two_udf_chain(blob)
+    assert all(isinstance(t, str) for t in out)
 
 
 def test_kpl_truncated_blob_passthrough():

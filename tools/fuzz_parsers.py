@@ -13,6 +13,8 @@ targeted mutations).  Invariants checked per input:
   non-negative ints (malformed tables classify to (None, None))
 - kpl_deaggregate_bytes returns a list of bytes; a non-KPL or
   corrupted blob comes back as [blob] verbatim
+- decode_blob (KPL deagg + gunzip + UTF-8, the record decode kernel)
+  returns a list of str; corrupt gzip decodes permissively
 
 Run:  python tools/fuzz_parsers.py [seconds] [seed]
       (defaults: 60 s, seed 0)
@@ -21,6 +23,7 @@ Exit: 1 on any contract violation, with the reproducing seed printed.
 
 from __future__ import annotations
 
+import gzip
 import os
 import random
 import sys
@@ -51,6 +54,7 @@ def corpus(rng: random.Random) -> list[bytes]:
         MM.synth_gif(64, 48, n_filler=9),
         MM.synth_jpeg(64, 48, n_filler=9),
         kpl_aggregate_bytes([b"alpha" * 10, b"beta" * 10]),
+        gzip.compress(b'{"log_type": "purchase", "log_id": "e-1"}\n' * 8, mtime=0),
     ]
 
 
@@ -89,6 +93,7 @@ def main() -> int:
     rng = random.Random(seed)
 
     from terraform_aws_lambda_kinesis_to_s3_spark.functions.decoders import (
+        decode_blob,
         kpl_deaggregate_bytes,
     )
     from terraform_aws_lambda_kinesis_to_s3_spark.operators.multimodal import (
@@ -127,6 +132,8 @@ def main() -> int:
             assert isinstance(k, list) and all(
                 isinstance(x, (bytes, bytearray)) for x in k
             )
+            d = decode_blob(blob)
+            assert isinstance(d, list) and all(isinstance(x, str) for x in d)
         except AssertionError:
             raise
         except Exception as e:  # noqa: BLE001
