@@ -1711,8 +1711,8 @@ def q_minhash_lsh_pairs(spark, sf):
 #: post-hoc ``jaccard >= t`` filter is bit-identical to passing
 #: ``threshold=t``.  As of round 8 ALL SEVEN consumers of this pair
 #: space ride the cache (dedup_ngram_jaccard_capped,
-#: dedup_threshold_sensitivity and dedup_containment joined via
-#: DRIVER_PRIORITY re-queues; they had kept uncached plans only
+#: dedup_threshold_sensitivity and dedup_containment joined once
+#: their plans were re-verified; they had kept uncached plans only
 #: because their verification predated the cache).  The persisted
 #: stage carries the FULL pair statistics (n_common, n_a, n_b,
 #: jaccard — operators.dedup.ngram_pair_stats), so the containment
@@ -19362,9 +19362,7 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "bootstrap_ci_mean": (q_bootstrap_ci_mean, SQL_BOOTSTRAP_CI),
     "events_wau_stickiness": (q_events_wau_stickiness, SQL_WAU_STICKINESS),
     "incremental_dedup_check": (q_incremental_dedup_check, SQL_INCREMENTAL_DEDUP),
-    # round 3: skew-proof graph + later additions (appended at the END
-    # of the registry so they don't displace the older never-verified
-    # queries from the driver's first-50 rotation window)
+    # round 3: skew-proof graph + later additions
     "graph_triangle_degree_ordered": (
         q_triangle_degree_ordered,
         SQL_TRIANGLE_DEGREE_ORDERED,
@@ -19582,704 +19580,9 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
 }
 
 
-#: Queries with a green driver CORRECTNESS row from a past round
-#: (union of all CORRECTNESS_r*.json, latest round wins).  The driver
-#: only hashes the first 50 entries of ``queries()`` each round, so
-#: ``_rotated_names`` floats never-driver-verified queries to the
-#: front of the dict (pipeline_route leads its section — ``entry()``
-#: uses it by name — but never displaces a never-verified name from
-#: the window).  Update via tools/rotate_driver_window.py each round
-#: from the new CORRECTNESS_r{N}.json.
-DRIVER_VERIFIED: frozenset[str] = frozenset(
-    {
-        "aa_cap_eval",
-        "ab_fdr_bh",
-        "ab_sprt_daily",
-        "ab_test_welch",
-        "array_functions_suite",
-        "bigram_cond_prob",
-        "bigram_interp_logprob",
-        "bitwise_functions_suite",
-        "bloom_fpr_eval",
-        "bloom_semi_events",
-        "bm25_topk_docs",
-        "bootstrap_ci_mean",
-        "bpe_encode_tokens",
-        "bpe_merge_step",
-        "brand_number_extract",
-        "brier_decomposition",
-        "cdc_merge_upsert",
-        "chao1_vocab_richness",
-        "char_entropy",
-        "chunk_dedup",
-        "cluster_best_quality",
-        "cms_error_eval",
-        "cms_heavy_hitters",
-        "column_profile_orders",
-        "conditional_functions_suite",
-        "conformal_coverage",
-        "contamination_check",
-        "context_length_plan",
-        "contribution_cap_eval",
-        "corpus_curation",
-        "corpus_datacard",
-        "corpus_kl_divergence",
-        "corpus_psi_drift",
-        "corpus_snapshot_diff",
-        "cross_source_prefix_overlap",
-        "cross_split_contamination",
-        "cube_status_priority",
-        "curriculum_schedule",
-        "customer_quartiles",
-        "customer_revenue_gini",
-        "customer_rfm_segments",
-        "customers_above_nation_avg",
-        "customers_with_orders",
-        "customers_without_orders",
-        "cv_fold_balance",
-        "dataset_split",
-        "date_functions_suite",
-        "dedup_clusters",
-        "dedup_clusters_distributed",
-        "dedup_containment",
-        "dedup_dup_groups",
-        "dedup_exact_log_id",
-        "dedup_method_agreement",
-        "dedup_minhash_lsh",
-        "dedup_ngram_jaccard",
-        "dedup_ngram_jaccard_capped",
-        "dedup_simhash",
-        "dedup_simhash_hamming",
-        "dedup_source_flow",
-        "dedup_span_removal",
-        "dedup_survivors",
-        "dedup_threshold_sensitivity",
-        "deterministic_sample",
-        "distinct_aggs",
-        "distinctive_terms_logodds",
-        "doc_chunking",
-        "doc_hash_embedding",
-        "doc_rarity_score",
-        "domain_cap_sample",
-        "doremi_mixture_step",
-        "dp_noisy_counts",
-        "dsir_importance",
-        "dup_ngram_coverage",
-        "embedding_centroid_assign",
-        "embedding_cosine_topk",
-        "embedding_dim_stats",
-        "embedding_gram_matrix",
-        "embedding_ivf_topk",
-        "embedding_lsh_buckets",
-        "embedding_lsh_near_dup",
-        "embedding_near_dup",
-        "embedding_norms",
-        "embedding_outliers",
-        "embedding_power_iteration",
-        "embedding_pq_codes",
-        "embedding_quantize",
-        "embedding_snapshot_drift",
-        "epoch_repetition_plan",
-        "events_anomaly_mad",
-        "events_asof_join",
-        "events_asof_tolerance",
-        "events_brownout_windows",
-        "events_changepoint_cusum",
-        "events_chi2_type_dow",
-        "events_cohort_retention",
-        "events_daily_type_drift",
-        "events_downsample_1h",
-        "events_ewma",
-        "events_funnel",
-        "events_gap_fill",
-        "events_hourly_autocorr",
-        "events_ks_test",
-        "events_load_heatmap",
-        "events_mann_whitney",
-        "events_moving_window",
-        "events_ohlc_hourly",
-        "events_peak_concurrency",
-        "events_permutation_test",
-        "events_quantile_sketch",
-        "events_range_join",
-        "events_seasonality",
-        "events_session_window",
-        "events_sessionize",
-        "events_sliding_window",
-        "events_stats_profile",
-        "events_theil_sen",
-        "events_throttle_first",
-        "events_tumbling_window",
-        "events_type_burstiness",
-        "events_user_entropy",
-        "events_value_benford",
-        "events_value_histogram",
-        "events_wau_stickiness",
-        "events_winsorize",
-        "events_zorder_stats",
-        "events_zscore_outliers",
-        "feature_matrix_at_label",
-        "filter_funnel",
-        "fleiss_kappa_raters",
-        "frequent_buyers",
-        "fuzzy_block_eval",
-        "global_shuffle_shards",
-        "gopher_quality_flags",
-        "gram_frequency_spectrum",
-        "graph_adamic_adar",
-        "graph_assortativity",
-        "graph_pagerank_parts",
-        "graph_triangle_degree_ordered",
-        "graph_triangle_parts",
-        "graph_triangle_parts_capped",
-        "group_split_events",
-        "grouping_sets_status_priority",
-        "hard_negatives",
-        "hash_dim_fidelity_sweep",
-        "hash_embedding_fidelity_eval",
-        "heaps_law_fit",
-        "hh_merge_bounds",
-        "hll_distinct_users",
-        "hll_error_eval",
-        "hll_merge_eval",
-        "incremental_agg_merge",
-        "incremental_dedup_check",
-        "isotonic_calibration",
-        "ivf_eval_recall",
-        "join_explosion_audit",
-        "join_key_skew",
-        "join_types_suite",
-        "json_extract_props",
-        "keyword_tag_counts",
-        "kmeans_lloyd_step",
-        "kmv_distinct_users",
-        "knn_confusion_matrix",
-        "knn_label_eval",
-        "label_centroid_similarity",
-        "label_noise_estimate",
-        "label_source_profile",
-        "langid_eval_prf",
-        "logreg_auc",
-        "logreg_calibration",
-        "logreg_hard_examples",
-        "lsh_band_tuning",
-        "lsh_eval_pr",
-        "map_functions_suite",
-        "market_basket_pairs",
-        "math_functions_suite",
-        "minhash_eval_recall",
-        "mixture_sample",
-        "mixture_token_budget_alloc",
-        "mmr_rerank",
-        "mrl_truncation_eval",
-        "multimodal_audio_meta",
-        "multimodal_audio_pcm_stats",
-        "multimodal_features",
-        "multimodal_image_dims",
-        "multimodal_meta_audit",
-        "ndcg_retrieval_eval",
-        "ngram_novelty_curve",
-        "oov_vs_vocab_curve",
-        "open_lineitem_backlog",
-        "order_gap_days",
-        "ordered_string_agg",
-        "orders_priority_anova",
-        "orders_yoy_growth",
-        "outlier_method_agreement",
-        "padding_waste_stats",
-        "part_fuzzy_name_pairs",
-        "parts_abc_classification",
-        "percentiles_by_priority",
-        "perplexity_bucket_sample",
-        "pipeline_error_taxonomy",
-        "pipeline_route",
-        "pipeline_schema_profile",
-        "pipeline_tz_partition",
-        "pipeline_unknown_routing",
-        "pipeline_whitelist",
-        "pivot_priority_by_status",
-        "pmi_collocations",
-        "point_in_time_join",
-        "pq_adc_eval",
-        "privacy_k_anonymity",
-        "privacy_l_diversity",
-        "privacy_t_closeness",
-        "q10_returned_items",
-        "q11_important_stock",
-        "q12_priority_by_linestatus",
-        "q13_customer_distribution",
-        "q14_promo_revenue",
-        "q15_top_supplier",
-        "q16_supplier_relationship",
-        "q17_small_quantity_revenue",
-        "q18_large_orders",
-        "q19_discounted_revenue",
-        "q1_pricing_summary",
-        "q20_potential_promotion",
-        "q21_waiting_supplier",
-        "q22_sales_opportunity",
-        "q2_min_cost_supplier",
-        "q3_shipping_priority",
-        "q4_order_priority",
-        "q5_local_supplier_volume",
-        "q6_forecast_revenue",
-        "q7_volume_shipping",
-        "q8_market_share",
-        "q9_product_type_profit",
-        "quality_fasttext_score",
-        "quality_length_spearman",
-        "quality_logreg_train",
-        "quality_rater_kappa",
-        "quantile_bucket_sweep",
-        "quantile_merge_eval",
-        "recursive_hierarchy",
-        "regex_functions_suite",
-        "reservoir_sample_ares",
-        "revenue_theil_decomposition",
-        "rollup_region_nation",
-        "rrf_fusion",
-        "running_order_total",
-        "salted_group_counts",
-        "salted_user_join",
-        "salting_effectiveness_eval",
-        "sampled_quantile_error_eval",
-        "scd2_user_history",
-        "scrub_eval",
-        "semdedup_prune",
-        "sequence_packing",
-        "set_ops_nations",
-        "simhash_bit_balance",
-        "sink_compaction_plan",
-        "skipgram_negative_pairs",
-        "skyline_quality_length",
-        "source_token_simpson",
-        "source_vocab_jaccard",
-        "span_corruption_stats",
-        "stratified_sample",
-        "string_functions_suite",
-        "supplier_nation_hhi",
-        "temperature_mixture_weights",
-        "text_bpe_tokens",
-        "text_edit_distance",
-        "text_encoding_audit",
-        "text_fingerprint",
-        "text_langid",
-        "text_quality",
-        "text_repetition",
-        "text_scrub",
-        "text_sentences_udtf",
-        "text_token_stats",
-        "text_top_ngram_frac",
-        "text_vocab_topk",
-        "tfidf_top_terms",
-        "time_split_events",
-        "token_len_histogram",
-        "tokenizer_fertility_by_source",
-        "top_brands_by_revenue",
-        "top_customers_per_nation",
-        "topk_per_type_salted",
-        "topk_shard_merge_eval",
-        "type_user_overlap",
-        "unigram_logprob_score",
-        "unpivot_status_metrics",
-        "user_survival_km",
-        "user_transition_matrix",
-        "variant_props_stats",
-        "video_byte_plan_audit",
-        "video_frame_byte_index",
-        "video_frame_fetch_verify",
-        "video_frame_sample_plan",
-        "video_meta_probe",
-        "vocab_growth_curve",
-        "vocab_oov_rate",
-        "watermark_loss_audit",
-        "weighted_avg_udaf",
-        "weighted_doc_sample",
-        "window_functions_suite",
-        "winnow_fingerprints",
-        "winnow_overlap_pairs",
-        "word2vec_sampling_table",
-        "zipf_rank_slope",
-        "zonemap_pruning_eval",
-    }
-)
-
-
-#: Queries that must land inside the driver's first-50 window THIS round
-#: ahead of registry insertion order.  Round 4: ONLY the re-queues —
-#: queries whose implementation changed this round, so their old green
-#: driver row no longer covers the shipped code.  Everything else in the
-#: window is the never-driver-verified backlog, which ``_rotated_names``
-#: already orders by registry insertion (the round-3 verdict's named
-#: batches — diagnostics, corpus statistics, splits, fuzzy join, WAV
-#: audio — lead that backlog by construction).
-DRIVER_PRIORITY: tuple[str, ...] = (
-    # Round-12 (optimization round 2 of 2) re-queues.  The scale-safe
-    # ingest-rebalance gate (sources/tables.py load_table now fires the
-    # parallelize rebalance only when the OBSERVED scan parallelism is
-    # below the core count — r11 verdict item 2) sits in every entry
-    # closure, so ALL 309 registry hashes tripped.  Plan identity was
-    # proven locally (formatted plans byte-identical modulo plan_id
-    # counters) and the affected queries re-verified MATCH vs their
-    # DuckDB oracles at sf0.01 in the landing commit; the driver window
-    # re-verifies what fits.  Order: (1) the entries whose ingest call
-    # actually passes the gate flag, (2) the r11 batch-5/6 overflow that
-    # never reached a window, (3) the mechanical closure trips in
-    # registry order.
-    # NOTE: keep comments in this block free of double-quoted words —
-    # the rotate tool extracts every quoted token in the tuple source
-    # as a name (its parser strips comment lines first).
-    "ab_fdr_bh",
-    "bootstrap_ci_mean",
-    "bpe_encode_tokens",
-    "chao1_vocab_richness",
-    "cms_error_eval",
-    "cms_heavy_hitters",
-    "corpus_curation",
-    "dedup_ngram_jaccard",
-    "events_permutation_test",
-    "gram_frequency_spectrum",
-    "minhash_eval_recall",
-    "ndcg_retrieval_eval",
-    "pipeline_schema_profile",
-    "pipeline_unknown_routing",
-    "quality_fasttext_score",
-    "skipgram_negative_pairs",
-    "text_quality",
-    "topk_shard_merge_eval",
-    # r11 overflow (operators/dedup.py checkpoint-before-probe closure
-    # re-queues + batch-6 plan changes; see the r11 landing commits)
-    "dedup_clusters",
-    "dedup_containment",
-    "dedup_dup_groups",
-    "dedup_exact_log_id",
-    "dedup_method_agreement",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard_capped",
-    "dedup_simhash",
-    "dedup_simhash_hamming",
-    "dedup_source_flow",
-    "dedup_survivors",
-    "dedup_threshold_sensitivity",
-    "hash_embedding_fidelity_eval",
-    "lsh_band_tuning",
-    "simhash_bit_balance",
-    "pq_adc_eval",
-    "q21_waiting_supplier",
-    # mechanical closure trips (registry order)
-    "pipeline_route",
-    "pipeline_whitelist",
-    "pipeline_tz_partition",
-    "json_extract_props",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q18_large_orders",
-    "q4_order_priority",
-    "q10_returned_items",
-    "q12_priority_by_linestatus",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q17_small_quantity_revenue",
-    "q19_discounted_revenue",
-    "q22_sales_opportunity",
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "q11_important_stock",
-    "q15_top_supplier",
-    "q16_supplier_relationship",
-    "q20_potential_promotion",
-    "top_customers_per_nation",
-    "running_order_total",
-    "rollup_region_nation",
-    "pivot_priority_by_status",
-    "customers_without_orders",
-    "customers_with_orders",
-    "set_ops_nations",
-    "distinct_aggs",
-    "top_brands_by_revenue",
-    "brand_number_extract",
-    "frequent_buyers",
-    "text_token_stats",
-    "gopher_quality_flags",
-    "dup_ngram_coverage",
-    "dedup_span_removal",
-    "perplexity_bucket_sample",
-    "ivf_eval_recall",
-    "text_top_ngram_frac",
-    "corpus_kl_divergence",
-    "temperature_mixture_weights",
-    "knn_label_eval",
-    "events_winsorize",
-    "mrl_truncation_eval",
-    "vocab_growth_curve",
-    "customer_rfm_segments",
-    "multimodal_audio_meta",
-    "multimodal_audio_pcm_stats",
-    "video_meta_probe",
-    "video_frame_sample_plan",
-    "video_byte_plan_audit",
-    "video_frame_byte_index",
-    "video_frame_fetch_verify",
-    "zipf_rank_slope",
-    "doc_hash_embedding",
-    "open_lineitem_backlog",
-    "group_split_events",
-    "time_split_events",
-    "corpus_datacard",
-    "vocab_oov_rate",
-    "label_source_profile",
-    "bigram_interp_logprob",
-    "part_fuzzy_name_pairs",
-    "distinctive_terms_logodds",
-    "embedding_outliers",
-    "knn_confusion_matrix",
-    "logreg_auc",
-    "padding_waste_stats",
-    "cross_source_prefix_overlap",
-    "text_langid",
-    "text_fingerprint",
-    "embedding_cosine_topk",
-    "embedding_centroid_assign",
-    "embedding_norms",
-    "embedding_lsh_buckets",
-    "embedding_near_dup",
-    "embedding_lsh_near_dup",
-    "embedding_dim_stats",
-    "events_sessionize",
-    "events_session_window",
-    "events_tumbling_window",
-    "events_asof_join",
-    "order_gap_days",
-    "deterministic_sample",
-    "dataset_split",
-    "stratified_sample",
-    "text_scrub",
-    "text_repetition",
-    "text_vocab_topk",
-    "contamination_check",
-    "events_downsample_1h",
-    "events_value_histogram",
-    "events_range_join",
-    "salted_user_join",
-    "kmv_distinct_users",
-    "weighted_doc_sample",
-    "cube_status_priority",
-    "events_moving_window",
-    "events_gap_fill",
-    "events_stats_profile",
-    "events_sliding_window",
-    "weighted_avg_udaf",
-    "text_sentences_udtf",
-    "sequence_packing",
-    "customer_quartiles",
-    "text_edit_distance",
-    "percentiles_by_priority",
-    "grouping_sets_status_priority",
-    "customers_above_nation_avg",
-    "salted_group_counts",
-    "doc_chunking",
-    "chunk_dedup",
-    "tfidf_top_terms",
-    "char_entropy",
-    "scd2_user_history",
-    "events_zscore_outliers",
-    "embedding_quantize",
-    "kmeans_lloyd_step",
-    "text_bpe_tokens",
-    "bigram_cond_prob",
-    "winnow_fingerprints",
-    "winnow_overlap_pairs",
-    "unigram_logprob_score",
-    "hard_negatives",
-    "hll_distinct_users",
-    "bloom_semi_events",
-    "graph_pagerank_parts",
-    "graph_triangle_parts",
-    "graph_triangle_parts_capped",
-    "events_zorder_stats",
-    "events_quantile_sketch",
-    "events_funnel",
-    "events_cohort_retention",
-    "events_ewma",
-    "join_types_suite",
-    "global_shuffle_shards",
-    "mixture_sample",
-    "window_functions_suite",
-    "string_functions_suite",
-    "array_functions_suite",
-    "date_functions_suite",
-    "math_functions_suite",
-    "conditional_functions_suite",
-    "bitwise_functions_suite",
-    "regex_functions_suite",
-    "map_functions_suite",
-    "bpe_merge_step",
-    "semdedup_prune",
-    "dsir_importance",
-    "cdc_merge_upsert",
-    "topk_per_type_salted",
-    "domain_cap_sample",
-    "unpivot_status_metrics",
-    "column_profile_orders",
-    "privacy_k_anonymity",
-    "embedding_gram_matrix",
-    "embedding_power_iteration",
-    "incremental_agg_merge",
-    "events_anomaly_mad",
-    "orders_yoy_growth",
-    "market_basket_pairs",
-    "embedding_pq_codes",
-    "events_throttle_first",
-    "rrf_fusion",
-    "ordered_string_agg",
-    "type_user_overlap",
-    "ab_test_welch",
-    "multimodal_meta_audit",
-    "user_transition_matrix",
-    "privacy_l_diversity",
-    "lsh_eval_pr",
-    "quality_logreg_train",
-    "recursive_hierarchy",
-    "variant_props_stats",
-    "point_in_time_join",
-    "feature_matrix_at_label",
-    "logreg_calibration",
-    "events_wau_stickiness",
-    "incremental_dedup_check",
-    "graph_triangle_degree_ordered",
-    "multimodal_image_dims",
-    "embedding_ivf_topk",
-    "multimodal_features",
-    "bm25_topk_docs",
-    "pmi_collocations",
-    "source_vocab_jaccard",
-    "quality_length_spearman",
-    "keyword_tag_counts",
-    "doc_rarity_score",
-    "token_len_histogram",
-    "events_hourly_autocorr",
-    "customer_revenue_gini",
-    "events_type_burstiness",
-    "events_daily_type_drift",
-    "pipeline_error_taxonomy",
-    "parts_abc_classification",
-    "mixture_token_budget_alloc",
-    "orders_priority_anova",
-    "events_value_benford",
-    "supplier_nation_hhi",
-    "events_user_entropy",
-    "events_mann_whitney",
-    "events_changepoint_cusum",
-    "events_load_heatmap",
-    "fuzzy_block_eval",
-    "span_corruption_stats",
-    "events_ks_test",
-    "heaps_law_fit",
-    "events_peak_concurrency",
-    "ngram_novelty_curve",
-    "events_theil_sen",
-    "events_chi2_type_dow",
-    "events_seasonality",
-    "graph_adamic_adar",
-    "aa_cap_eval",
-    "graph_assortativity",
-    "sink_compaction_plan",
-    "source_token_simpson",
-    "dedup_clusters_distributed",
-    "reservoir_sample_ares",
-    "mmr_rerank",
-    "user_survival_km",
-    "dp_noisy_counts",
-    "watermark_loss_audit",
-    "join_key_skew",
-    "conformal_coverage",
-    "word2vec_sampling_table",
-    "corpus_psi_drift",
-    "langid_eval_prf",
-    "events_brownout_windows",
-    "skyline_quality_length",
-    "filter_funnel",
-    "scrub_eval",
-    "corpus_snapshot_diff",
-    "logreg_hard_examples",
-    "oov_vs_vocab_curve",
-    "cluster_best_quality",
-    "join_explosion_audit",
-    "text_encoding_audit",
-    "events_ohlc_hourly",
-    "label_noise_estimate",
-    "privacy_t_closeness",
-    "brier_decomposition",
-    "doremi_mixture_step",
-    "embedding_snapshot_drift",
-    "label_centroid_similarity",
-    "events_asof_tolerance",
-    "hll_error_eval",
-    "sampled_quantile_error_eval",
-    "quality_rater_kappa",
-    "epoch_repetition_plan",
-    "ab_sprt_daily",
-    "hll_merge_eval",
-    "tokenizer_fertility_by_source",
-    "outlier_method_agreement",
-    "curriculum_schedule",
-    "salting_effectiveness_eval",
-    "hash_dim_fidelity_sweep",
-    "revenue_theil_decomposition",
-    "zonemap_pruning_eval",
-    "fleiss_kappa_raters",
-    "contribution_cap_eval",
-    "bloom_fpr_eval",
-    "cv_fold_balance",
-    "isotonic_calibration",
-    "quantile_merge_eval",
-    "quantile_bucket_sweep",
-    "cross_split_contamination",
-    "context_length_plan",
-    "hh_merge_bounds",
-)
-
-
-def _rotated_names() -> list[str]:
-    """Registry names ordered so the driver's first-50 CORRECTNESS window
-    lands on queries without a prior green driver row, highest-value first
-    (see DRIVER_PRIORITY).  Oracle-less entries (should any ever exist
-    again) sort LAST within the unverified backlog: they can only yield
-    `err: no_oracle` rows, so they must never consume a window slot
-    ahead of a verifiable query (r5 verdict item 3 — as of round 6 all
-    registry entries carry oracle SQL, so this is a guard, not a path)."""
-    names = list(REGISTRY)
-    front = [n for n in DRIVER_PRIORITY if n in names]
-    unverified = [
-        n for n in names if n not in DRIVER_VERIFIED and n not in front
-    ]
-    unverified.sort(key=lambda n: REGISTRY[n][1] is None)  # stable
-    verified = [
-        n for n in names if n in DRIVER_VERIFIED and n not in front
-    ]
-    # pipeline_route (the entry() flagship) leads whichever section it
-    # falls in — but it must never crowd a never-verified name out of
-    # the driver's first-50 window, so once it IS driver-verified it
-    # leads the verified tail instead of holding a window slot hostage
-    for sec in (front, unverified, verified):
-        if "pipeline_route" in sec:
-            sec.remove("pipeline_route")
-            sec.insert(0, "pipeline_route")
-            break
-    return front + unverified + verified
-
-
 def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: REGISTRY[name][0] for name in _rotated_names()}
+    return {name: fn for name, (fn, _) in REGISTRY.items()}
 
 
 def oracle_queries() -> dict[str, str]:
-    return {
-        name: REGISTRY[name][1]
-        for name in _rotated_names()
-        if REGISTRY[name][1] is not None
-    }
+    return {name: sql for name, (_, sql) in REGISTRY.items() if sql is not None}

