@@ -16,9 +16,14 @@ write, at-least-once with whole-batch retry. Spark mapping:
   part d — unbounded dropDuplicates state would not survive 100 TB).
 - sink: partitioned gzip JSON files + checkpoint = exactly-once (an
   upgrade over the reference's at-least-once, SURVEY.md §4).
+- trigger: a live stream polls its source once a second, like the
+  reference's shard poll, and runs a micro-batch only when data arrived
+  (see :func:`_query_conf` for the per-batch costs this avoids).
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,10 +59,11 @@ def stream_source(
     aggregated and CloudWatch records land correctly instead of being
     UTF-8-mangled (ADVICE r1, streaming/job.py:59).
     """
+    files_per_trigger = max(1, cfg.batch_size // 100)
     if format == "file":
         return (
             spark.readStream.format("text")
-            .option("maxFilesPerTrigger", max(1, cfg.batch_size // 100) or 1)
+            .option("maxFilesPerTrigger", files_per_trigger)
             .load(path)
             .withColumnRenamed("value", "payload")
         )
@@ -68,7 +74,7 @@ def stream_source(
             .schema(
                 "path string, modificationTime timestamp, length long, content binary"
             )
-            .option("maxFilesPerTrigger", max(1, cfg.batch_size // 100) or 1)
+            .option("maxFilesPerTrigger", files_per_trigger)
             .load(path)
             .select(F.col("content").alias("data"))
         )
@@ -87,6 +93,61 @@ def stream_source(
     raise ValueError(f"unknown stream source format: {format}")
 
 
+#: Spark's checkpoint file manager over the Hadoop ``FileSystem`` API
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _query_conf(spark: SparkSession, checkpoint: str) -> dict[str, str]:
+    """Session settings a :func:`run_stream` query starts under.
+
+    - No no-data micro-batches: the arrival-time watermark moves on
+      every data batch, so Spark would follow each one with an empty
+      batch (offsets, commit and state deltas) that evicts nothing
+      under an hour-long watermark. Expired dedup keys are evicted by
+      the next data batch instead; output is unchanged, because the
+      dedup emits a key's first copy at once.
+    - On ``file:``, the ``FileSystem`` checkpoint manager. Spark's
+      default, ``FileContext``, renames there by checking the target
+      first, and that check forks a ``readlink`` process per checkpoint
+      file. HDFS and object stores keep the default. The file source's
+      own log (``sources/``) is opened by the query's thread after
+      ``start()`` returns, so it takes whichever manager the session
+      has by then; either one reads the other's files.
+    """
+    conf = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+    hadoop_fs = spark._jvm.org.apache.hadoop.fs
+    scheme = hadoop_fs.Path(checkpoint).toUri().getScheme()
+    if scheme is None:
+        # a path without a scheme is on the default file system, as
+        # Spark resolves the checkpoint
+        hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+        scheme = hadoop_fs.FileSystem.getDefaultUri(hadoop_conf).getScheme()
+    if scheme == "file":
+        conf["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINT_MANAGER
+    return conf
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on the session, then restore it. A streaming query
+    runs on a copy of its session taken at ``start()``, so the settings
+    reach queries started inside the block and nothing else."""
+    before = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def run_stream(
     source: DataFrame,
     out_path: str,
@@ -101,7 +162,8 @@ def run_stream(
 
     Returns the StreamingQuery (caller awaits termination).
     ``available_now=True`` drains everything currently available and
-    stops — the batch-replay trigger used in tests and backfills.
+    stops — the batch-replay trigger used in tests and backfills;
+    otherwise the query polls its source once a second.
 
     ``exact_layout=True`` writes the reference's two-segment
     ``%log_type%/YYYY-MM/DD/`` layout via ``foreachBatch`` (each
@@ -170,4 +232,8 @@ def run_stream(
         )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    else:
+        writer = writer.trigger(processingTime="1 second")
+    spark = source.sparkSession
+    with _session_conf(spark, _query_conf(spark, checkpoint)):
+        return writer.start()

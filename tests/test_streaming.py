@@ -8,10 +8,12 @@ import gzip
 import json
 import os
 import shutil
+import time
 
 from terraform_aws_lambda_kinesis_to_s3_spark.config import PipelineConfig
 from terraform_aws_lambda_kinesis_to_s3_spark.streaming import (
     RouteMetricsListener,
+    job,
     run_stream,
     stream_source,
 )
@@ -151,6 +153,150 @@ def test_stream_batch_size_bounds_micro_batches(spark, tmp_path):
         PipelineConfig(unknown_date="2024-06-01", batch_size=300), "b", 1
     )
     assert all_files == [9]  # single batch holds all three files
+
+
+def _clicks(prefix, n):
+    return [
+        {"log_type": "click", "log_id": f"{prefix}{j}", "time": "2024-03-05T10:00:00Z"}
+        for j in range(n)
+    ]
+
+
+def _drop(src_dir, name, records):
+    """Land a file atomically, as an agent dropping a batch would."""
+    _write_batch(src_dir, "." + name, records)
+    os.rename(os.path.join(src_dir, "." + name), os.path.join(src_dir, name))
+
+
+def _ran(q):
+    """Progress of the micro-batches the query ran (an idle poll also
+    reports progress, without running a batch)."""
+    return [p for p in q.recentProgress if "addBatch" in p["durationMs"]]
+
+
+def _await_rows(q, n, timeout=120):
+    deadline = time.time() + timeout
+    while sum(p["numInputRows"] for p in _ran(q)) < n:
+        assert q.exception() is None, q.exception()
+        assert time.time() < deadline, f"stream did not read {n} rows"
+        time.sleep(0.1)
+
+
+def test_stream_live_runs_no_empty_batch(spark, tmp_path):
+    """A live stream runs a micro-batch only when data arrived, polling
+    once a second. The replay dedup stays exact: a replayed log_id is
+    dropped, and expired keys are evicted by the next data batch
+    instead of an empty batch after each one."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    os.makedirs(src)
+    q = run_stream(
+        stream_source(spark, CFG, "file", src), out, ckpt, CFG,
+        dedup_watermark="2 seconds", available_now=False,
+    )
+    try:
+        trigger = q._jsq.streamingQuery().trigger()
+        assert trigger.getClass().getSimpleName() == "ProcessingTimeTrigger"
+        assert trigger.intervalMs() == 1000
+        _drop(src, "f0.jsonl", _clicks("a", 5))
+        _await_rows(q, 5)
+        # past the watermark: the next batch's watermark (its arrival
+        # time less 2 s) passes the expiry of the first batch's keys
+        # (their arrival time plus 2 s) in the batch after it
+        time.sleep(5)
+        _drop(src, "f1.jsonl", _clicks("b", 3) + _clicks("a", 1))
+        _await_rows(q, 9)
+        _drop(src, "f2.jsonl", _clicks("c", 2))
+        _await_rows(q, 11)
+        # a no-data batch would follow the last data batch at once
+        time.sleep(2)
+        ran = _ran(q)
+    finally:
+        q.stop()
+
+    assert [p["numInputRows"] for p in ran] == [5, 4, 2]
+    state = [p["stateOperators"][0] for p in ran]
+    assert [s["customMetrics"]["numDroppedDuplicateRows"] for s in state] == [0, 1, 0]
+    # the first file's five keys fall at the third data batch
+    assert [s["numRowsTotal"] for s in state] == [5, 8, 5]
+    assert state[2]["numRowsRemoved"] == 5
+    ids = sorted(json.loads(r[3])["log_id"] for r in _read_sink(out))
+    assert ids == sorted(
+        [f"a{j}" for j in range(5)] + [f"b{j}" for j in range(3)] + ["c0", "c1"]
+    )
+
+
+def test_stream_resumes_checkpoint_written_under_spark_defaults(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpoint written by a query under Spark's own settings
+    (the FileContext checkpoint manager, no-data batches on) resumes
+    through run_stream exactly once: no record lost or written twice,
+    and the restored dedup state still drops a replay."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    _write_batch(src, "f0.jsonl", _clicks("a", 4) + _clicks("a", 1))
+    with monkeypatch.context() as m:
+        m.setattr(
+            job,
+            "_query_conf",
+            lambda spark, checkpoint: {
+                "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+                "spark.sql.streaming.checkpointFileManagerClass": (
+                    "org.apache.spark.sql.execution.streaming.checkpointing."
+                    "FileContextBasedCheckpointFileManager"
+                ),
+            },
+        )
+        q = run_stream(stream_source(spark, CFG, "file", src), out, ckpt, CFG)
+        q.awaitTermination(120)
+    # the watermark moved, so Spark followed the data batch with a
+    # no-data batch
+    assert [p["numInputRows"] for p in _ran(q)] == [5, 0]
+
+    _write_batch(src, "f1.jsonl", _clicks("b", 3) + _clicks("a", 1))
+    q = run_stream(stream_source(spark, CFG, "file", src), out, ckpt, CFG)
+    q.awaitTermination(120)
+    assert [p["numInputRows"] for p in _ran(q)] == [4]
+    q = run_stream(stream_source(spark, CFG, "file", src), out, ckpt, CFG)
+    q.awaitTermination(120)
+    assert _ran(q) == []
+
+    ids = sorted(json.loads(r[3])["log_id"] for r in _read_sink(out))
+    assert ids == sorted([f"a{j}" for j in range(4)] + [f"b{j}" for j in range(3)])
+
+
+def test_checkpoint_manager_follows_checkpoint_scheme(spark, tmp_path):
+    """Only a checkpoint on ``file:`` takes the FileSystem checkpoint
+    manager; HDFS and object stores keep Spark's default. No-data
+    batches are off either way."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    local = job._query_conf(spark, f"file:{tmp_path}/ckpt")
+    bare = job._query_conf(spark, str(tmp_path / "ckpt"))
+    hdfs = job._query_conf(spark, "hdfs://nn/ckpt")
+    assert local[key] == bare[key] == job._FS_CHECKPOINT_MANAGER
+    assert key not in hdfs
+    for conf in (local, bare, hdfs):
+        assert conf["spark.sql.streaming.noDataMicroBatches.enabled"] == "false"
+    # a bare path takes the default file system's scheme
+    spark.conf.set("fs.defaultFS", "hdfs://nn")
+    try:
+        assert key not in job._query_conf(spark, "/ckpt")
+        assert key in job._query_conf(spark, "file:/ckpt")
+    finally:
+        spark.conf.unset("fs.defaultFS")
+
+
+def test_run_stream_leaves_session_conf_unchanged(spark, tmp_path):
+    """The query's settings are scoped to its start: queries started
+    elsewhere on the session (the append-mode windows, the monitors)
+    keep their no-data batches."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    _write_batch(src, "f0.jsonl", _clicks("a", 2))
+    before = spark.conf.getAll
+    q = run_stream(stream_source(spark, CFG, "file", src), out, ckpt, CFG)
+    assert spark.conf.getAll == before
+    q.awaitTermination(120)
+    assert spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") == "true"
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass", None) is None
 
 
 def test_stream_kinesis_decode_path(spark, tmp_path):

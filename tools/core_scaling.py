@@ -28,6 +28,7 @@ import os
 import statistics
 import subprocess
 import sys
+import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -47,6 +48,10 @@ DEFAULT_NAMES = [
     "column_profile_orders",
     "distinct_aggs",
 ]
+
+
+#: wait before the second try of a refused leg; it doubles before the third
+RETRY_WAIT_S = 60
 
 
 #: JVM heap for the sf1 legs.  The first receipt attempt ran both legs
@@ -119,8 +124,12 @@ def main() -> None:
         # session start; this co-tenant host hovers around the 0.15
         # jvm ceiling, so re-trying a refused leg in a hopefully
         # quieter window is exactly what the admission gate asks for
-        # (the probe gates the window, it never looks at the results)
+        # (the probe gates the window, it never looks at the results);
+        # the wait grows between tries, since a busy window on a shared
+        # host tends to last longer than one leg
         for attempt in range(3):
+            if attempt:
+                time.sleep(RETRY_WAIT_S * 2 ** (attempt - 1))
             print(f"== bench --only ({len(names)} entries) at {sf_dir}, "
                   f"SPARK_GRAFT_CPUS={cpus} (attempt {attempt + 1}) ==")
             runs[cpus] = run_bench(names, sf_dir, cpus)
