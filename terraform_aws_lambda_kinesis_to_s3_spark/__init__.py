@@ -13,9 +13,9 @@ A brand-new engine with the query and data-processing capabilities of
   search, text analysis, multimodal column plumbing, and the
   relational core used by the correctness oracle.
 
-Everything is DataFrame/Catalyst; Python UDFs appear only as
-Arrow-batched ``pandas_udf`` kernels for gunzip, KPL deaggregation and
-permissive (dateutil-style) timestamp parsing.
+Everything is DataFrame/Catalyst; Python appears only as ``mapInArrow``
+passes for gunzip plus KPL deaggregation and for permissive
+(dateutil-style) timestamp parsing.
 """
 
 from terraform_aws_lambda_kinesis_to_s3_spark.config import PipelineConfig

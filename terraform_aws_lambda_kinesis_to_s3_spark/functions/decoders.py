@@ -15,11 +15,15 @@ at ``lambda/requirements.txt:4``):
 Spark mapping: base64 and the CloudWatch unwrap are pure JVM column
 expressions (``try_to_binary``, ``from_json`` + ``transform`` + one
 ``explode``). KPL and gzip have no Spark builtin, so steps 2-3 plus
-UTF-8 run in one Arrow-batched ``pandas_udf``: each blob crosses the
-Python boundary once, as :func:`decode_blob`. The KPL wire format
-(magic ``0xF3899AC2`` + protobuf ``AggregatedRecord`` + MD5 trailer) is
-parsed with a ~40-line vendored varint reader so executors need no AWS
-dependency (SURVEY.md §7 hard-part e).
+UTF-8 run in one ``mapInArrow`` pass: each blob crosses the Python
+boundary once, as :func:`decode_blob`. A ``mapInArrow`` pass keeps no
+row queue on the JVM side, where an Arrow ``pandas_udf``
+(``ArrowEvalPython``) parks every input row with its Tungsten page and
+Spark's Python monitor thread keeps that page reachable for two seconds
+after the task ends. The KPL wire format (magic ``0xF3899AC2`` +
+protobuf ``AggregatedRecord`` + MD5 trailer) is parsed with a ~40-line
+vendored varint reader so executors need no AWS dependency (SURVEY.md
+§7 hard-part e).
 """
 
 from __future__ import annotations
@@ -27,11 +31,9 @@ from __future__ import annotations
 import gzip as _gzip
 import zlib
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
 
 KPL_MAGIC = b"\xf3\x89\x9a\xc2"
 GZIP_MAGIC = b"\x1f\x8b"
@@ -179,10 +181,25 @@ def decode_blob(blob: bytes | None) -> list[str]:
     return out
 
 
-@pandas_udf(T.ArrayType(T.StringType()))
-def kpl_deaggregate(blobs: pd.Series) -> pd.Series:
-    """:func:`decode_blob` per blob; perfbench counts its rows by this name."""
-    return blobs.map(decode_blob)
+def _decode_batches(data_col: str):
+    """The ``mapInArrow`` body of :func:`decode_records`: each batch's
+    ``data_col`` blobs through :func:`decode_blob`, one output row per
+    unit. The other columns repeat per unit (Arrow ``take``); the
+    consumed ``data_col`` gives way to ``__text``."""
+
+    def decode_blobs(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            take, texts = [], []
+            for i, blob in enumerate(batch.column(data_col).to_pylist()):
+                units = decode_blob(blob)
+                take.extend([i] * len(units))
+                texts.extend(units)
+            rest = batch.drop_columns([data_col]).take(pa.array(take, pa.int64()))
+            yield rest.append_column("__text", pa.array(texts, pa.string()))
+
+    return decode_blobs
 
 
 _CW_SCHEMA = T.StructType(
@@ -233,16 +250,26 @@ def decode_records(df: DataFrame, data_col: str = "data", base64_encoded: bool =
     """Full reference decode chain A2 -> one row per logical payload.
 
     Input: a column of Kinesis ``Data`` blobs (base64 string or raw
-    binary). Output: the input rows exploded into a ``payload`` string
-    column, other columns preserved.
+    binary). Output: one row per logical payload in a ``payload`` string
+    column; the other columns repeat per payload, and ``data_col`` is
+    dropped. A NULL blob yields no row, as under ``explode``.
 
     Order (matches the reference pipeline semantics): base64 -> KPL
     deaggregate -> gunzip -> UTF-8 -> CloudWatch unwrap. A string that
     is not valid base64 is kept as its own UTF-8 bytes, so it routes to
     the unknown prefix instead of failing the batch.
+
+    Steps 2-4 are one ``mapInArrow`` pass. Spark cannot prune columns
+    through it, so every column of ``df`` travels through Python: pass
+    only the columns the caller needs downstream.
     """
     raw = F.col(data_col)
     if base64_encoded:
         raw = F.coalesce(F.try_to_binary(raw, F.lit("base64")), raw.cast("binary"))
-    df = df.withColumn("__text", F.explode(kpl_deaggregate(raw)))
+    df = df.withColumn(data_col, raw)
+    schema = T.StructType(
+        [f for f in df.schema.fields if f.name != data_col]
+        + [T.StructField("__text", T.StringType())]
+    )
+    df = df.mapInArrow(_decode_batches(data_col), schema)
     return df.withColumn("payload", F.explode(cloudwatch_unwrap(F.col("__text")))).drop("__text")

@@ -6,16 +6,22 @@ The reference accepts "anything dateutil accepts" for the envelope
 
 Strategy (scale-first): a chain of JVM-side ``try_to_timestamp``
 patterns covers ISO8601 and the common log formats with whole-stage
-codegen; only rows that *fail* every JVM pattern reach the Arrow-batched
-dateutil fallback, and they reach it as NULL-masked inputs so the UDF
-does no Python work for the fast-path rows.
+codegen; only rows that *fail* every JVM pattern reach dateutil, in a
+``mapInArrow`` pass (:func:`with_timestamp`). The pass gets the text
+NULL-masked, so it does no Python work for the fast-path rows. It is a
+``mapInArrow`` pass and not an Arrow ``pandas_udf`` because the latter's
+``ArrowEvalPython`` node parks every input row in a JVM row queue whose
+Tungsten page Spark's Python monitor thread keeps reachable for two
+seconds after the task ends.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column
+from datetime import datetime, timedelta, timezone
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # JVM-side formats tried in order (Spark datetime patterns).
 _JVM_FORMATS = (
@@ -31,7 +37,10 @@ _JVM_FORMATS = (
 )
 
 
-def _jvm_chain(col: Column) -> Column:
+def parse_timestamp(col: Column) -> Column:
+    """The JVM format chain: a string column parsed into a timestamp,
+    NULL when no format matches. :func:`with_timestamp` adds the
+    dateutil fallback."""
     branches = [
         F.try_to_timestamp(col) if fmt is None else F.try_to_timestamp(col, F.lit(fmt))
         for fmt in _JVM_FORMATS
@@ -54,60 +63,85 @@ def _require_dateutil() -> None:
         )
 
 
-def _dateutil_fallback(col: Column) -> Column:
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    @pandas_udf("timestamp")
-    def parse_dateutil(s: pd.Series) -> pd.Series:
-        # Input is NULL-masked: fast-path rows arrive as NaN. Work only
-        # on the (typically tiny) non-null slice so the kernel costs
-        # ~nothing when every timestamp already parsed JVM-side.
-        out = pd.Series(pd.NaT, index=s.index, dtype="datetime64[ns]")
-        mask = s.notna()
-        if not mask.any():
-            return out
-        try:
-            from dateutil import parser as duparser
-        except ImportError:
-            # executors missing the dep is a deploy bug: fail the job
-            # loudly instead of silently NaT-ing rows into 'unknown'
-            raise RuntimeError(
-                "python-dateutil is missing on this executor but "
-                "permissive timestamp rows need it (deploy it with the "
-                "job, e.g. --py-files / a conda env)"
-            ) from None
-
-        def one(v):
-            try:
-                return duparser.parse(v)
-            except (ValueError, OverflowError, TypeError):
-                return pd.NaT
-
-        parsed = s[mask].map(one)
-        # normalize tz-aware values to UTC-naive for Spark TimestampType
-        out[mask] = pd.to_datetime(
-            parsed, utc=True, errors="coerce"
-        ).dt.tz_localize(None)
-        return out
-
-    return parse_dateutil(col)
+_EPOCH = datetime(1970, 1, 1)
+_US = timedelta(microseconds=1)
+#: pandas ``datetime64[ns]``'s range (``pd.Timestamp.min``/``max``) in ns
+_NS_MIN, _NS_MAX = -(2**63) + 1, 2**63 - 1
 
 
-def parse_timestamp(col: Column, permissive: bool = True) -> Column:
-    """Parse a string timestamp column; NULL when unparseable.
+def dateutil_epoch_us(text: str | None) -> int | None:
+    """``dateutil.parser.parse(text)`` as UTC epoch microseconds; None
+    when it fails or when the instant or its wall-clock time falls
+    outside pandas' ``datetime64[ns]`` range (years 1677-2262).
 
-    JVM format chain first; if ``permissive``, rows failing every JVM
-    format are retried through dateutil (NULL-masked input so the Arrow
-    kernel only does real work on the slow-path rows).
+    Never raises for a failed parse. The value is the one the former
+    Arrow ``pandas_udf`` kernel gave (``pd.to_datetime(utc=True,
+    errors="coerce")`` then UTC-naive) in a UTC session, which
+    ``session.get_spark`` always sets: a naive time is UTC, an aware one
+    is converted to UTC.
     """
-    jvm = _jvm_chain(col)
+    if text is None:
+        return None
+    try:
+        from dateutil import parser as duparser
+    except ImportError:
+        # executors missing the dep is a deploy bug: fail the job
+        # loudly instead of silently NaT-ing rows into 'unknown'
+        raise RuntimeError(
+            "python-dateutil is missing on this executor but "
+            "permissive timestamp rows need it (deploy it with the "
+            "job, e.g. --py-files / a conda env)"
+        ) from None
+    try:
+        dt = duparser.parse(text)
+        # pandas bounds the wall-clock time as well as the UTC instant
+        wall = (dt.replace(tzinfo=None) - _EPOCH) // _US
+        if dt.tzinfo is not None:
+            dt = dt.astimezone(timezone.utc)
+    except (ValueError, OverflowError, TypeError):
+        return None
+    us = (dt.replace(tzinfo=None) - _EPOCH) // _US
+    return us if _NS_MIN <= min(us, wall) * 1000 and max(us, wall) * 1000 <= _NS_MAX else None
+
+
+def _dateutil_batches(text_col: str):
+    """The ``mapInArrow`` body of :func:`with_timestamp`: fill ``ts``
+    from :func:`dateutil_epoch_us` where ``text_col`` is set, then drop
+    ``text_col``."""
+
+    def parse_dateutil(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for batch in batches:
+            text = batch.column(text_col)
+            if text.null_count < len(text):
+                ts = batch.column("ts")
+                parsed = [dateutil_epoch_us(v) for v in text.to_pylist()]
+                ts = pc.coalesce(ts, pa.array(parsed, pa.int64()).cast(ts.type))
+                batch = batch.set_column(batch.schema.get_field_index("ts"), "ts", ts)
+            yield batch.drop_columns([text_col])
+
+    return parse_dateutil
+
+
+def with_timestamp(df: DataFrame, text_col: str, permissive: bool = True) -> DataFrame:
+    """Replace the string column ``text_col`` with the timestamp column
+    ``ts``: NULL when unparseable.
+
+    :func:`parse_timestamp`'s JVM chain first; if ``permissive``, rows
+    failing every JVM format are retried through dateutil in one
+    ``mapInArrow`` pass that sees the text only on those rows. Spark
+    cannot prune columns through that pass, so every column of ``df``
+    travels through Python: pass only what the caller needs downstream.
+    """
+    jvm = parse_timestamp(F.col(text_col))
     if not permissive:
-        return jvm
+        return df.withColumn("ts", jvm).drop(text_col)
     _require_dateutil()
-    # Python UDFs are extracted into their own projection and run over
-    # every row, so mask the input: fast-path rows enter as NULL.
-    fallback = _dateutil_fallback(F.when(jvm.isNull() & col.isNotNull(), col))
-    return F.coalesce(jvm, fallback)
+    df = df.withColumn("ts", jvm).withColumn(text_col, F.when(jvm.isNull(), F.col(text_col)))
+    schema = T.StructType([f for f in df.schema.fields if f.name != text_col])
+    return df.mapInArrow(_dateutil_batches(text_col), schema)
 
 
 def partition_date_cols(ts: Column, tz: str) -> tuple[Column, Column]:

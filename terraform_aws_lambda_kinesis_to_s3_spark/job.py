@@ -33,11 +33,13 @@ def run_batch(
     """
     cfg = cfg or PipelineConfig()
     raw = spark.read.format("text").load(input_path)
+    # the decode and dateutil passes carry every column through Python:
+    # hand them only the one the sink needs
     if input_format == "kinesis-event":
-        df = decode_records(kinesis_event_to_df(raw, "value"))
+        df = decode_records(kinesis_event_to_df(raw, "value").select("data"))
     elif input_format == "payload":
         df = raw.withColumnRenamed("value", "payload")
     else:
         raise ValueError(f"unknown input_format: {input_format}")
-    routed = route_records(df, cfg)
+    routed = route_records(df.select("payload"), cfg)
     write_routed(routed, output_path, cfg, exact_layout=exact_layout)

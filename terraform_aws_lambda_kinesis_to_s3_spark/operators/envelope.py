@@ -2,8 +2,8 @@
 
 Reference semantics (``/root/reference/lambda/main.py:39-64`` plus the
 README contract ``README.md:9-15``), re-expressed as pure Catalyst
-column expressions — no UDF in this module except the optional
-dateutil timestamp fallback (see ``functions.timestamps``):
+column expressions — no Python in this module except the optional
+dateutil timestamp pass (see ``functions.timestamps``):
 
 - A3 JSON parse + invalid-row detection  (lambda/main.py:48-52)
 - A4 configurable-key field extraction   (lambda/main.py:27-29,58-60)
@@ -31,8 +31,8 @@ from pyspark.sql import types as T
 
 from terraform_aws_lambda_kinesis_to_s3_spark.config import PipelineConfig
 from terraform_aws_lambda_kinesis_to_s3_spark.functions.timestamps import (
-    parse_timestamp,
     partition_date_cols,
+    with_timestamp,
 )
 
 #: output columns added by :func:`route_records`
@@ -58,7 +58,9 @@ def extract_envelope(
     out of the same parse — the payload is scanned once, JVM-side.
     Non-string field values (nested/number) surface as their JSON text
     and then fail timestamp/routing validation, mirroring the
-    reference's dict.get + dateutil behavior.
+    reference's dict.get + dateutil behavior. With
+    ``cfg.permissive_timestamps`` every column of ``df`` passes through
+    the dateutil ``mapInArrow`` pass (:func:`with_timestamp`).
     """
     p = F.col(payload_col)
     schema = T.StructType(
@@ -75,18 +77,14 @@ def extract_envelope(
     df = df.withColumn("__env", env)
     e = F.col("__env")
     is_json = e.isNotNull() & e[_CORRUPT].isNull()
-    return (
+    df = (
         df.withColumn("is_json", is_json)
         .withColumn("log_type", F.when(is_json, e[cfg.log_type_field]))
         .withColumn("log_id", F.when(is_json, e[cfg.log_id_field]))
-        .withColumn(
-            "ts",
-            parse_timestamp(
-                F.when(is_json, e[cfg.log_timestamp_field]), cfg.permissive_timestamps
-            ),
-        )
+        .withColumn("__time", F.when(is_json, e[cfg.log_timestamp_field]))
         .drop("__env")
     )
+    return with_timestamp(df, "__time", cfg.permissive_timestamps)
 
 
 def validate(df: DataFrame, cfg: PipelineConfig) -> DataFrame:

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from terraform_aws_lambda_kinesis_to_s3_spark.session import get_spark
@@ -13,7 +15,9 @@ SF_DIRS = {
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    # the host's cores, as SPARK_GRAFT_CPUS gives them (tier-1 sets it to nproc)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    s = get_spark(app_name="tests", master=f"local[{cpus}]", shuffle_partitions=cpus)
     yield s
 
 

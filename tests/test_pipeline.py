@@ -216,7 +216,7 @@ def test_config_from_env():
     assert not PipelineConfig.from_env({"LOG_TYPE_WHITELIST": ""}).whitelist_enabled
 
 
-def test_permissive_requires_dateutil(monkeypatch):
+def test_permissive_requires_dateutil(spark, monkeypatch):
     """When dateutil is unavailable the permissive chain must fail at
     plan-build time, not silently NaT rows into 'unknown' (ADVICE/
     VERDICT r1 item 6)."""
@@ -230,10 +230,11 @@ def test_permissive_requires_dateutil(monkeypatch):
         "find_spec",
         lambda name, *a, **k: None if name == "dateutil" else real(name, *a, **k),
     )
+    df = spark.createDataFrame([("2024-01-02",)], "x string")
     with pytest.raises(RuntimeError, match="dateutil"):
-        TS.parse_timestamp(F.col("x"), permissive=True)
+        TS.with_timestamp(df, "x", permissive=True)
     # the strict JVM-only chain stays available
-    TS.parse_timestamp(F.col("x"), permissive=False)
+    TS.with_timestamp(df, "x", permissive=False)
 
 
 def test_dateutil_fallback_formats(spark):
@@ -319,13 +320,16 @@ def test_malformed_base64_routes_unknown(tmp_path, spark):
 
 
 def test_decode_records_crosses_python_once(spark):
-    """KPL deaggregation, gunzip and UTF-8 run in one Arrow UDF: the
-    executed plan holds exactly one ArrowEvalPython node."""
+    """KPL deaggregation, gunzip and UTF-8 run in one ``mapInArrow``
+    pass: the executed plan holds exactly one ``PythonMapInArrowExec``
+    (printed ``MapInArrow``) and no ArrowEvalPython node (whose row
+    queue outlives its task)."""
     payloads = [rec(), gzip.compress(rec()), kpl_aggregate_bytes([rec(), gzip.compress(rec())])]
     df = decode_records(payloads_to_df(spark, payloads))
     assert len(df.collect()) == 4
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1, plan
+    assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+    assert "EvalPython" not in plan, plan
 
 
 def test_payload_schema_profile_detects_drift(spark):

@@ -10,6 +10,7 @@ import os
 import subprocess
 import sys
 import zlib
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -279,6 +280,159 @@ def test_decode_blob_matches_two_udf_chain(blob):
     out = decode_blob(blob)
     assert out == _two_udf_chain(blob)
     assert all(isinstance(t, str) for t in out)
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(blobs=st.lists(_blobs, max_size=6))
+def test_decode_records_matches_explode(spark, blobs):
+    """Differential: the ``mapInArrow`` decode pass gives the rows the
+    former ``explode(udf(decode_blob))`` plan gave: a NULL blob yields no
+    row, every other column repeats per unit, and ``data`` is dropped."""
+    from pyspark.sql import types as T
+
+    from terraform_aws_lambda_kinesis_to_s3_spark.functions.decoders import (
+        cloudwatch_unwrap,
+        decode_records,
+    )
+
+    df = spark.createDataFrame(
+        [(i, f"tag-{i}", b) for i, b in enumerate(blobs)],
+        "id int, tag string, data binary",
+    )
+    out = decode_records(df, base64_encoded=False)
+    assert out.columns == ["id", "tag", "payload"]
+    explode_udf = F.udf(decode_blob, T.ArrayType(T.StringType()))
+    ref = (
+        df.withColumn("__text", F.explode(explode_udf("data")))
+        .withColumn("payload", F.explode(cloudwatch_unwrap(F.col("__text"))))
+        .select("id", "tag", "payload")
+    )
+    assert sorted(out.collect()) == sorted(ref.collect())
+
+
+def _old_dateutil_kernel(s):
+    """The Arrow ``pandas_udf`` body the dateutil ``mapInArrow`` pass
+    replaced, verbatim: a batch of strings in, UTC-naive
+    ``datetime64[ns]`` out, NaT where dateutil fails or pandas' range
+    ends."""
+    import pandas as pd
+    from dateutil import parser as duparser
+
+    out = pd.Series(pd.NaT, index=s.index, dtype="datetime64[ns]")
+    mask = s.notna()
+    if not mask.any():
+        return out
+
+    def one(v):
+        try:
+            return duparser.parse(v)
+        except (ValueError, OverflowError, TypeError):
+            return pd.NaT
+
+    parsed = s[mask].map(one)
+    out[mask] = pd.to_datetime(parsed, utc=True, errors="coerce").dt.tz_localize(None)
+    return out
+
+
+_ZONES = st.sampled_from(
+    [
+        timezone.utc,
+        timezone(timedelta(hours=9)),
+        timezone(-timedelta(hours=5, minutes=30)),
+        timezone(timedelta(hours=14)),
+    ]
+)
+_FORMATS = st.sampled_from(
+    [
+        "%Y-%m-%dT%H:%M:%S.%f%z",
+        "%Y-%m-%d %H:%M:%S%z",
+        "%a, %d %b %Y %H:%M:%S %z",
+        "%b %d %Y %I:%M%p %z",
+        "%d/%m/%Y %H:%M",
+        "%Y%m%dT%H%M%S",
+    ]
+)
+
+
+@st.composite
+def _time_texts(draw):
+    """Naive and aware times across and beyond pandas' 1677-2262 range,
+    in several spellings, plus garbage and NULL."""
+    kind = draw(st.sampled_from(["naive", "aware", "edge", "garbage", "null"]))
+    if kind == "null":
+        return None
+    if kind == "garbage":
+        return draw(st.one_of(st.text(max_size=20), st.sampled_from(["", "now", "32/13/2024", "2024-02-30"])))
+    if kind == "edge":  # the first and last instants pandas can hold
+        dt = draw(
+            st.sampled_from(
+                [datetime(1677, 9, 21, 0, 12, 43, 145224), datetime(1677, 9, 21, 0, 12, 43, 145225),
+                 datetime(2262, 4, 11, 23, 47, 16, 854775), datetime(2262, 4, 11, 23, 47, 16, 854776)]
+            )
+        )
+        return dt.isoformat() + draw(st.sampled_from(["", "Z", "+00:00", "+01:00", "-01:00"]))
+    years = draw(st.sampled_from([(1600, 2400), (1, 9999)]))
+    dt = draw(st.datetimes(datetime(years[0], 1, 1), datetime(years[1], 12, 31)))
+    if kind == "aware":
+        dt = dt.replace(tzinfo=draw(_ZONES))
+    text = dt.strftime(draw(_FORMATS))
+    return text.strip()
+
+
+@settings(max_examples=400, deadline=None)
+@given(texts=st.lists(_time_texts(), max_size=8))
+def test_dateutil_epoch_us_matches_pandas_kernel(texts):
+    """Differential: the per-string helper of the dateutil pass returns
+    what the old pandas kernel returned for the same batch, as UTC
+    microseconds (None for NaT). The one allowed difference: an aware
+    time whose wall clock pandas can hold but whose UTC instant falls
+    before 1677-09-21 made ``pd.to_datetime`` raise ``OverflowError``
+    despite ``errors="coerce"`` and failed the job; it is None now."""
+    import pandas as pd
+
+    from terraform_aws_lambda_kinesis_to_s3_spark.functions.timestamps import (
+        dateutil_epoch_us,
+    )
+
+    def old_us(batch):
+        try:
+            old = _old_dateutil_kernel(pd.Series(batch, dtype=object))
+        except OverflowError:
+            if len(batch) == 1:  # the old kernel failed the job on it
+                return [None]
+            return [v for t in batch for v in old_us([t])]
+        return [None if pd.isna(v) else v.value // 1000 for v in old]
+
+    assert [dateutil_epoch_us(t) for t in texts] == old_us(texts)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(texts=st.lists(st.one_of(_time_texts(), st.just("2024-01-05T10:00:00Z")), max_size=8))
+def test_with_timestamp_pass_matches_chain(spark, texts):
+    """The ``mapInArrow`` pass: the JVM chain where it parses, the
+    dateutil helper on exactly the other rows; columns in order."""
+    from terraform_aws_lambda_kinesis_to_s3_spark.functions.timestamps import (
+        dateutil_epoch_us,
+        with_timestamp,
+    )
+
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, t string")
+    strict = with_timestamp(df, "t", permissive=False)
+    loose = with_timestamp(df, "t")
+    assert loose.columns == strict.columns == ["id", "ts"]
+    us = F.unix_micros("ts").alias("us")
+    jvm = dict(strict.select("id", us).collect())
+    got = dict(loose.select("id", us).collect())
+    for i, t in enumerate(texts):
+        assert got[i] == (jvm[i] if jvm[i] is not None else dateutil_epoch_us(t)), t
 
 
 def test_kpl_truncated_blob_passthrough():

@@ -15,6 +15,9 @@ targeted mutations).  Invariants checked per input:
   corrupted blob comes back as [blob] verbatim
 - decode_blob (KPL deagg + gunzip + UTF-8, the record decode kernel)
   returns a list of str; corrupt gzip decodes permissively
+- dateutil_epoch_us (the dateutil timestamp fallback, per string) on
+  the input read as UTF-8 text returns None or an int of epoch
+  microseconds inside pandas' datetime64[ns] range
 
 Run:  python tools/fuzz_parsers.py [seconds] [seed]
       (defaults: 60 s, seed 0)
@@ -55,6 +58,9 @@ def corpus(rng: random.Random) -> list[bytes]:
         MM.synth_jpeg(64, 48, n_filler=9),
         kpl_aggregate_bytes([b"alpha" * 10, b"beta" * 10]),
         gzip.compress(b'{"log_type": "purchase", "log_id": "e-1"}\n' * 8, mtime=0),
+        b"Tue, 02 Jan 2024 10:00:00 +0900",
+        b"1677-09-21T00:12:43.145225+01:00",
+        b"Jan 5 2024 3:04pm",
     ]
 
 
@@ -96,6 +102,9 @@ def main() -> int:
         decode_blob,
         kpl_deaggregate_bytes,
     )
+    from terraform_aws_lambda_kinesis_to_s3_spark.functions.timestamps import (
+        dateutil_epoch_us,
+    )
     from terraform_aws_lambda_kinesis_to_s3_spark.operators.multimodal import (
         _sample_locations,
         parse_image_header,
@@ -134,6 +143,10 @@ def main() -> int:
             )
             d = decode_blob(blob)
             assert isinstance(d, list) and all(isinstance(x, str) for x in d)
+            us = dateutil_epoch_us(blob.decode("utf-8", errors="replace"))
+            assert us is None or (
+                isinstance(us, int) and -(2**63) < us * 1000 < 2**63
+            )
         except AssertionError:
             raise
         except Exception as e:  # noqa: BLE001
