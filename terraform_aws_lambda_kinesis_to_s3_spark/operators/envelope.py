@@ -136,7 +136,6 @@ def add_route(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 def route_records_on_envelope(
     env: DataFrame,
     cfg: PipelineConfig | None = None,
-    drop_non_json: bool | None = None,
 ) -> DataFrame:
     """A6-A11 on an already-extracted+validated envelope: whitelist,
     route, partition dates, optional non-JSON drop.
@@ -150,8 +149,7 @@ def route_records_on_envelope(
     """
     cfg = cfg or PipelineConfig()
     out = add_route(apply_whitelist(env, cfg), cfg)
-    drop = (not cfg.non_json_to_unknown) if drop_non_json is None else drop_non_json
-    if drop:
+    if not cfg.non_json_to_unknown:
         out = out.filter(F.col("is_json"))
     return out
 
@@ -160,16 +158,15 @@ def route_records(
     df: DataFrame,
     cfg: PipelineConfig | None = None,
     payload_col: str = "payload",
-    drop_non_json: bool | None = None,
 ) -> DataFrame:
     """The full A3-A11 pipeline: payload strings in, routed records out.
 
-    ``drop_non_json`` overrides ``cfg.non_json_to_unknown`` (as-built
-    reference behavior silently skips non-JSON, lambda/main.py:50-52).
+    ``cfg.non_json_to_unknown=False`` drops non-JSON payloads (as-built
+    reference behavior silently skips them, lambda/main.py:50-52).
     """
     cfg = cfg or PipelineConfig()
     return route_records_on_envelope(
-        validate(extract_envelope(df, cfg, payload_col), cfg), cfg, drop_non_json
+        validate(extract_envelope(df, cfg, payload_col), cfg), cfg
     )
 
 

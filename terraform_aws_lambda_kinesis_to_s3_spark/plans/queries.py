@@ -59,9 +59,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str, parallelize: bool = False) -
 
 #: THE inventory of session-shared persisted stages: helper name ->
 #: {(applicationId, sf_dir, loader): persisted value}.  Filled by
-#: ``@shared_stage``; tooling (bench.py warmup, plan_cost rollback,
-#: bench_diff builder inclusion, perfbench) snapshots, rolls back or
-#: clears these plain dicts instead of keeping its own copies.
+#: ``@shared_stage``; tooling (bench.py warmup, bench_diff builder
+#: inclusion, perfbench) snapshots or clears these plain dicts instead
+#: of keeping its own copies.
 SHARED_STAGE_CACHES: dict[str, dict] = {}
 
 
@@ -8599,11 +8599,10 @@ def _term_census(spark, sf) -> DataFrame:
 #: canChangeCachedPlanOutputPartitioning=true (session.py): with the
 #: flag on, AQE re-sizes cached-plan output partitions by bytes, which
 #: removes the frozen-partition task explosion that sank the earlier
-#: trial; re-measured this round (see OPTIMIZATION_r12.md).  The
-#: triangle family deliberately does NOT share this build: its
-#: operators persist + release edges internally, and the r11 plan_cost
-#: trial showed the full-graph consumers losing parquet-stats exchange
-#: reuse.
+#: trial; re-measured in r12.  The triangle family deliberately does
+#: NOT share this build: its operators persist + release edges
+#: internally, and the r11 trial's shuffle receipts showed the
+#: full-graph consumers losing parquet-stats exchange reuse.
 @shared_stage
 def _quarter_edges(spark, sf) -> DataFrame:
     li = _t(spark, sf, "lineitem").filter(F.col("l_orderkey") % 4 == 0)
@@ -12648,7 +12647,7 @@ def q_graph_adamic_adar(spark, sf):
     the lineitem input.  (Sharing this persist ACROSS the sibling
     graph queries as a session cache was also measured and REVERTED:
     consumers reading the InMemoryRelation lost parquet-stats exchange
-    reuse — plan_cost read degree_ordered 428->611 MB / 154->1059
+    reuse — shuffle receipts read degree_ordered 428->611 MB / 154->1059
     tasks and assortativity 43.6->70 MB; the persist pays for itself
     only within this query, where the subtree is consumed twice.)"""
     # SESSION-SHARED quarter-graph edge build (r11 verdict item 4):

@@ -109,23 +109,22 @@ def _local_fs_conf(master: str) -> dict[str, str]:
     }
 
 
+def local_cores() -> int:
+    """Cores a local session runs on: ``SPARK_GRAFT_CPUS`` when set,
+    else the cores this process may run on (its affinity mask)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "kinesis_to_s3_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     master = master or f"local[{cpus}]"
-    # local mode: shuffle partitions ~= cores; on a cluster AQE coalesces.
-    # SPARK_GRAFT_SHUFFLE_PARTITIONS overrides for scale runs: partitions
-    # must grow with the input so per-partition state keeps fitting in
-    # executor memory — the sizing lever tools/plan_cost.py validates
-    shuffle = str(
-        shuffle_partitions
-        or os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        or cpus
-    )
+    # local mode: shuffle partitions ~= cores; on a cluster AQE coalesces
+    shuffle = str(shuffle_partitions or cpus)
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)

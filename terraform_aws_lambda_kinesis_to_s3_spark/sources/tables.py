@@ -15,6 +15,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+#: The ten test tables (TESTDATA.md).
+TABLES = (
+    "region nation customer supplier part orders lineitem events documents embeddings"
+).split()
+
 #: (applicationId, sf_dir, name) -> observed scan partition count.  A
 #: metadata-only probe (physical-plan partitioning, no job runs),
 #: memoized per session/table so repeated loads don't re-plan the scan.
@@ -75,8 +80,5 @@ def load_table(
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every test table as a temp view so users can query the
     engine with plain ``spark.sql`` (same Catalyst plans either way)."""
-    for name in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
+    for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

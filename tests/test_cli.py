@@ -62,9 +62,8 @@ def test_cli_batch_payload_and_kinesis_event(spark, tmp_path):
 
 def test_bench_coverage_is_total():
     """Every registry query is benched or carries a documented
-    exclusion: HEADLINE ∪ EXCLUDED == REGISTRY, disjoint, no strays —
-    the 'every query gets a bench entry' claim, machine-checked
-    (r4 verdict item 5)."""
+    exclusion: EXCLUDED is a subset of REGISTRY, every exclusion has a
+    reason, and HEADLINE is REGISTRY minus EXCLUDED in registry order."""
     import os
     import sys
 
@@ -72,115 +71,94 @@ def test_bench_coverage_is_total():
     import bench
     from terraform_aws_lambda_kinesis_to_s3_spark.plans.queries import REGISTRY
 
-    headline, excluded = set(bench.HEADLINE), set(bench.EXCLUDED)
-    assert len(bench.HEADLINE) == len(headline), "duplicate HEADLINE entry"
-    assert not headline & excluded, headline & excluded
-    assert headline | excluded == set(REGISTRY), (
-        "unbenched without documented exclusion: "
-        f"{sorted(set(REGISTRY) - headline - excluded)}; "
-        f"stray non-registry names: "
-        f"{sorted((headline | excluded) - set(REGISTRY))}"
-    )
+    assert set(bench.EXCLUDED) <= set(REGISTRY), set(bench.EXCLUDED) - set(REGISTRY)
     assert all(bench.EXCLUDED.values()), "every exclusion needs a reason"
+    assert bench.HEADLINE == [n for n in REGISTRY if n not in bench.EXCLUDED]
 
 
-def test_bench_calibration_admission_gate():
-    """calibration_admitted (r9 verdict item 2): a sweep taken under
-    co-tenant contention must be refused at artifact-write time —
-    inside-window probes admit, any probe over its ceiling (or
-    missing) refuses with a named reason.  The ceilings themselves
-    are pinned so a silent loosening shows up in review."""
+def test_local_cores_follows_env_else_affinity(monkeypatch):
+    """One core-count rule for every session: SPARK_GRAFT_CPUS when
+    set, else the process's affinity mask."""
+    import os
+
+    from terraform_aws_lambda_kinesis_to_s3_spark.session import local_cores
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cores() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert local_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+    assert local_cores() == len(os.sched_getaffinity(0))
+
+
+def test_bench_sweep_stamps_and_receipts(spark, tmp_path):
+    """bench.sweep on two sf0.01 entries: the artifact carries the
+    stamps bench_diff compares on, and each entry a warm time, a cold
+    time and a status-store receipt of work actually done."""
     import os
     import sys
 
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-    from bench import CALIB_ADMIT_MAX, calibration_admitted
+    import bench
+    import harness
 
-    assert CALIB_ADMIT_MAX == {"cpu_calib_sec": 0.05, "jvm_calib_sec": 0.15}
-    # the r9 readings come from a 32-core sweep: judge them at 32 cores
-    # whatever SPARK_GRAFT_CPUS the suite runs under
-    ok, reasons = calibration_admitted(
-        {"cpu_calib_sec": 0.031, "jvm_calib_sec": 0.138}, cpus=32
-    )
-    assert ok and reasons == []
-    # the r9 contaminated sweep's probe reading must be refused
-    ok, reasons = calibration_admitted(
-        {"cpu_calib_sec": 0.031, "jvm_calib_sec": 0.306}, cpus=32
-    )
-    assert not ok and any("jvm_calib_sec" in r for r in reasons)
-    # a sweep without its probe block cannot prove its window
-    ok, reasons = calibration_admitted({"jvm_calib_sec": 0.1}, cpus=32)
-    assert not ok and any("cpu_calib_sec" in r for r in reasons)
-    # low-core sessions: the jvm probe is a FIXED 32-task reduce, so
-    # at 8 cores it runs 4 waves and the ceiling scales with the wave
-    # count (r12: six straight 8-core receipt windows were refused at
-    # 0.148-0.26 s — healthy per-wave readings judged against the
-    # 32-core ceiling).  At 32+ cores nothing changes.
-    from bench import effective_calib_limits
-
-    assert effective_calib_limits(32) == CALIB_ADMIT_MAX
-    assert effective_calib_limits(8)["jvm_calib_sec"] == 0.6
-    assert effective_calib_limits(8)["cpu_calib_sec"] == 0.05
-    ok, reasons = calibration_admitted(
-        {"cpu_calib_sec": 0.031, "jvm_calib_sec": 0.45}, cpus=8
-    )
-    assert ok and reasons == []
-    ok, reasons = calibration_admitted(
-        {"cpu_calib_sec": 0.031, "jvm_calib_sec": 0.45}, cpus=32
-    )
-    assert not ok
-    # the r9 discard threshold still refuses even at 8 cores when the
-    # reading exceeds the scaled ceiling
-    ok, _ = calibration_admitted(
-        {"cpu_calib_sec": 0.031, "jvm_calib_sec": 0.65}, cpus=8
-    )
-    assert not ok
-    # 4 cores: 8 waves, so the jvm ceiling is 0.15 x 8 = 1.2
-    assert effective_calib_limits(4)["jvm_calib_sec"] == 1.2
-    ok, _ = calibration_admitted(
-        {"cpu_calib_sec": 0.031, "jvm_calib_sec": 1.25}, cpus=4
-    )
-    assert not ok
+    b = harness.Bench(str(tmp_path), str(tmp_path))
+    b.spark = spark
+    names = ["q1_pricing_summary", "char_entropy"]
+    out = bench.sweep(b, names, "/root/testdata/sf0.01")
+    st = out["stamps"]
+    assert st["nproc"] == harness.nproc()
+    assert st["cores"] == spark.sparkContext.defaultParallelism
+    assert st["sf"] == "sf0.01"
+    assert st["rev"] and st["spark"] == spark.version and st["python"]
+    assert {"cpu_probe_s", "jvm_probe_s", "steal_frac"} <= set(st)
+    for key in ("queries", "cold_first_run", "receipts"):
+        assert list(out[key]) == names, key
+    for name in names:
+        assert out["receipts"][name]["cpu_s"] > 0, name
+        assert out["receipts"][name]["tasks"] > 0, name
 
 
-def test_control_band_baselines_pinned():
-    """The control-band instrument's baselines must never drift: they
-    are the r8-driver readings every triage since r9 normalized
-    against, and the five control queries must still exist in the
-    registry (a renamed/removed control would silently shrink the
-    band sample)."""
+def test_bench_diff_refuses_mismatched_stamps(tmp_path, monkeypatch):
+    """tools/bench_diff.py exits 2 with a named reason when either sweep
+    has no nproc/cores/sf stamp or the two differ in one, and compares
+    sweeps whose stamps agree."""
     import importlib.util
+    import json
     import os
     import sys
 
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
     spec = importlib.util.spec_from_file_location(
-        "control_band",
-        os.path.join(os.path.dirname(__file__), "..", "tools",
-                     "control_band.py"),
+        "bench_diff",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "bench_diff.py"),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    assert mod.CONTROLS == {
-        "ab_sprt_daily": 0.29,
-        "char_entropy": 0.20,
-        "chunk_dedup": 0.32,
-        "cdc_merge_upsert": 0.33,
-        "context_length_plan": 0.19,
-    }
-    # second column (r10 verdict item 6): the r11 certified-idle
-    # min-of-5 solo baselines, same five controls, also pinned
-    assert mod.CONTROLS_R11_IDLE == {
-        "ab_sprt_daily": 0.328,
-        "char_entropy": 0.349,
-        "chunk_dedup": 0.474,
-        "cdc_merge_upsert": 0.373,
-        "context_length_plan": 0.217,
-    }
-    assert set(mod.CONTROLS_R11_IDLE) == set(mod.CONTROLS)
-    from terraform_aws_lambda_kinesis_to_s3_spark.plans.queries import REGISTRY
 
-    assert set(mod.CONTROLS) <= set(REGISTRY)
+    stamps = {"nproc": 4, "cores": 4, "sf": "sf0.1", "rev": "a"}
+    base = {"queries": {"q": 1.0}, "stamps": stamps}
+    assert mod.stamp_mismatch(base, base) is None
+    # the revision is what a comparison is for: it may differ
+    assert mod.stamp_mismatch(base, {**base, "stamps": {**stamps, "rev": "b"}}) is None
+    reason = mod.stamp_mismatch(base, {**base, "stamps": {**stamps, "nproc": 8}})
+    assert "nproc 4 != 8" in reason
+    reason = mod.stamp_mismatch(base, {**base, "stamps": {**stamps, "sf": "sf1"}})
+    assert "sf 'sf0.1' != 'sf1'" in reason
+    assert "old sweep has no nproc, cores, sf stamp" == mod.stamp_mismatch(
+        {"queries": {}}, base
+    )
+    no_sf = {k: v for k, v in stamps.items() if k != "sf"}
+    assert "new sweep has no sf stamp" == mod.stamp_mismatch(
+        base, {**base, "stamps": no_sf}
+    )
+
+    paths = {}
+    for name, st in (("a", stamps), ("b", {**stamps, "nproc": 8})):
+        paths[name] = tmp_path / f"{name}.json"
+        paths[name].write_text(json.dumps({**base, "stamps": st}))
+    for new, code in (("a", 0), ("b", 2)):
+        monkeypatch.setattr(sys, "argv", ["bench_diff", str(paths["a"]), str(paths[new])])
+        assert mod.main() == code
 
 
 def test_partition_invariance_hash_is_layout_blind():
@@ -214,8 +192,7 @@ def test_partition_invariance_hash_is_layout_blind():
 def test_shared_stage_cache_registry_is_total():
     """SHARED_STAGE_CACHES is THE cache inventory, filled by
     @shared_stage: plans/queries.py keeps no module-level *_CACHE dict
-    of its own that plan_cost's rollback or bench_diff's builder
-    inclusion could silently miss, and every registered helper is a
+    of its own that bench_diff's builder inclusion could silently miss, and every registered helper is a
     real module-level callable."""
     import terraform_aws_lambda_kinesis_to_s3_spark.plans.queries as Q
 
@@ -340,34 +317,6 @@ def test_bench_only_exact_name_not_shadowed_by_substring():
     assert "graph_triangle_parts_capped" in got     # substring fan-out kept
     assert len(got) == len(set(got))                # no duplicates
     assert bench.select_only(["no_such_query_zzz"]) == []
-
-
-def test_all_committed_artifacts_carry_admission_gate():
-    """r10 verdict item 4: every committed measurement artifact —
-    BENCH_FULL (bench.py, behavior-tested above), ENVELOPE_BENCH,
-    BENCH_SF1, PLAN_COSTS* — must pass through the SAME
-    CALIB_ADMIT_MAX refusal path: a reading outside the admission
-    window lands in a *_rejected.json sidecar (exit 2) and never
-    touches the committed artifact.  The decision function's behavior
-    is covered by test_bench_calibration_admission_gate; this pins
-    that each tool actually routes through it (the refusal branch
-    needs a live loaded-host Spark session to exercise end-to-end)."""
-    import os
-
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    for tool, rejected in [
-        ("tools/envelope_bench.py", "ENVELOPE_BENCH_rejected.json"),
-        ("tools/bench_sf1.py", "BENCH_SF1_rejected.json"),
-        ("tools/plan_cost.py", "_rejected.json"),
-        ("tools/core_scaling.py", "_rejected"),
-    ]:
-        src = open(os.path.join(repo, tool)).read()
-        assert "calibration_admission" in src, tool
-        assert rejected in src, tool
-        assert "SystemExit(2)" in src, tool
-        # envelope_bench and plan_cost decide locally; bench_sf1
-        # inherits the inner bench.py run's decision
-        assert ("calibration_admitted" in src), tool
 
 
 def test_scale_override_oracles_agree_with_registry_at_sf001():

@@ -3,8 +3,8 @@
 For every query in the registry (each must carry oracle SQL): run the
 Spark query and the DuckDB SQL at sf0.01, canonicalize (column-name
 sort, row sort, float rounding) and compare values. This is
-intentionally stricter than a smoke test — it is the same bar
-CORRECTNESS_r{N}.json applies.
+intentionally stricter than a smoke test — it is the same bar the
+driver's correctness gate applies.
 """
 
 from __future__ import annotations

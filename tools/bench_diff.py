@@ -2,13 +2,15 @@
 """Diff two BENCH_FULL.json sweeps and flag per-query regressions.
 
 Usage:
-    python tools/bench_diff.py BENCH_FULL_r04.json BENCH_FULL.json \
+    python tools/bench_diff.py OLD.json BENCH_FULL.json \
         [--threshold 1.5] [--min-sec 0.5]
 
 Prints entries whose time grew by more than ``threshold``× AND whose
 new time exceeds ``min-sec`` (sub-second jitter on a throttled host is
-not a regression — see NOTES_r3/r4: the same sweep varies 2-3× with
-load, so only compare idle-host runs). Exit 1 if any flagged.
+not a regression: the same sweep varies 2-3× with load). Exit 1 if any
+flagged.  Exit 2, naming the reason, when either sweep lacks a stamp in
+``STAMPS`` or the two differ in one: timings taken on another core
+count or input size are not comparable.
 """
 
 from __future__ import annotations
@@ -21,6 +23,24 @@ import sys
 _REPO = __import__("os").path.dirname(
     __import__("os").path.dirname(__import__("os").path.abspath(__file__))
 )
+
+#: stamps (bench.py's ``stamps`` block) two sweeps must share
+STAMPS = ("nproc", "cores", "sf")
+
+
+def stamp_mismatch(old: dict, new: dict) -> str | None:
+    """Why sweeps ``old`` and ``new`` cannot be compared, or None."""
+    for side, sweep in (("old", old), ("new", new)):
+        missing = [k for k in STAMPS if k not in sweep.get("stamps", {})]
+        if missing:
+            return f"{side} sweep has no {', '.join(missing)} stamp"
+    differ = [
+        f"{k} {old['stamps'][k]!r} != {new['stamps'][k]!r}"
+        for k in STAMPS
+        if old["stamps"][k] != new["stamps"][k]
+    ]
+    return f"stamps differ: {'; '.join(differ)}" if differ else None
+
 
 def _cache_builders(flagged: list[str]) -> list[str]:
     """For every shared cache touched by a flagged query, the FIRST
@@ -130,8 +150,15 @@ def main() -> int:
         "the threshold vs old — exit 1 only for flags that reproduce",
     )
     args = ap.parse_args()
-    old = json.load(open(args.old))["queries"]
-    new = json.load(open(args.new))["queries"]
+    with open(args.old) as f:
+        old = json.load(f)
+    with open(args.new) as f:
+        new = json.load(f)
+    reason = stamp_mismatch(old, new)
+    if reason:
+        print(f"refused: {reason}", file=sys.stderr)
+        return 2
+    old, new = old["queries"], new["queries"]
 
     flagged = []
     for name, t_new in sorted(new.items()):

@@ -1,12 +1,12 @@
 #!/usr/bin/env python
-"""Materialize a K-fold scale-up of the sf0.1 test tables for plan-cost
-TREND measurement (r6 verdict item 3: "validate the zero-spill
-invariant one order of magnitude up").
+"""Materialize a K-fold scale-up of the sf0.1 test tables, the input of
+tools/scale_oracle_sweep.py (the registry checked against DuckDB one
+order of magnitude up).
 
 This data is a MEASUREMENT HARNESS, not test data: oracle checks and
 pytest stay on the driver-generated /root/testdata SFs; the scaled
-replica exists only so tools/plan_cost.py can show that bytes-moved
-ratios and the zero-spill invariant hold when the inputs grow 10x.
+replica exists only so the scale sweep can run the registry on 10x
+inputs.
 
 Scaling model — each copy i gets keys offset by i x (max_key + 1) with
 FOREIGN KEYS offset consistently, so referential integrity (and

@@ -5,7 +5,7 @@ query on Spark AND its DuckDB oracle at the given sf_dir, compare
 canonicalized values, and write a JSON artifact.
 
 This is a CORRECTNESS receipt, not a timing one — host load does not
-affect it, so no calibration admission block.  It extends the
+affect it, so it records no host-load probes.  It extends the
 correctness ladder sf0.01 (driver, per-round) -> sf0.1 (r10 builder
 sweep, 309/309) by another order of magnitude.
 

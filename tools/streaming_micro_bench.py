@@ -20,11 +20,10 @@ Run:  python tools/streaming_micro_bench.py [sf_dir] [n_batches]
       (defaults: $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1, 8)
 Writes STREAMING_BENCH.json next to the repo's other artifacts.
 
-This is a measurement harness, not a timed driver artifact: it shares
-bench.py's host-calibration block so a loaded-window run is
-diagnosable, but there is no admission gate — the numbers are a
-baseline for the next optimization pass, not a round-over-round
-comparison.
+This is a measurement harness, not a timed driver artifact: it records
+perfbench's host-load probes (``harness.probes``) so a loaded-window run
+is diagnosable; nothing is gated on them — the numbers are a baseline
+for the next optimization pass, not a round-over-round comparison.
 """
 
 from __future__ import annotations
@@ -38,6 +37,7 @@ import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
+sys.path.append(os.path.join(_REPO, "perfbench"))
 
 EVENT_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -79,7 +79,7 @@ def main() -> None:
     )
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 8
 
-    from bench import host_calibration
+    from harness import probes
     from terraform_aws_lambda_kinesis_to_s3_spark.session import get_spark
     from terraform_aws_lambda_kinesis_to_s3_spark.streaming.drift import (
         run_type_drift_monitor,
@@ -166,7 +166,7 @@ def main() -> None:
         "n_source_files": len(parts),
         "rows_in": n_rows,
         "monitors": out,
-        "overhead_components": host_calibration(spark),
+        "probes": probes(spark),
     }
     path = os.path.join(_REPO, "STREAMING_BENCH.json")
     with open(path, "w") as f:

@@ -19,9 +19,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from terraform_aws_lambda_kinesis_to_s3_spark.sources.tables import TABLES  # noqa: E402
 
 
 # single source of truth: the pytest oracle gate's canonicalization
