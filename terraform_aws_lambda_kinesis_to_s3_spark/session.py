@@ -5,8 +5,15 @@ same settings (AQE on, UTC session tz, Arrow on) are the ones you want
 at 100 TB — AQE handles skew-join splitting and partition coalescing at
 runtime, Arrow keeps the few Python passes batch-transferred.
 
-In local mode the ``file:`` FileSystem is ``jvm/NioLocalFileSystem.java``
-(see :func:`_local_fs_conf`), compiled once with the JDK's ``javac``.
+For ``local`` masters (see :func:`_local_conf`):
+
+- the ``file:`` FileSystem is ``jvm/NioLocalFileSystem.java``, compiled
+  once with the JDK's ``javac``;
+- the Python workers find this package through their ``PYTHONPATH``,
+  whatever the driver's working directory and environment;
+- on Python < 3.13 the Python worker daemon is
+  :mod:`~terraform_aws_lambda_kinesis_to_s3_spark.worker_daemon`, whose
+  zip import caches last across tasks.
 """
 
 from __future__ import annotations
@@ -17,6 +24,7 @@ import os
 import re
 import shutil
 import subprocess
+import sys
 import tempfile
 
 import pyspark
@@ -24,9 +32,13 @@ from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+_JVM_DIR = os.path.join(_PACKAGE_DIR, "jvm")
 _FS_SOURCE = os.path.join(_JVM_DIR, "NioLocalFileSystem.java")
 _FS_CLASS = "kinesis_to_s3.fs.NioLocalFileSystem"
+_DAEMON_MODULE = __package__ + ".worker_daemon"
+#: settings that hold an ``os.pathsep`` list
+_PATH_KEYS = ("spark.driver.extraClassPath", "spark.executorEnv.PYTHONPATH")
 
 
 def _compiled_fs() -> str | None:
@@ -78,7 +90,7 @@ def _compiled_fs() -> str | None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _local_fs_conf(master: str) -> dict[str, str]:
+def _nio_fs_conf() -> dict[str, str]:
     """Settings that make ``file:`` the fork-free ``NioLocalFileSystem``,
     for the ``FileSystem`` and the ``FileContext`` APIs both.
 
@@ -86,14 +98,10 @@ def _local_fs_conf(master: str) -> dict[str, str]:
     every file and directory it creates (sink output, committer,
     checkpoint) and ``readlink`` for every path a ``FileContext`` rename
     checks. The replacement does both with system calls and keeps the
-    stock checksum layer, so the files on disk are the same. Only for ``local`` masters, where the driver is the one
-    executor JVM and ``spark.driver.extraClassPath`` reaches every task.
-    Empty (the stock FileSystem) for any other master, when no
-    ``javac`` is found, or when this process already runs a JVM that
-    cannot load the class.
+    stock checksum layer, so the files on disk are the same. Empty (the
+    stock FileSystem) when no ``javac`` is found, or when this process
+    already runs a JVM that cannot load the class.
     """
-    if not re.fullmatch(r"local(\[[^\]]*\])?", master):
-        return {}
     classes = _compiled_fs()
     if classes is None:
         return {}
@@ -107,6 +115,39 @@ def _local_fs_conf(master: str) -> dict[str, str]:
         "spark.hadoop.fs.file.impl": _FS_CLASS,
         "spark.hadoop.fs.AbstractFileSystem.file.impl": _FS_CLASS + "$Fs",
     }
+
+
+def _local_conf(master: str) -> dict[str, str]:
+    """Settings for a ``local`` master, where the driver is the one
+    executor JVM and forks the Python workers itself; empty for any
+    other master, which keeps Spark's defaults (there the package may
+    reach the executors with ``--py-files``, after their daemon starts).
+
+    - ``file:`` is the ``NioLocalFileSystem`` (:func:`_nio_fs_conf`).
+    - The workers' ``PYTHONPATH`` holds this package's parent directory:
+      the passes they run are pickled by reference to its modules.
+    - On Python < 3.13 (the workers run the driver's minor version) the
+      worker daemon is :mod:`.worker_daemon`, which stops each task from
+      re-reading ``pyspark.zip``; 3.13 made that re-read lazy.
+    """
+    if not re.fullmatch(r"local(\[[^\]]*\])?", master):
+        return {}
+    conf = _nio_fs_conf()
+    conf["spark.executorEnv.PYTHONPATH"] = os.path.dirname(_PACKAGE_DIR)
+    if sys.version_info < (3, 13):
+        conf["spark.python.daemon.module"] = _DAEMON_MODULE
+    return conf
+
+
+def _merged_conf(master: str, extra_conf: dict[str, str] | None) -> dict[str, str]:
+    """:func:`_local_conf` with the caller's ``extra_conf`` over it; the
+    caller's value of a path-list key is appended to the local one."""
+    conf = _local_conf(master)
+    for k, v in (extra_conf or {}).items():
+        if k in _PATH_KEYS and k in conf:
+            v = os.pathsep.join((conf[k], v))
+        conf[k] = v
+    return conf
 
 
 def local_cores() -> int:
@@ -151,12 +192,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )
-    conf = _local_fs_conf(master)
-    for k, v in (extra_conf or {}).items():
-        if k == "spark.driver.extraClassPath" and k in conf:
-            v = os.pathsep.join((conf[k], v))
-        conf[k] = v
-    for k, v in conf.items():
+    for k, v in _merged_conf(master, extra_conf).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -111,8 +111,11 @@ def _query_conf(spark: SparkSession, checkpoint: str) -> dict[str, str]:
       dedup emits a key's first copy at once.
     - On ``file:``, the ``FileSystem`` checkpoint manager. Spark's
       default, ``FileContext``, renames there by checking the target
-      first, and that check forks a ``readlink`` process per checkpoint
-      file. HDFS and object stores keep the default. The file source's
+      first. In local mode ``session.get_spark``'s ``NioLocalFileSystem``
+      answers that check without a fork; with a non-local master and
+      no libhadoop, Hadoop's stock local FS forks a ``readlink`` process
+      per checkpoint file for it, and this switch avoids that. HDFS and
+      object stores keep the default. The file source's
       own log (``sources/``) is opened by the query's thread after
       ``start()`` returns, so it takes whichever manager the session
       has by then; either one reads the other's files.

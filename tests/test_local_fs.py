@@ -1,5 +1,6 @@
-"""The fork-free ``file:`` FileSystem (``jvm/NioLocalFileSystem.java``)
-and the Python passes that keep no row queue.
+"""``session.get_spark``'s local-mode settings: the fork-free ``file:``
+FileSystem (``jvm/NioLocalFileSystem.java``), the Python workers'
+``PYTHONPATH`` and daemon; and the Python passes that keep no row queue.
 
 Without libhadoop, Hadoop's stock local FileSystem forks ``chmod`` for
 every file and directory it creates. ``session.get_spark`` swaps in a
@@ -107,28 +108,60 @@ def test_sticky_bit_takes_stock_path(spark, tmp_path):
 
 
 def test_non_local_master_keeps_stock_fs():
+    """No FS, worker path or daemon setting: the stock FS and daemon."""
     for master in ("spark://host:7077", "yarn", "local-cluster[2,1,1024]", "k8s://h:443"):
-        assert S._local_fs_conf(master) == {}, master
+        assert S._local_conf(master) == {}, master
 
 
 @needs_nio_fs
 @pytest.mark.parametrize("master", ["local", "local[4]", "local[*]", "local[4,2]"])
 def test_local_master_sets_nio_fs(master):
-    conf = S._local_fs_conf(master)
+    conf = S._local_conf(master)
     assert conf["spark.hadoop.fs.file.impl"] == S._FS_CLASS
     assert conf["spark.hadoop.fs.AbstractFileSystem.file.impl"] == S._FS_CLASS + "$Fs"
     assert os.path.isdir(conf["spark.driver.extraClassPath"])
+    assert conf["spark.executorEnv.PYTHONPATH"] == REPO
+    if sys.version_info < (3, 13):
+        assert conf["spark.python.daemon.module"] == "terraform_aws_lambda_kinesis_to_s3_spark.worker_daemon"
+
+
+def test_python_313_keeps_stock_daemon(monkeypatch):
+    """3.13 re-reads zip directories lazily: no daemon module there, the
+    rest of the local settings unchanged."""
+    before = S._local_conf("local[4]")
+    monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
+    conf = S._local_conf("local[4]")
+    assert "spark.python.daemon.module" not in conf
+    before.pop("spark.python.daemon.module", None)
+    assert conf == before
+
+
+def test_caller_path_lists_are_appended():
+    """A caller's ``extra_conf`` value for a path-list key is appended to
+    the local one, not put in its place; other keys are replaced."""
+    local = S._local_conf("local[2]")
+    extra = {
+        "spark.executorEnv.PYTHONPATH": "/x",
+        "spark.driver.extraClassPath": "/y.jar",
+        "spark.driver.memory": "1g",
+    }
+    conf = S._merged_conf("local[2]", extra)
+    assert conf["spark.executorEnv.PYTHONPATH"] == os.pathsep.join((REPO, "/x"))
+    cp = local.get("spark.driver.extraClassPath")
+    assert conf["spark.driver.extraClassPath"] == (os.pathsep.join((cp, "/y.jar")) if cp else "/y.jar")
+    assert conf["spark.driver.memory"] == "1g"
+    assert S._merged_conf("yarn", extra) == extra
 
 
 _CENSUS = textwrap.dedent(
     """
-    import json, os, sys
+    import base64, glob, gzip, json, os, sys
+    sys.path.insert(0, sys.argv[2])
     from terraform_aws_lambda_kinesis_to_s3_spark.config import PipelineConfig
     from terraform_aws_lambda_kinesis_to_s3_spark.functions.decoders import kpl_aggregate_bytes
     from terraform_aws_lambda_kinesis_to_s3_spark.job import run_batch
     from terraform_aws_lambda_kinesis_to_s3_spark.session import get_spark
     from terraform_aws_lambda_kinesis_to_s3_spark.streaming.job import run_stream, stream_source
-    import base64, gzip
 
     work, log = sys.argv[1], os.environ["CHMOD_LOG"]
 
@@ -137,6 +170,10 @@ _CENSUS = textwrap.dedent(
             return 0
         return sum(work in line for line in open(log))
 
+    def records(out):
+        return sum(len(gzip.open(p).read().splitlines())
+                   for p in glob.glob(os.path.join(out, "**", "*.gz"), recursive=True))
+
     spark = get_spark(app_name="census", master="local[2]", shuffle_partitions=2,
                       extra_conf={"spark.driver.memory": "1g"})
     cfg = PipelineConfig(unknown_date="2024-06-01")
@@ -144,7 +181,11 @@ _CENSUS = textwrap.dedent(
     def rec(i, t="2024-01-01"):
         return json.dumps({"log_type": "t%d" % (i % 3), "log_id": str(i), "time": t}).encode()
 
-    blobs = [rec(0), gzip.compress(rec(1)), kpl_aggregate_bytes([rec(2), rec(3, "Tue, 02 Jan 2024 10:00:00 +0900")])]
+    cw = {"messageType": "DATA_MESSAGE", "owner": "1", "logGroup": "g", "logStream": "s",
+          "subscriptionFilters": ["f"],
+          "logEvents": [{"id": str(i), "timestamp": i, "message": rec(i).decode()} for i in (4, 5)]}
+    blobs = [rec(0), gzip.compress(rec(1)), gzip.compress(json.dumps(cw).encode()),
+             kpl_aggregate_bytes([rec(2), rec(3, "Tue, 02 Jan 2024 10:00:00 +0900")])]
     src = os.path.join(work, "events")
     os.makedirs(src)
     with open(os.path.join(src, "e.json"), "w") as f:
@@ -168,46 +209,70 @@ _CENSUS = textwrap.dedent(
     raw.initialize(jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration())
     raw.create(jvm.org.apache.hadoop.fs.Path("file://" + os.path.join(work, "control"))).close()
     control = forks() - batch - stream
-    print(json.dumps({"batch": batch, "stream": stream, "control": control}))
+    written = {"batch": records(os.path.join(work, "batch")),
+               "stream": records(os.path.join(work, "stream"))}
+    print(json.dumps({"batch": batch, "stream": stream, "control": control, "records": written}))
     spark.stop()
     """
 )
 
 
-@needs_nio_fs
-def test_job_forks_no_chmod_or_readlink(tmp_path):
-    """A session with logging ``chmod`` and ``readlink`` shims first on
-    ``PATH`` sees no invocation over a small ``run_batch`` (all four
-    encodings) and an ``availableNow`` ``run_stream``; a stock
-    ``RawLocalFileSystem`` in the same JVM shows the shim is live."""
-    shim = tmp_path / "bin"
+@pytest.fixture(scope="module")
+def census(tmp_path_factory):
+    """A small ``run_batch`` (all four encodings) and an ``availableNow``
+    ``run_stream`` in a subprocess with logging ``chmod`` and
+    ``readlink`` shims first on ``PATH``. Its driver finds the package
+    only through ``sys.path``: its working directory is outside the
+    repository and its environment has no ``PYTHONPATH``. Returns the
+    finished process and the shims' log."""
+    tmp = tmp_path_factory.mktemp("census")
+    shim = tmp / "bin"
     shim.mkdir()
     for cmd in ("chmod", "readlink"):
         (shim / cmd).write_text(
             f'#!/bin/sh\necho {cmd} "$@" >> "$CHMOD_LOG"\nexec {shutil.which(cmd)} "$@"\n'
         )
         (shim / cmd).chmod(0o755)
-    work = tmp_path / "work"
+    work = tmp / "work"
     work.mkdir()
-    log = tmp_path / "forks.log"
-    env = dict(
-        os.environ,
-        PATH=f"{shim}{os.pathsep}{os.environ['PATH']}",
-        CHMOD_LOG=str(log),
-        PYTHONPATH=os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")])),
-    )
+    log = tmp / "forks.log"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(PATH=f"{shim}{os.pathsep}{os.environ['PATH']}", CHMOD_LOG=str(log))
     done = subprocess.run(
-        [sys.executable, "-c", _CENSUS, str(work)],
+        [sys.executable, "-c", _CENSUS, str(work), REPO],
+        cwd=tmp,
         env=env,
         capture_output=True,
         text=True,
         timeout=600,
     )
+    return done, log
+
+
+def _census_counts(census) -> dict:
+    done, _ = census
     assert done.returncode == 0, done.stderr[-3000:]
-    counts = json.loads(done.stdout.strip().splitlines()[-1])
+    return json.loads(done.stdout.strip().splitlines()[-1])
+
+
+@needs_nio_fs
+def test_job_forks_no_chmod_or_readlink(census):
+    """The census sees no shim invocation over the batch and the stream;
+    a stock ``RawLocalFileSystem`` in the same JVM shows the shim is
+    live."""
+    counts = _census_counts(census)
+    log = census[1]
     forks = log.read_text() if log.exists() else ""
     assert counts["batch"] == 0 and counts["stream"] == 0, forks
     assert counts["control"] >= 1, counts
+
+
+def test_workers_import_package_outside_repo(census):
+    """The passes the Python workers run are pickled by reference to the
+    package's modules: a driver outside the repository still gets every
+    record written, because ``get_spark`` puts the package on the
+    workers' ``PYTHONPATH``."""
+    assert _census_counts(census)["records"] == {"batch": 6, "stream": 10}
 
 
 def _plans(spark) -> dict[int, str]:
@@ -280,7 +345,7 @@ def test_jvm_started_without_class_keeps_stock_fs(tmp_path):
         from terraform_aws_lambda_kinesis_to_s3_spark import session as S
 
         SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false").getOrCreate().stop()
-        assert S._local_fs_conf("local[1]") == {}
+        assert S._nio_fs_conf() == {}
         spark = S.get_spark(app_name="late", master="local[1]", extra_conf={"spark.driver.memory": "1g"})
         spark.range(3).selectExpr("string(id)").write.text(sys.argv[1])
         print(spark.read.text(sys.argv[1]).count())
