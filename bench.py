@@ -130,15 +130,22 @@ def sweep(bench: harness.Bench, names: list[str], sf_dir: str) -> dict:
         "cold_first_run": cold,
         "receipts": receipts,
         "warmup_s": round(warmup_s, 3),
-        "stamps": {
-            "nproc": harness.nproc(),
-            "cores": spark.sparkContext.defaultParallelism,
-            "sf": os.path.basename(os.path.normpath(sf_dir)),
-            "rev": _rev(),
-            "spark": spark.version,
-            "python": platform.python_version(),
-            **{k: round(v, 4) for k, v in bench.probes.items()},
-        },
+        "stamps": stamps(spark, sf_dir, bench.probes),
+    }
+
+
+def stamps(spark, sf_dir: str, probes: dict) -> dict:
+    """What a bench artifact is compared on: nproc, session cores, sf,
+    git rev, Spark and Python, with the host-load ``probes`` as
+    context."""
+    return {
+        "nproc": harness.nproc(),
+        "cores": spark.sparkContext.defaultParallelism,
+        "sf": os.path.basename(os.path.normpath(sf_dir)),
+        "rev": _rev(),
+        "spark": spark.version,
+        "python": platform.python_version(),
+        **{k: round(v, 4) for k, v in probes.items()},
     }
 
 

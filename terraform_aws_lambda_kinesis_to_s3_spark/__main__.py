@@ -9,7 +9,9 @@ Usage:
 Envelope/routing config comes from the same env vars the reference's
 Terraform wires into the Lambda (LOG_TYPE_FIELD, LOG_ID_FIELD,
 LOG_TIMESTAMP_FIELD, LOG_TYPE_UNKNOWN_PREFIX, LOG_TYPE_WHITELIST,
-LOG_S3_PREFIX, TZ — /root/reference/main.tf:41-52).
+LOG_S3_PREFIX, TZ — /root/reference/main.tf:41-52). Without
+``--output`` the sink is ``s3a://<LOG_S3_BUCKET>`` (LOG_BUCKET is an
+alias); with neither set the CLI exits with a usage error.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ def main(argv: list[str] | None = None) -> int:
 
     b = sub.add_parser("batch", help="batch backfill of a record directory")
     b.add_argument("--input", required=True)
-    b.add_argument("--output", required=True)
+    b.add_argument("--output")
     b.add_argument("--kinesis-event", action="store_true",
                    help="input is Lambda-event JSON with base64 Data blobs")
     b.add_argument("--exact-layout", action="store_true",
@@ -35,7 +37,7 @@ def main(argv: list[str] | None = None) -> int:
 
     s = sub.add_parser("stream", help="streaming run over a landing directory")
     s.add_argument("--input", required=True)
-    s.add_argument("--output", required=True)
+    s.add_argument("--output")
     s.add_argument("--checkpoint", required=True)
     s.add_argument("--dedup-watermark", default="1 hour",
                    help="replay-dedup window; 'off' disables")
@@ -44,6 +46,10 @@ def main(argv: list[str] | None = None) -> int:
 
     args = ap.parse_args(argv)
     cfg = PipelineConfig.from_env()
+    if args.output is None:
+        if not cfg.log_bucket:
+            ap.error("--output is required when LOG_S3_BUCKET is not set")
+        args.output = f"s3a://{cfg.log_bucket}"
     spark = get_spark(app_name=f"kinesis_to_s3_{args.mode}")
 
     if args.mode == "batch":

@@ -44,10 +44,9 @@ class PipelineConfig:
     log_type_unknown_prefix: str = "unknown"
     log_type_whitelist: tuple[str, ...] = ()
 
-    # timestamp handling (main.tf:43, variables.tf:1-4;
-    # timestamp_required=True at lambda/main.py:63)
+    # timestamp handling (main.tf:43, variables.tf:1-4); a timestamp is
+    # always required, as at lambda/main.py:63
     timezone: str = "UTC"
-    timestamp_required: bool = True
     # dateutil-parity fallback for non-ISO timestamps (README.md:15);
     # ISO8601 stays on the JVM fast path, fallback is an Arrow batch UDF.
     permissive_timestamps: bool = True

@@ -88,15 +88,19 @@ def extract_envelope(
 
 
 def validate(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Add ``valid``: JSON object + required envelope fields present.
+    """Add ``valid``: JSON object + required envelope fields present,
+    the timestamp included.
 
     Reference: parse_payload_to_log_dict(..., timestamp_required=True)
     (lambda/main.py:54-64); failures are routed, never dropped.
     """
-    ok = F.col("is_json") & F.col("log_type").isNotNull() & F.col("log_id").isNotNull()
-    if cfg.timestamp_required:
-        ok = ok & F.col("ts").isNotNull()
-    return df.withColumn("valid", ok)
+    return df.withColumn(
+        "valid",
+        F.col("is_json")
+        & F.col("log_type").isNotNull()
+        & F.col("log_id").isNotNull()
+        & F.col("ts").isNotNull(),
+    )
 
 
 def apply_whitelist(df: DataFrame, cfg: PipelineConfig) -> DataFrame:

@@ -5,28 +5,16 @@ stream — the streaming counterpart of the batch
 whose FEED is live: a schema-stable stream whose type mix shifts
 silently is the failure neither schema profiling nor volume alerts see.
 
-Dataflow per micro-batch (foreachBatch):
-
-    batch ── (day, event_type) partial counts ──> census/run=<t>/batch=N
-                                 │
-                                 └─ read full census ─ JS(latest vs
-                                    previous day) ─ append to metrics
-
-State contract (same ladder as streaming/ingest.py):
-
-- the census directory holds PER-BATCH PARTIAL count files under
-  ``run=<token>/batch=N`` — a same-run retried batch OVERWRITES its own
-  partial instead of double-counting (exactly-once for the common
-  at-least-once retry);
-- a replay from a fresh checkpoint appends a second copy of every
-  partial — counts double, but the drift readout is COUNT-SCALE
-  INVARIANT (JS compares per-day *distributions*; scaling every
-  (day, type) count by the same factor leaves them unchanged), so the
-  signal survives at-least-once delivery without distinct-tracking
-  state.  Exact counts need the history-anti-join pattern from
-  streaming/ingest.py; drift does not.
-- within one batch, exact same-record re-deliveries collapse via
-  dropDuplicates on event_id.
+Each micro-batch writes its (day, event_type) partial counts through
+the partial-merge driver (streaming/partials.py, which states the
+run/batch state ladder); the readout is the JS of the latest day
+against the previous one over the whole census.  This monitor's rung:
+a replay from a fresh checkpoint doubles every count, but the drift
+readout is COUNT-SCALE INVARIANT (JS compares per-day *distributions*;
+scaling every (day, type) count by the same factor leaves them
+unchanged), so the signal survives at-least-once delivery without
+distinct-tracking state.  Within one batch, exact same-record
+re-deliveries collapse via dropDuplicates on event_id.
 
 The JS math matches the batch query exactly: full outer day-pairing at
 the (day, type) grain, probability 0 for types absent on one side,
@@ -38,9 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from terraform_aws_lambda_kinesis_to_s3_spark.streaming.ingest import (
-    _hadoop_path_exists,
-    _run_token,
+from terraform_aws_lambda_kinesis_to_s3_spark.streaming.partials import (
+    run_partial_merge,
 )
 
 
@@ -96,48 +83,26 @@ def run_type_drift_monitor(
     StreamingQuery.
 
     ``metrics``: driver-side list; each micro-batch appends
-    ``{batch_id, n_days, latest_day, latest_js, alert}`` AFTER the
-    census write (a failed batch is never recorded; consumers dedupe
-    on batch_id, last entry wins).  ``alert`` fires when the newest
-    day-over-day JS exceeds ``alert_threshold``."""
-    # pure function of the checkpoint location: a restart recovering
-    # from the same checkpoint overwrites the same run/batch subdirs
-    # (exactly-once across restarts, not just same-process retries); a
-    # fresh checkpoint still gets its own token (see ingest._run_token)
-    run_token = _run_token(checkpoint)
+    ``{batch_id, n_days, latest_day, latest_js, alert}`` after the
+    census write.  ``alert`` fires when the newest day-over-day JS
+    exceeds ``alert_threshold``."""
 
-    def drift_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = daily_type_census(batch_df)
-        subdir = f"run={run_token}/batch={batch_id}"
-        partial.write.mode("overwrite").parquet(f"{census_path}/{subdir}")
-        if metrics is None:
-            return
-        census = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(census_path)
-            if _hadoop_path_exists(spark, census_path)
-            else partial
-        )
-        js = js_day_over_day(census).orderBy(F.col("d").desc()).limit(1)
-        row = js.collect()
-        n_days = census.select("d").distinct().count()
+    def readout(census: DataFrame) -> dict:
+        row = js_day_over_day(census).orderBy(F.col("d").desc()).limit(1).collect()
         latest = row[0] if row else None
-        metrics.append(
-            {
-                "batch_id": batch_id,
-                "n_days": n_days,
-                "latest_day": str(latest.d) if latest else None,
-                "latest_js": latest.js_divergence if latest else None,
-                "alert": bool(latest and latest.js_divergence > alert_threshold),
-            }
-        )
+        return {
+            "n_days": census.select("d").distinct().count(),
+            "latest_day": str(latest.d) if latest else None,
+            "latest_js": latest.js_divergence if latest else None,
+            "alert": bool(latest and latest.js_divergence > alert_threshold),
+        }
 
-    writer = (
-        event_stream.writeStream.foreachBatch(drift_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return run_partial_merge(
+        event_stream,
+        census_path,
+        checkpoint,
+        lambda batch_df, _: daily_type_census(batch_df),
+        readout,
+        metrics,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -4,13 +4,9 @@ counterpart of the batch ``topk_shard_merge_eval``, for the feed where
 "who are the top users and HOW SURE are we" must be answerable after
 every batch without keeping a full per-key census forever.
 
-Dataflow per micro-batch (foreachBatch):
-
-    batch ── per-key census, keep top K' + threshold ──>
-                                 summaries/run=<t>/batch=N
-                     │
-                     └─ read all summaries ─ merge ─ bound-checked
-                        top-10 ─ append to metrics
+Each micro-batch writes its top-K' summary through the partial-merge
+driver (streaming/partials.py, which states the run/batch state
+ladder); the readout merges every summary into a bound-checked top-10.
 
 Merge math (identical to the batch eval, streamed): a key absent from
 batch b's summary had at most ``thr_b`` occurrences there, so
@@ -27,31 +23,18 @@ registry query ``hh_merge_bounds`` (plans/queries.py) runs this
 module's hh_partial/hh_merged_topk over a static shard split against
 an independent DuckDB reconstruction of the bounds.
 
-State contract — alongside streaming/quantiles.py on the replay
-ladder (both are count-state, unlike the HLL's max-state):
-
-- per-batch summaries land under ``run=<token>/batch=N`` where the
-  token is a PURE FUNCTION of the checkpoint location: a same-run
-  retried batch OVERWRITES its own summary, and — because a driver
-  restart recovering from the SAME checkpoint derives the SAME token —
-  a re-delivered batch after a crash-restart also overwrites rather
-  than double-counting.  Exactly-once across both retries and the
-  standard checkpoint-recovery restart path, not just within one
-  process lifetime.  Pinned by
-  tests/test_streaming_heavyhitters.py::test_restart_same_checkpoint_absorbed.
-- a replay from a FRESH checkpoint (a different location → a different
-  token) appends a second copy of every summary: absolute counts and
-  absolute bounds DOUBLE, but the top-k ORDERING, every frequency
-  FRACTION (lower/total), and the RELATIVE bound (bound/total) are
-  exactly unchanged — uniform scaling cancels in every ratio.  Pinned
-  by
-  tests/test_streaming_heavyhitters.py::test_streaming_replay_ranking_invariant.
-- state size is O(K' x batches) per run regardless of key cardinality
-  — the 1000-executor story and the laptop story are the same plan:
-  one per-batch census (the shuffle the batch query would pay anyway)
-  pruned to its top rows by a two-stage rank (per-salt-group truncate,
-  then a global re-rank over the <= (k+1) x NSALT survivors), so no
-  stage ever sorts the full distinct-key census on one partition.
+This monitor's rung sits with streaming/quantiles.py (both are count
+state, unlike the HLL's max state): a replay from a fresh checkpoint
+appends a second copy of every summary, so absolute counts and
+absolute bounds DOUBLE, but the top-k ORDERING, every frequency
+FRACTION (lower/total), and the RELATIVE bound (bound/total) are
+exactly unchanged — uniform scaling cancels in every ratio.  Pinned by
+tests/test_streaming_heavyhitters.py::test_streaming_replay_ranking_invariant.
+State size is O(K' x batches) per run regardless of key cardinality:
+one per-batch census pruned to its top rows by a two-stage rank
+(per-salt-group truncate, then a global re-rank over the <= (k+1) x
+NSALT survivors), so no stage sorts the full distinct-key census on
+one partition.
 """
 
 from __future__ import annotations
@@ -59,9 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from terraform_aws_lambda_kinesis_to_s3_spark.streaming.ingest import (
-    _hadoop_path_exists,
-    _run_token,
+from terraform_aws_lambda_kinesis_to_s3_spark.streaming.partials import (
+    run_partial_merge,
 )
 
 SUMMARY_K = 20
@@ -237,52 +219,28 @@ def run_heavyhitter_monitor(
 
     ``metrics``: driver-side list; each micro-batch appends
     ``{batch_id, topk: [(key, est_count, upper_count, est_frac,
-    bound_frac), ...]}`` AFTER the summary write.
+    bound_frac), ...]}`` after the summary write."""
 
-    The run token is derived from ``checkpoint`` (not a fresh uuid) so
-    a driver restart recovering from the same checkpoint overwrites
-    the same ``run=<t>/batch=N`` subdirs — the re-delivered batch is
-    absorbed instead of double-counted (see module docstring)."""
-    run_token = _run_token(checkpoint)
+    def partial(batch_df: DataFrame, batch_key: str) -> DataFrame:
+        return hh_partial(batch_df, key_col, summary_k).withColumn(
+            "__batch", F.lit(batch_key)
+        )
 
-    def summary_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = hh_partial(batch_df, key_col, summary_k).withColumn(
-            "__batch", F.lit(f"{run_token}/{batch_id}")
-        )
-        subdir = f"run={run_token}/batch={batch_id}"
-        partial.write.mode("overwrite").parquet(f"{summaries_path}/{subdir}")
-        if metrics is None:
-            return
-        summaries = (
-            spark.read.option("recursiveFileLookup", "true").parquet(
-                summaries_path
-            )
-            if _hadoop_path_exists(spark, summaries_path)
-            else partial
-        )
+    def readout(summaries: DataFrame) -> dict:
         rows = hh_merged_topk(summaries, top_k).collect()
-        metrics.append(
-            {
-                "batch_id": batch_id,
-                "topk": [
-                    (
-                        r.key,
-                        r.est_count,
-                        r.upper_count,
-                        r.est_frac,
-                        r.bound_frac,
-                    )
-                    for r in rows
-                ],
-            }
-        )
+        return {
+            "topk": [
+                (r.key, r.est_count, r.upper_count, r.est_frac, r.bound_frac)
+                for r in rows
+            ]
+        }
 
-    writer = (
-        event_stream.writeStream.foreachBatch(summary_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return run_partial_merge(
+        event_stream,
+        summaries_path,
+        checkpoint,
+        partial,
+        readout,
+        metrics,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

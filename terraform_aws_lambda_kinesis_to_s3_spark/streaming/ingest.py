@@ -18,15 +18,12 @@ re-read, never the curated corpus itself (same contract as the batch
 ``incremental_dedup_check``). foreachBatch is at-least-once on retry,
 so idempotency is layered twice:
 
-- curated/ and history/ are written with per-batch OVERWRITE into
-  ``run=<token>/batch=N`` subdirectories — a retried batch N inside
-  one run replaces its own output instead of appending a second copy,
-  and distinct runs (fresh checkpoints renumber batches from 0) can
-  never overwrite each other's data;
+- curated/ and history/ are partial piles (streaming/partials.py, which
+  states the run/batch state ladder): a retried batch replaces its own
+  output instead of appending a second copy;
 - documents re-DELIVERED in a later batch (or a replay from a fresh
   checkpoint) are removed by the anti-join against the history
-  fingerprints, which is read with recursiveFileLookup so any
-  directory nesting (or an older flat layout) is tolerated.
+  fingerprints.
 
 rejected/ is an at-least-once AUDIT LOG (plain append): a replayed
 batch may append duplicate reject rows; consumers deduplicate on
@@ -39,30 +36,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from terraform_aws_lambda_kinesis_to_s3_spark.operators import textops as X
+from terraform_aws_lambda_kinesis_to_s3_spark.streaming.job import start_query
+from terraform_aws_lambda_kinesis_to_s3_spark.streaming.partials import PartialPile
 
-
-def _hadoop_path_exists(spark, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API, so any
-    scheme the cluster can read (s3a://, hdfs://, file:) works — a
-    driver-local os.path.exists would silently disable cross-batch
-    dedup on object stores."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
-def _run_token(checkpoint: str) -> str:
-    """Run identity for monitor state paths, derived from the
-    checkpoint location.  A driver restart that recovers from the SAME
-    checkpoint (the standard streaming recovery path) must overwrite
-    the same ``run=<t>/batch=N`` subdirs so a re-delivered batch is
-    absorbed, not double-counted; a replay from a FRESH checkpoint (a
-    different location) gets a different token and appends.  Hash of
-    the raw location string: scheme-agnostic, no filesystem call."""
-    import hashlib
-
-    return hashlib.md5(checkpoint.encode("utf-8")).hexdigest()[:12]
 
 #: quality-gate threshold on textops.quality_features' composite score
 QUALITY_MIN_SCORE = 0.55
@@ -102,26 +78,19 @@ def run_corpus_ingest(
     the persisted gated stage, so they cost aggregates over cached
     data, not extra source scans).
 
-    Guarantee ladder (honest accounting — exactly-once across
-    arbitrary crash points needs a transactional table format, which
-    is the documented production swap):
+    Guarantee ladder beyond the partial piles' own (honest accounting —
+    exactly-once across arbitrary crash points needs a transactional
+    table format, which is the documented production swap):
 
-    - same-run retry of a micro-batch (the common at-least-once case):
-      EXACTLY-ONCE — the batch overwrites its own run/batch
-      subdirectory;
-    - driver restart recovering from the SAME checkpoint: the run
-      token is a pure function of the checkpoint location, so the
-      re-delivered batch overwrites the same run/batch subdirectory —
-      the crashed attempt's partial curated/history writes for that
-      batch are replaced, not duplicated (this closes the
-      curated-written-history-not-yet window for the recovery path;
-      both recovery-path crash points are pinned by
+    - a driver restart recovering from the SAME checkpoint re-delivers
+      a batch into the same run/batch subdirectory, so the crashed
+      attempt's partial curated/history writes for that batch are
+      replaced, not duplicated (both crash points are pinned by
       ``test_restart_same_checkpoint_absorbed`` in
       tests/test_streaming_ingest.py);
-    - replay from a FRESH checkpoint (a different location; batch
-      numbering restarts): no loss, no duplicates — a different token
-      means no directory collision with prior runs, and re-delivered
-      docs anti-join away against history;
+    - replay from a FRESH checkpoint: no loss, no duplicates — a new
+      run token means no directory collision with prior runs, and
+      re-delivered docs anti-join away against history;
     - driver death between the curated and history writes followed by
       a NEW process on a NEW checkpoint: that one batch may be curated
       twice (at-least-once). Writing history first would turn the same
@@ -129,7 +98,8 @@ def run_corpus_ingest(
       ``rejected`` sink is mode("append") and stays at-least-once
       across restarts; consumers dedupe on (batch_id, doc_id).
     """
-    run_token = _run_token(checkpoint)
+    curated = PartialPile(curated_path, checkpoint)
+    history = PartialPile(history_path, checkpoint)
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -146,17 +116,10 @@ def run_corpus_ingest(
             # an at-least-once source can deliver the identical record
             # twice inside one micro-batch — collapse to one survivor
             kept = kept.dropDuplicates(["fp"])
-            # incremental dedup: anti-join the O(distinct-fp) history.
-            # recursiveFileLookup reads every parquet file regardless of
-            # the run/batch directory nesting (and tolerates a mix of
-            # flat and nested layouts from older writers).
-            if _hadoop_path_exists(spark, history_path):
-                history = (
-                    spark.read.option("recursiveFileLookup", "true")
-                    .parquet(history_path)
-                    .select("fp")
-                )
-                kept = kept.join(history, "fp", "left_anti")
+            # incremental dedup: anti-join the O(distinct-fp) history,
+            # which does not exist until a batch accepts a document
+            if history.exists(spark):
+                kept = kept.join(history.read(spark).select("fp"), "fp", "left_anti")
             accepted = kept.select(
                 "doc_id", "text", "lang", "source", "fp"
             ).persist()
@@ -165,13 +128,8 @@ def run_corpus_ingest(
                 "doc_id", "source", "reject_reason"
             ).write.mode("append").parquet(rejected_path)
             if n_new:
-                subdir = f"run={run_token}/batch={batch_id}"
-                accepted.write.mode("overwrite").parquet(
-                    f"{curated_path}/{subdir}"
-                )
-                accepted.select("fp").write.mode("overwrite").parquet(
-                    f"{history_path}/{subdir}"
-                )
+                curated.write(accepted, batch_id)
+                history.write(accepted.select("fp"), batch_id)
             if metrics is not None:
                 # appended AFTER the writes: a batch whose write fails
                 # is never recorded. Like the rejected sink, this is
@@ -190,11 +148,6 @@ def run_corpus_ingest(
             if accepted is not None:
                 accepted.unpersist()
 
-    writer = (
-        doc_stream.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_query(
+        doc_stream.writeStream.foreachBatch(ingest_batch), checkpoint, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

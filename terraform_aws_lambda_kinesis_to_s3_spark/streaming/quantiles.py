@@ -16,38 +16,19 @@ gives a relative-error-style guarantee (bucket width is ~the octave),
 the honest HDR-histogram-without-sub-buckets tradeoff; the batch-side
 ``quantile_bucket_sweep`` prices what finer geometry would buy.
 
-Dataflow per micro-batch (foreachBatch):
-
-    batch ── (bucket, count) census ──> buckets/run=<t>/batch=N
-                          │
-                          └─ read all partials ─ SUM-merge ─
-                             interpolate ─ append to metrics
-
-State contract — the rung BETWEEN streaming/drift.py and
-streaming/sketches.py on the replay ladder:
-
-- per-batch partial censuses land under ``run=<token>/batch=N`` where
-  the token is a PURE FUNCTION of the checkpoint location: a same-run
-  retried batch OVERWRITES its own partial, and a driver restart
-  recovering from the SAME checkpoint derives the SAME token, so a
-  re-delivered batch after a crash-restart also overwrites — exactly-
-  once across both retries and the standard checkpoint-recovery
-  restart path (pinned by tests/test_streaming_quantiles.py::
-  test_restart_same_checkpoint_absorbed);
-- a replay from a FRESH checkpoint (a different location → a different
-  token) appends a second copy of every partial.  Counts are ADDITIVE, so unlike HLL registers the total
-  mass doubles — but every quantile estimate is EXACTLY unchanged:
-  interpolation depends only on relative mass (before/n and c/n both
-  scale by the same factor), so the monitor's actual deliverable is
-  replay-INVARIANT even though its internal counts are not.  (drift.py
-  gets ratio scale-invariance; sketches.py gets absolute idempotence;
-  this sits in between: absolute counts wrong under full replay,
-  quantile readout exact.)  Pinned by
-  tests/test_streaming_quantiles.py::test_streaming_replay_quantiles_invariant.
-- state size is O(log max_value) per run regardless of stream length —
-  ~40 buckets for any 2-decimal domain below 5e9; the 1000-executor
-  story and the laptop story are the same plan: per-partition partial
-  censuses, one bounded sum-merge.
+Each micro-batch writes its (bucket, count) census through the
+partial-merge driver (streaming/partials.py, which states the
+run/batch state ladder); the readout SUM-merges every partial and
+interpolates.  This monitor's rung sits between streaming/drift.py and
+streaming/sketches.py: a replay from a fresh checkpoint appends a
+second copy of every partial, so unlike HLL registers the total mass
+doubles — but every quantile estimate is EXACTLY unchanged:
+interpolation depends only on relative mass (before/n and c/n both
+scale by the same factor), so the monitor's deliverable is
+replay-INVARIANT even though its internal counts are not.  Pinned by
+tests/test_streaming_quantiles.py::test_streaming_replay_quantiles_invariant.
+State size is O(log max_value) per run regardless of stream length —
+~40 buckets for any 2-decimal domain below 5e9.
 """
 
 from __future__ import annotations
@@ -55,9 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from terraform_aws_lambda_kinesis_to_s3_spark.streaming.ingest import (
-    _hadoop_path_exists,
-    _run_token,
+from terraform_aws_lambda_kinesis_to_s3_spark.streaming.partials import (
+    run_partial_merge,
 )
 
 MONITOR_QS = (0.5, 0.9, 0.99)
@@ -136,49 +116,25 @@ def run_quantile_monitor(
     StreamingQuery.
 
     ``metrics``: driver-side list; each micro-batch appends
-    ``{batch_id, n_total, p50, p90, p99}`` AFTER the census write (a
-    failed batch is never recorded; consumers dedupe on batch_id,
-    last entry wins).
+    ``{batch_id, n_total, p50, p90, p99}`` after the census write."""
 
-    The run token is derived from ``checkpoint`` (not a fresh uuid) so
-    a driver restart recovering from the same checkpoint overwrites
-    the same ``run=<t>/batch=N`` subdirs — the re-delivered batch is
-    absorbed instead of double-counted (see module docstring)."""
-    run_token = _run_token(checkpoint)
-
-    def census_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = bucket_partial(batch_df, value_col)
-        subdir = f"run={run_token}/batch={batch_id}"
-        partial.write.mode("overwrite").parquet(f"{buckets_path}/{subdir}")
-        if metrics is None:
-            return
-        census = (
-            spark.read.option("recursiveFileLookup", "true").parquet(
-                buckets_path
-            )
-            if _hadoop_path_exists(spark, buckets_path)
-            else partial
-        )
+    def readout(census: DataFrame) -> dict | None:
         rows = {r.q: r for r in quantile_estimate(census).collect()}
         if not rows:
-            return
-        any_row = next(iter(rows.values()))
-        metrics.append(
-            {
-                "batch_id": batch_id,
-                "n_total": any_row.n_total,
-                "p50": rows[0.5].v_est,
-                "p90": rows[0.9].v_est,
-                "p99": rows[0.99].v_est,
-            }
-        )
+            return None
+        return {
+            "n_total": next(iter(rows.values())).n_total,
+            "p50": rows[0.5].v_est,
+            "p90": rows[0.9].v_est,
+            "p99": rows[0.99].v_est,
+        }
 
-    writer = (
-        event_stream.writeStream.foreachBatch(census_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return run_partial_merge(
+        event_stream,
+        buckets_path,
+        checkpoint,
+        lambda batch_df, _: bucket_partial(batch_df, value_col),
+        readout,
+        metrics,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

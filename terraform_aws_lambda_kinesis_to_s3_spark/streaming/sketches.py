@@ -4,28 +4,16 @@ the batch ``hll_distinct_users`` query, for the feed where "how many
 distinct users have we EVER seen" must be answerable after every batch
 without ever storing the distinct set itself.
 
-Dataflow per micro-batch (foreachBatch):
-
-    batch ── (register, max rank) partial ──> registers/run=<t>/batch=N
-                                  │
-                                  └─ read all partials ─ max-merge ─
-                                     estimate ─ append to metrics
-
-State contract — one rung ABOVE the ladder in streaming/drift.py:
-
-- per-batch partial registers land under ``run=<token>/batch=N``; a
-  same-run retried batch OVERWRITES its own partial (exactly-once for
-  the common at-least-once retry), same as the census pattern;
-- a replay from a fresh checkpoint appends a second copy of every
-  partial — and the estimate is UNCHANGED, exactly.  Registers merge
-  by max, and max is idempotent: duplicate partials are absorbed, so
-  the monitor gives exactly-once-equivalent answers under at-least-once
-  delivery with NO distinct-tracking state.  (The drift monitor only
-  gets scale-INVARIANCE of a ratio; counts themselves double.  The
-  ingest path needs a history anti-join.  The sketch needs nothing.)
-- state size is O(256) per run regardless of stream length — the
-  1000-executor story and the laptop story are the same plan: partial
-  registers per partition, one bounded max-merge.
+Each micro-batch writes its (register, max rank) partial through the
+partial-merge driver (streaming/partials.py, which states the
+run/batch state ladder); the readout max-merges every partial and
+estimates.  This monitor's rung is the top of the ladder: a replay
+from a fresh checkpoint appends a second copy of every partial and the
+estimate is UNCHANGED, exactly.  Registers merge by max, and max is
+idempotent, so duplicate partials are absorbed and the monitor gives
+exactly-once-equivalent answers under at-least-once delivery with NO
+distinct-tracking state.  State size is O(256) per run regardless of
+stream length.
 
 The estimate math is ``operators.sketches.hll_estimate_from_registers``
 — the identical exact-integer combine the batch query and its DuckDB
@@ -43,9 +31,8 @@ from terraform_aws_lambda_kinesis_to_s3_spark.operators.sketches import (
     hll_estimate_from_registers,
     hll_register_rank,
 )
-from terraform_aws_lambda_kinesis_to_s3_spark.streaming.ingest import (
-    _hadoop_path_exists,
-    _run_token,
+from terraform_aws_lambda_kinesis_to_s3_spark.streaming.partials import (
+    run_partial_merge,
 )
 
 
@@ -82,44 +69,19 @@ def run_distinct_monitor(
     the StreamingQuery.
 
     ``metrics``: driver-side list; each micro-batch appends
-    ``{batch_id, n_registers_set, estimate}`` AFTER the register write
-    (a failed batch is never recorded; consumers dedupe on batch_id,
-    last entry wins)."""
-    # pure function of the checkpoint location: a restart recovering
-    # from the same checkpoint overwrites the same run/batch subdirs
-    # (exactly-once across restarts; for max-merged registers this is
-    # belt-and-braces — duplicates are absorbed anyway); a fresh
-    # checkpoint still gets its own token (see ingest._run_token)
-    run_token = _run_token(checkpoint)
+    ``{batch_id, n_registers_set, estimate}`` after the register
+    write."""
 
-    def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = hll_partial(batch_df, id_col)
-        subdir = f"run={run_token}/batch={batch_id}"
-        partial.write.mode("overwrite").parquet(f"{registers_path}/{subdir}")
-        if metrics is None:
-            return
-        registers = (
-            spark.read.option("recursiveFileLookup", "true").parquet(
-                registers_path
-            )
-            if _hadoop_path_exists(spark, registers_path)
-            else partial
-        )
+    def readout(registers: DataFrame) -> dict:
         row = hll_estimate(registers).collect()[0]
-        metrics.append(
-            {
-                "batch_id": batch_id,
-                "n_registers_set": row.n_registers_set,
-                "estimate": row.hll_est,
-            }
-        )
+        return {"n_registers_set": row.n_registers_set, "estimate": row.hll_est}
 
-    writer = (
-        event_stream.writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return run_partial_merge(
+        event_stream,
+        registers_path,
+        checkpoint,
+        lambda batch_df, _: hll_partial(batch_df, id_col),
+        readout,
+        metrics,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -60,6 +60,30 @@ def test_cli_batch_payload_and_kinesis_event(spark, tmp_path):
     assert gzip.open(files2[0], "rt").read().strip() == payload.decode()
 
 
+def test_cli_output_defaults_to_log_s3_bucket(spark, monkeypatch, capsys):
+    """Without --output the sink is s3a://<LOG_S3_BUCKET>, the
+    reference's bucket setting; with neither the CLI exits with a usage
+    error instead of starting a job."""
+    import pytest
+
+    import terraform_aws_lambda_kinesis_to_s3_spark.job as job
+    from terraform_aws_lambda_kinesis_to_s3_spark.__main__ import main
+
+    for name in ("LOG_S3_BUCKET", "LOG_BUCKET"):
+        monkeypatch.delenv(name, raising=False)
+    with pytest.raises(SystemExit) as exc:
+        main(["batch", "--input", "/in"])
+    assert exc.value.code == 2
+    assert "LOG_S3_BUCKET" in capsys.readouterr().err
+
+    calls = []
+    monkeypatch.setattr(job, "run_batch", lambda *a, **kw: calls.append(a))
+    monkeypatch.setenv("LOG_S3_BUCKET", "my-logs")
+    assert main(["batch", "--input", "/in"]) == 0
+    assert main(["batch", "--input", "/in", "--output", "/out"]) == 0
+    assert [c[2] for c in calls] == ["s3a://my-logs", "/out"]
+
+
 def test_bench_coverage_is_total():
     """Every registry query is benched or carries a documented
     exclusion: EXCLUDED is a subset of REGISTRY, every exclusion has a

@@ -20,10 +20,11 @@ Run:  python tools/streaming_micro_bench.py [sf_dir] [n_batches]
       (defaults: $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1, 8)
 Writes STREAMING_BENCH.json next to the repo's other artifacts.
 
-This is a measurement harness, not a timed driver artifact: it records
-perfbench's host-load probes (``harness.probes``) so a loaded-window run
-is diagnosable; nothing is gated on them — the numbers are a baseline
-for the next optimization pass, not a round-over-round comparison.
+The artifact carries ``bench.py``'s stamps (nproc, session cores, sf,
+git rev, Spark, Python, and perfbench's host-load probes as context),
+so a run from another host, scale or revision is told apart; nothing
+is gated on them.  perfbench does not run the monitors, so this file is
+their only performance receipt.
 """
 
 from __future__ import annotations
@@ -79,6 +80,7 @@ def main() -> None:
     )
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 8
 
+    from bench import stamps
     from harness import probes
     from terraform_aws_lambda_kinesis_to_s3_spark.session import get_spark
     from terraform_aws_lambda_kinesis_to_s3_spark.streaming.drift import (
@@ -166,7 +168,7 @@ def main() -> None:
         "n_source_files": len(parts),
         "rows_in": n_rows,
         "monitors": out,
-        "probes": probes(spark),
+        "stamps": stamps(spark, sf_dir, probes(spark)),
     }
     path = os.path.join(_REPO, "STREAMING_BENCH.json")
     with open(path, "w") as f:
