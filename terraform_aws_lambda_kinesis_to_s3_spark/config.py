@@ -45,11 +45,9 @@ class PipelineConfig:
     log_type_whitelist: tuple[str, ...] = ()
 
     # timestamp handling (main.tf:43, variables.tf:1-4); a timestamp is
-    # always required, as at lambda/main.py:63
+    # always required, as at lambda/main.py:63, and parsed as dateutil
+    # would (README.md:15): see functions.timestamps.with_timestamp
     timezone: str = "UTC"
-    # dateutil-parity fallback for non-ISO timestamps (README.md:15);
-    # ISO8601 stays on the JVM fast path, fallback is an Arrow batch UDF.
-    permissive_timestamps: bool = True
 
     # source (main.tf:56-62, variables.tf:16-18, 50-53)
     batch_size: int = 100

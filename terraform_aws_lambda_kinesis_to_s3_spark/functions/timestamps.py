@@ -59,7 +59,7 @@ def _require_dateutil() -> None:
         raise RuntimeError(
             "permissive timestamp parsing requires python-dateutil on the "
             "driver and executors (reference parity: README.md:15, "
-            "python-dateutil==2.8.1); install it or pass permissive=False"
+            "python-dateutil==2.8.1); install it"
         )
 
 
@@ -125,20 +125,18 @@ def _dateutil_batches(text_col: str):
     return parse_dateutil
 
 
-def with_timestamp(df: DataFrame, text_col: str, permissive: bool = True) -> DataFrame:
+def with_timestamp(df: DataFrame, text_col: str) -> DataFrame:
     """Replace the string column ``text_col`` with the timestamp column
     ``ts``: NULL when unparseable.
 
-    :func:`parse_timestamp`'s JVM chain first; if ``permissive``, rows
-    failing every JVM format are retried through dateutil in one
-    ``mapInArrow`` pass that sees the text only on those rows. Spark
-    cannot prune columns through that pass, so every column of ``df``
-    travels through Python: pass only what the caller needs downstream.
+    :func:`parse_timestamp`'s JVM chain first; rows failing every JVM
+    format are retried through dateutil in one ``mapInArrow`` pass that
+    sees the text only on those rows. Spark cannot prune columns through
+    that pass, so every column of ``df`` travels through Python: pass
+    only what the caller needs downstream.
     """
-    jvm = parse_timestamp(F.col(text_col))
-    if not permissive:
-        return df.withColumn("ts", jvm).drop(text_col)
     _require_dateutil()
+    jvm = parse_timestamp(F.col(text_col))
     df = df.withColumn("ts", jvm).withColumn(text_col, F.when(jvm.isNull(), F.col(text_col)))
     schema = T.StructType([f for f in df.schema.fields if f.name != text_col])
     return df.mapInArrow(_dateutil_batches(text_col), schema)

@@ -2,8 +2,8 @@
 
 Reference semantics (``/root/reference/lambda/main.py:39-64`` plus the
 README contract ``README.md:9-15``), re-expressed as pure Catalyst
-column expressions — no Python in this module except the optional
-dateutil timestamp pass (see ``functions.timestamps``):
+column expressions — no Python in this module except the dateutil
+timestamp pass (see ``functions.timestamps``):
 
 - A3 JSON parse + invalid-row detection  (lambda/main.py:48-52)
 - A4 configurable-key field extraction   (lambda/main.py:27-29,58-60)
@@ -43,10 +43,8 @@ ROUTE_COLUMNS = ("log_type", "log_id", "ts", "valid", "route", "ym", "dd")
 _CORRUPT = "__corrupt_record__"
 
 
-def extract_envelope(
-    df: DataFrame, cfg: PipelineConfig, payload_col: str = "payload"
-) -> DataFrame:
-    """Parse the JSON payload and extract the 3-field envelope.
+def extract_envelope(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Parse the ``payload`` column and extract the 3-field envelope.
 
     Adds: ``log_type``, ``log_id`` (strings; NULL when missing or when
     the payload is not a JSON object), ``ts`` (timestamp; NULL when
@@ -58,11 +56,11 @@ def extract_envelope(
     out of the same parse — the payload is scanned once, JVM-side.
     Non-string field values (nested/number) surface as their JSON text
     and then fail timestamp/routing validation, mirroring the
-    reference's dict.get + dateutil behavior. With
-    ``cfg.permissive_timestamps`` every column of ``df`` passes through
-    the dateutil ``mapInArrow`` pass (:func:`with_timestamp`).
+    reference's dict.get + dateutil behavior. Every column of ``df``
+    passes through the dateutil ``mapInArrow`` pass
+    (:func:`with_timestamp`).
     """
-    p = F.col(payload_col)
+    p = F.col("payload")
     schema = T.StructType(
         [
             T.StructField(cfg.log_type_field, T.StringType()),
@@ -84,7 +82,7 @@ def extract_envelope(
         .withColumn("__time", F.when(is_json, e[cfg.log_timestamp_field]))
         .drop("__env")
     )
-    return with_timestamp(df, "__time", cfg.permissive_timestamps)
+    return with_timestamp(df, "__time")
 
 
 def validate(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -145,7 +143,7 @@ def route_records_on_envelope(
     route, partition dates, optional non-JSON drop.
 
     The parse->validate prefix (``validate(extract_envelope(...))``)
-    depends only on the envelope field names and timestamp flags, NOT
+    depends only on the envelope field names, NOT
     on the whitelist or timezone — so callers that route the same
     payloads under several post-stage configs can share one (possibly
     persisted) envelope and pay only this narrow projection per config.
@@ -158,19 +156,16 @@ def route_records_on_envelope(
     return out
 
 
-def route_records(
-    df: DataFrame,
-    cfg: PipelineConfig | None = None,
-    payload_col: str = "payload",
-) -> DataFrame:
-    """The full A3-A11 pipeline: payload strings in, routed records out.
+def route_records(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
+    """The full A3-A11 pipeline: ``payload`` strings in, routed records
+    out.
 
     ``cfg.non_json_to_unknown=False`` drops non-JSON payloads (as-built
     reference behavior silently skips them, lambda/main.py:50-52).
     """
     cfg = cfg or PipelineConfig()
     return route_records_on_envelope(
-        validate(extract_envelope(df, cfg, payload_col), cfg), cfg
+        validate(extract_envelope(df, cfg), cfg), cfg
     )
 
 

@@ -2,18 +2,27 @@
 
 The reference writes one gzipped JSON-lines object per (log_type,
 YYYY-MM, DD) group under ``%prefix%/%log_type%/YYYY-MM/DD/`` with
-collision-free names (``README.md:13-14``). Spark equivalents:
+collision-free names (``README.md:13-14``). This module is the one
+place that layout is spelled out, for every writer of routed records:
+the batch job, the stream's file sink and compaction. The layout's
+root is the dataset path plus ``cfg.log_path_prefix`` (reference
+LOG_S3_PREFIX, lambda/main.py:23). Spark equivalents:
 
-- **hive layout (default, idiomatic)**: dynamic-partition write
-  ``partitionBy("log_type","ym","dd")`` — no shuffle, each task
-  streams its rows straight into the right partition directory, and
-  task-attempt file naming already guarantees uniqueness (the
-  reference needed ``log_id`` in the object name for that).
+- **hive layout (default, idiomatic)**: ``log_type=T/ym=M/dd=D/``
+  under the root, a dynamic-partition write ``partitionBy("log_type",
+  "ym","dd")``. Rows are first hash-repartitioned onto those columns
+  into ``defaultParallelism`` tasks, so each directory receives files
+  from one task instead of every task (without it, T tasks x P
+  partitions make T*P tiny gzip objects). Task-attempt file naming
+  already guarantees unique names (the reference needed ``log_id`` in
+  the object name for that). A stream writes it through Spark's file
+  sink, whose ``_spark_metadata`` log under the root makes it
+  exactly-once with the checkpoint.
 - **exact layout (compat)**: the reference's two-segment
-  ``%log_type%/YYYY-MM/DD/`` path. Implemented as the same dynamic
-  write into a staging dir, then renames through the Hadoop
-  FileSystem API — metadata-only on file:// and HDFS, one COPY per
-  object on S3A (functional, but prefer the hive layout there).
+  ``%log_type%/YYYY-MM/DD/`` path. Implemented as the same hive write
+  into a staging dir, then renames through the Hadoop FileSystem
+  API — metadata-only on file:// and HDFS, one COPY per object on
+  S3A (functional, but prefer the hive layout there).
 
 Payloads are written verbatim (``text`` writer, gzip codec), so output
 content round-trips the input JSON byte-for-byte — the reference never
@@ -24,8 +33,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from terraform_aws_lambda_kinesis_to_s3_spark.config import PipelineConfig
 
@@ -50,67 +60,81 @@ def _fs(spark: SparkSession, path: str, what: str):
         ) from None
 
 
+def _root(path: str, cfg: PipelineConfig) -> str:
+    return os.path.join(path, cfg.log_path_prefix) if cfg.log_path_prefix else path
+
+
+def _rows(routed: DataFrame) -> DataFrame:
+    """Routed records (from ``route_records``) as the layout's columns."""
+    return routed.select(
+        F.col("payload").alias("value"), F.col("route").alias("log_type"), "ym", "dd"
+    )
+
+
+def _hive(rows: DataFrame, root: str, *salt: Column):
+    """The hive layout's writer for ``rows`` (value, log_type, ym, dd)
+    at ``root``: clustered onto the partition columns (plus ``salt``),
+    gzip ``text`` files under ``partitionBy``. A ``DataFrameWriter``
+    in append mode for a batch ``rows``, a ``DataStreamWriter`` for a
+    streaming one."""
+    n = rows.sparkSession.sparkContext.defaultParallelism
+    rows = rows.repartition(n, *_PARTITION_COLS, *salt)
+    writer = rows.writeStream if rows.isStreaming else rows.write.mode("append")
+    return (
+        writer.partitionBy(*_PARTITION_COLS)
+        .option("compression", "gzip")
+        .format("text")
+        .option("path", root)
+    )
+
+
+def _read(spark: SparkSession, root: str) -> DataFrame:
+    """A hive-layout dataset at ``root`` as (value, log_type, ym, dd),
+    all strings: partition type inference would read ``dd=02`` as the
+    integer 2, which a rewrite then writes back as ``dd=2``."""
+    return (
+        spark.read.format("text")
+        .schema("value string, log_type string, ym string, dd string")
+        .option("basePath", root)
+        .load(root + "/log_type=*/ym=*/dd=*")
+    )
+
+
 def write_routed(
     df: DataFrame,
     path: str,
     cfg: PipelineConfig | None = None,
     exact_layout: bool = False,
-    payload_col: str = "payload",
-    mode: str = "append",
-    format: str = "text",
-    cluster_output: bool = True,
 ) -> None:
-    """Write a routed DataFrame (from ``route_records``) partitioned by
-    (log_type, ym, dd).
-
-    ``cluster_output`` (default) hash-repartitions rows onto their
-    partition columns before the dynamic write, so each output
-    directory receives files from one task instead of every task —
-    without it, T tasks x P partitions produces T*P tiny gzip objects
-    (the small-files problem at its source). Disable only when the
-    input is already clustered by the partition keys.
-
-    ``format="text"`` (default) is reference-compatible gzip JSON-lines
-    — payloads verbatim. ``format="parquet"`` is the analytics landing
-    variant: typed envelope columns (log_id, ts) beside the raw
-    payload, zstd-compressed, ready for predicate/partition pruning by
-    downstream queries. ``path`` is the dataset root;
-    ``cfg.log_path_prefix`` is appended (reference LOG_S3_PREFIX,
-    lambda/main.py:23).
-    """
+    """Append a routed DataFrame (from ``route_records``) under
+    ``path`` plus ``cfg.log_path_prefix``, in the hive layout or, with
+    ``exact_layout``, the reference's ``%log_type%/YYYY-MM/DD/``."""
     cfg = cfg or PipelineConfig()
-    root = os.path.join(path, cfg.log_path_prefix) if cfg.log_path_prefix else path
+    root = _root(path, cfg)
     if exact_layout:
         _fs(df.sparkSession, root, "exact_layout restage")  # fail before writing
     target = root if not exact_layout else root + "__stage"
-    if cluster_output:
-        n = df.sparkSession.sparkContext.defaultParallelism
-        df = df.repartition(n, F.col("route"), F.col("ym"), F.col("dd"))
-    if format == "parquet":
-        out = df.select(
-            F.col(payload_col).alias("payload"),
-            F.col("log_id"),
-            F.col("ts"),
-            F.col("route").alias("log_type"),
-            F.col("ym"),
-            F.col("dd"),
-        )
-        writer = out.write.mode(mode).partitionBy(*_PARTITION_COLS).option(
-            "compression", "zstd"
-        ).format("parquet")
-    else:
-        out = df.select(
-            F.col(payload_col).alias("value"),
-            F.col("route").alias("log_type"),
-            F.col("ym"),
-            F.col("dd"),
-        )
-        writer = out.write.mode(mode).partitionBy(*_PARTITION_COLS).option(
-            "compression", "gzip"
-        ).format("text")
-    writer.save(target)
+    _hive(_rows(df), target).save()
     if exact_layout:
         _restage_exact(df.sparkSession, target, root)
+
+
+def stream_routed(
+    df: DataFrame, path: str, cfg: PipelineConfig, exact_layout: bool = False
+) -> DataStreamWriter:
+    """The unstarted sink of a routed stream, laid out as
+    :func:`write_routed` lays out a batch.
+
+    The hive layout is Spark's file sink: exactly-once. ``exact_layout``
+    sends each micro-batch through :func:`write_routed` by
+    ``foreachBatch``, which is at-least-once on retry (the reference's
+    own guarantee, main.tf:56-62).
+    """
+    if exact_layout:
+        return df.writeStream.foreachBatch(
+            lambda batch, _: write_routed(batch, path, cfg, exact_layout=True)
+        )
+    return _hive(_rows(df), _root(path, cfg))
 
 
 #: Schemes where a Hadoop FS rename is a true metadata-only move.  On
@@ -178,13 +202,8 @@ def read_routed(
     spark: SparkSession, path: str, cfg: PipelineConfig | None = None
 ) -> DataFrame:
     """Read back a hive-layout routed dataset (payload + partition cols)."""
-    cfg = cfg or PipelineConfig()
-    root = os.path.join(path, cfg.log_path_prefix) if cfg.log_path_prefix else path
-    return (
-        spark.read.format("text")
-        .option("basePath", root)
-        .load(root + "/log_type=*/ym=*/dd=*")
-        .withColumnRenamed("value", "payload")
+    return _read(spark, _root(path, cfg or PipelineConfig())).withColumnRenamed(
+        "value", "payload"
     )
 
 
@@ -193,14 +212,15 @@ def compact_partitions(
     root: str,
     files_per_partition: int = 1,
 ) -> int:
-    """Compact a hive-layout routed dataset's small files.
+    """Compact the small files of a hive-layout routed dataset at
+    ``root`` (the dataset path plus its prefix).
 
     Partitioned streaming sinks accumulate one file per task per
     micro-batch; at 100 TB that is the classic small-files problem
     (S3 listing + open overhead dominates reads). This rewrites each
     (log_type, ym, dd) partition into ``files_per_partition`` files
-    via a repartition-by-partition-columns write to a staging dir,
-    then swaps directories. Returns the number of data files after
+    through the layout's own clustered write into a staging dir, then
+    swaps directories. Returns the number of data files after
     compaction.
 
     The rewrite is one parallel Spark job: hash-repartitioning on the
@@ -215,24 +235,9 @@ def compact_partitions(
     table format's commit protocol there).
     """
     fs = _fs(spark, root, "compact_partitions")
-    df = (
-        spark.read.format("text")
-        .option("basePath", root)
-        .load(root + "/log_type=*/ym=*/dd=*")
-    )
     stage = root + "__compact"
-    keys = [F.col(c) for c in _PARTITION_COLS]
-    if files_per_partition > 1:
-        keys.append(F.crc32(F.col("value")) % files_per_partition)
-    n = spark.sparkContext.defaultParallelism
-    (
-        df.repartition(n, *keys)
-        .write.mode("overwrite")
-        .partitionBy(*_PARTITION_COLS)
-        .option("compression", "gzip")
-        .format("text")
-        .save(stage)
-    )
+    salt = [F.crc32(F.col("value")) % files_per_partition] if files_per_partition > 1 else []
+    _hive(_read(spark, root), stage, *salt).mode("overwrite").save()
     old = root + "__old"
     root_p, stage_p, old_p = (_jpath(spark, p) for p in (root, stage, old))
     fs.delete(old_p, True)

@@ -14,11 +14,12 @@ write, at-least-once with whole-batch retry. Spark mapping:
 - dedup: ``dropDuplicatesWithinWatermark`` on ``log_id`` bounds the
   at-least-once replay window with finite state (SURVEY.md §7 hard
   part d — unbounded dropDuplicates state would not survive 100 TB).
-- sink: partitioned gzip JSON files + checkpoint = exactly-once (an
-  upgrade over the reference's at-least-once, SURVEY.md §4).
+- sink: the batch job's partitioned gzip JSON layout
+  (``sinks.stream_routed``) + checkpoint = exactly-once (an upgrade
+  over the reference's at-least-once, SURVEY.md §4).
 - trigger: a live stream polls its source once a second, like the
   reference's shard poll, and runs a micro-batch only when data arrived
-  (see :func:`_query_conf` for the per-batch costs this avoids).
+  (see :data:`_QUERY_CONF` for the per-batch costs this avoids).
 """
 
 from __future__ import annotations
@@ -32,6 +33,8 @@ from pyspark.sql import functions as F
 from terraform_aws_lambda_kinesis_to_s3_spark.config import PipelineConfig
 from terraform_aws_lambda_kinesis_to_s3_spark.functions.decoders import decode_records
 from terraform_aws_lambda_kinesis_to_s3_spark.operators.envelope import route_records
+from terraform_aws_lambda_kinesis_to_s3_spark.sinks import stream_routed
+from terraform_aws_lambda_kinesis_to_s3_spark.streaming.metrics import observe_routes
 
 
 def stream_source(
@@ -39,7 +42,6 @@ def stream_source(
     cfg: PipelineConfig,
     format: str = "file",
     path: str | None = None,
-    schema: str = "payload string",
 ) -> DataFrame:
     """Source factory — the engine's one production-boundary seam.
     Every format yields the same shape: a ``payload`` string column of
@@ -94,48 +96,17 @@ def stream_source(
     raise ValueError(f"unknown stream source format: {format}")
 
 
-#: Spark's checkpoint file manager over the Hadoop ``FileSystem`` API
-_FS_CHECKPOINT_MANAGER = (
-    "org.apache.spark.sql.execution.streaming.checkpointing."
-    "FileSystemBasedCheckpointFileManager"
-)
-
-
-def _query_conf(spark: SparkSession, checkpoint: str) -> dict[str, str]:
-    """Session settings every query :func:`start_query` starts runs under.
-
-    - No no-data micro-batches: in :func:`run_stream` the arrival-time
-      watermark moves on every data batch, so Spark would follow each
-      one with an empty batch (offsets, commit and state deltas) that
-      evicts nothing under an hour-long watermark. Expired dedup keys
-      are evicted by the next data batch instead; output is unchanged,
-      because the dedup emits a key's first copy at once. The
-      ``foreachBatch`` monitors and the corpus ingest hold no stateful
-      operator in their streaming plans, and Spark runs a no-data batch
-      only for a stateful operator, so the setting changes nothing
-      there.
-    - On ``file:``, the ``FileSystem`` checkpoint manager. Spark's
-      default, ``FileContext``, renames there by checking the target
-      first. In local mode ``session.get_spark``'s ``NioLocalFileSystem``
-      answers that check without a fork; with a non-local master and
-      no libhadoop, Hadoop's stock local FS forks a ``readlink`` process
-      per checkpoint file for it, and this switch avoids that. HDFS and
-      object stores keep the default. The file source's
-      own log (``sources/``) is opened by the query's thread after
-      ``start()`` returns, so it takes whichever manager the session
-      has by then; either one reads the other's files.
-    """
-    conf = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    hadoop_fs = spark._jvm.org.apache.hadoop.fs
-    scheme = hadoop_fs.Path(checkpoint).toUri().getScheme()
-    if scheme is None:
-        # a path without a scheme is on the default file system, as
-        # Spark resolves the checkpoint
-        hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
-        scheme = hadoop_fs.FileSystem.getDefaultUri(hadoop_conf).getScheme()
-    if scheme == "file":
-        conf["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINT_MANAGER
-    return conf
+#: Session settings every query :func:`start_query` starts runs under:
+#: no no-data micro-batches. In :func:`run_stream` the arrival-time
+#: watermark moves on every data batch, so Spark would follow each one
+#: with an empty batch (offsets, commit and state deltas) that evicts
+#: nothing under an hour-long watermark. Expired dedup keys are evicted
+#: by the next data batch instead; output is unchanged, because the
+#: dedup emits a key's first copy at once. The ``foreachBatch`` monitors
+#: and the corpus ingest hold no stateful operator in their streaming
+#: plans, and Spark runs a no-data batch only for a stateful operator,
+#: so the setting changes nothing there.
+_QUERY_CONF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
 
 @contextmanager
@@ -170,8 +141,7 @@ def start_query(
         {"availableNow": True} if available_now else {"processingTime": "1 second"}
     )
     writer = writer.option("checkpointLocation", checkpoint).trigger(**trigger)
-    spark = writer._spark
-    with _session_conf(spark, _query_conf(spark, checkpoint)):
+    with _session_conf(writer._spark, _QUERY_CONF):
         return writer.start()
 
 
@@ -183,33 +153,24 @@ def run_stream(
     dedup_watermark: str | None = "1 hour",
     available_now: bool = True,
     exact_layout: bool = False,
-    observe: bool = True,
 ):
-    """Route a payload stream into the partitioned gzip JSON sink.
+    """Route a payload stream into the partitioned gzip JSON sink
+    (``sinks.stream_routed``), under ``out_path`` plus the configured
+    prefix, where ``job.run_batch`` writes the same records.
 
     Returns the StreamingQuery (caller awaits termination).
     ``available_now=True`` drains everything currently available and
     stops — the batch-replay trigger used in tests and backfills;
     otherwise the query polls its source once a second.
-
     ``exact_layout=True`` writes the reference's two-segment
-    ``%log_type%/YYYY-MM/DD/`` layout via ``foreachBatch`` (each
-    micro-batch goes through the batch sink). Note: foreachBatch is
-    at-least-once on retry (the reference's own guarantee,
-    main.tf:56-62); the default hive-layout file sink stays
-    exactly-once.
+    ``%log_type%/YYYY-MM/DD/`` layout, at-least-once; the default
+    hive layout is exactly-once.
     """
     cfg = cfg or PipelineConfig()
-    routed = route_records(source, cfg)
-    if observe:
-        # A12 parity: per-batch in/valid/unknown counters computed
-        # inside the batch's own execution (observe = zero extra pass);
-        # surfaced via streaming.metrics.RouteMetricsListener
-        from terraform_aws_lambda_kinesis_to_s3_spark.streaming.metrics import (
-            observe_routes,
-        )
-
-        routed = observe_routes(routed, cfg)
+    # A12 parity: per-batch in/valid/unknown counters computed inside
+    # the batch's own execution (observe = zero extra pass); surfaced
+    # via streaming.metrics.RouteMetricsListener
+    routed = observe_routes(route_records(source, cfg), cfg)
     if dedup_watermark:
         # Replay dedup is a *processing-time* concern (the reference's
         # at-least-once retries arrive minutes apart, regardless of the
@@ -228,28 +189,5 @@ def run_stream(
         routed = routed.withColumn("__arrival_ts", F.current_timestamp())
         routed = routed.withWatermark("__arrival_ts", dedup_watermark)
         routed = routed.dropDuplicatesWithinWatermark(["__dedup_key"])
-    if exact_layout:
-        from terraform_aws_lambda_kinesis_to_s3_spark.sinks import write_routed
-
-        def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-            write_routed(batch_df, out_path, cfg, exact_layout=True)
-
-        writer = routed.writeStream.foreachBatch(sink_batch)
-    else:
-        out = routed.select(
-            F.col("payload").alias("value"),
-            F.col("route").alias("log_type"),
-            "ym",
-            "dd",
-        )
-        # cluster rows onto their partition dirs per micro-batch — else
-        # every task writes a file into every partition (small-files)
-        out = out.repartition(F.col("log_type"), F.col("ym"), F.col("dd"))
-        writer = (
-            out.writeStream.format("text")
-            .partitionBy("log_type", "ym", "dd")
-            .option("compression", "gzip")
-            .option("path", out_path)
-            .outputMode("append")
-        )
+    writer = stream_routed(routed, out_path, cfg, exact_layout)
     return start_query(writer, checkpoint, available_now)

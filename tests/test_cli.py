@@ -6,6 +6,7 @@ import base64
 import glob
 import gzip
 import json
+import os
 
 
 def test_cli_batch_payload_and_kinesis_event(spark, tmp_path):
@@ -58,6 +59,29 @@ def test_cli_batch_payload_and_kinesis_event(spark, tmp_path):
     files2 = glob.glob(f"{out2}/**/*.gz", recursive=True)
     assert any("/b/2024-02/03/" in f for f in files2)
     assert gzip.open(files2[0], "rt").read().strip() == payload.decode()
+
+
+def test_cli_stream_honours_log_s3_prefix(spark, tmp_path, monkeypatch):
+    """``stream`` writes under ``--output`` plus LOG_S3_PREFIX, and a
+    second run on the same checkpoint writes nothing."""
+    from terraform_aws_lambda_kinesis_to_s3_spark.__main__ import main
+
+    monkeypatch.setenv("LOG_S3_PREFIX", "cli-pfx")
+    src = tmp_path / "in"
+    src.mkdir()
+    payload = json.dumps({"log_type": "a", "log_id": "1", "time": "2024-01-02T12:00:00Z"})
+    (src / "p.jsonl").write_text(payload + "\n")
+    out = str(tmp_path / "out")
+    argv = ["stream", "--input", str(src), "--output", out,
+            "--checkpoint", str(tmp_path / "ckpt")]
+    assert main(argv) == 0
+    files = glob.glob(f"{out}/**/*.gz", recursive=True)
+    assert [os.path.dirname(f) for f in files] == [
+        f"{out}/cli-pfx/log_type=a/ym=2024-01/dd=02"
+    ]
+    assert gzip.open(files[0], "rt").read().strip() == payload
+    assert main(argv) == 0
+    assert glob.glob(f"{out}/**/*.gz", recursive=True) == files
 
 
 def test_cli_output_defaults_to_log_s3_bucket(spark, monkeypatch, capsys):

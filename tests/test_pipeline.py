@@ -232,9 +232,9 @@ def test_permissive_requires_dateutil(spark, monkeypatch):
     )
     df = spark.createDataFrame([("2024-01-02",)], "x string")
     with pytest.raises(RuntimeError, match="dateutil"):
-        TS.with_timestamp(df, "x", permissive=True)
+        TS.with_timestamp(df, "x")
     # the strict JVM-only chain stays available
-    TS.with_timestamp(df, "x", permissive=False)
+    df.select(TS.parse_timestamp(df.x)).collect()
 
 
 def test_dateutil_fallback_formats(spark):

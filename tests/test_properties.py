@@ -214,7 +214,7 @@ def test_special_char_log_type_roundtrips_sink(spark, tmp_path):
     p = json.dumps({"log_type": "a/b c", "log_id": "1", "time": "2024-01-02T03:00:00Z"})
     df = spark.createDataFrame([(p,)], "payload string")
     out = str(tmp_path / "sink")
-    write_routed(route_records(df, CFG), out, mode="overwrite")
+    write_routed(route_records(df, CFG), out)
     back = read_routed(spark, out).collect()
     assert back[0].log_type == "a/b c" and back[0].payload == p
 
@@ -421,11 +421,12 @@ def test_with_timestamp_pass_matches_chain(spark, texts):
     dateutil helper on exactly the other rows; columns in order."""
     from terraform_aws_lambda_kinesis_to_s3_spark.functions.timestamps import (
         dateutil_epoch_us,
+        parse_timestamp,
         with_timestamp,
     )
 
     df = spark.createDataFrame(list(enumerate(texts)), "id int, t string")
-    strict = with_timestamp(df, "t", permissive=False)
+    strict = df.withColumn("ts", parse_timestamp(F.col("t"))).drop("t")
     loose = with_timestamp(df, "t")
     assert loose.columns == strict.columns == ["id", "ts"]
     us = F.unix_micros("ts").alias("us")

@@ -237,8 +237,8 @@ def test_stream_resumes_checkpoint_written_under_spark_defaults(
     with monkeypatch.context() as m:
         m.setattr(
             job,
-            "_query_conf",
-            lambda spark, checkpoint: {
+            "_QUERY_CONF",
+            {
                 "spark.sql.streaming.noDataMicroBatches.enabled": "true",
                 "spark.sql.streaming.checkpointFileManagerClass": (
                     "org.apache.spark.sql.execution.streaming.checkpointing."
@@ -264,25 +264,47 @@ def test_stream_resumes_checkpoint_written_under_spark_defaults(
     assert ids == sorted([f"a{j}" for j in range(4)] + [f"b{j}" for j in range(3)])
 
 
-def test_checkpoint_manager_follows_checkpoint_scheme(spark, tmp_path):
-    """Only a checkpoint on ``file:`` takes the FileSystem checkpoint
-    manager; HDFS and object stores keep Spark's default. No-data
-    batches are off either way."""
-    key = "spark.sql.streaming.checkpointFileManagerClass"
-    local = job._query_conf(spark, f"file:{tmp_path}/ckpt")
-    bare = job._query_conf(spark, str(tmp_path / "ckpt"))
-    hdfs = job._query_conf(spark, "hdfs://nn/ckpt")
-    assert local[key] == bare[key] == job._FS_CHECKPOINT_MANAGER
-    assert key not in hdfs
-    for conf in (local, bare, hdfs):
-        assert conf["spark.sql.streaming.noDataMicroBatches.enabled"] == "false"
-    # a bare path takes the default file system's scheme
-    spark.conf.set("fs.defaultFS", "hdfs://nn")
-    try:
-        assert key not in job._query_conf(spark, "/ckpt")
-        assert key in job._query_conf(spark, "file:/ckpt")
-    finally:
-        spark.conf.unset("fs.defaultFS")
+def test_every_writer_roots_output_at_the_prefix(spark, tmp_path):
+    """The configured prefix (the reference's LOG_S3_PREFIX) roots the
+    output of every writer of routed records, batch and stream, hive
+    and exact, and ``read_routed`` reads the batch and the stream hive
+    runs back as the same payloads."""
+    from collections import Counter
+
+    from terraform_aws_lambda_kinesis_to_s3_spark.job import run_batch
+    from terraform_aws_lambda_kinesis_to_s3_spark.sinks import read_routed
+
+    cfg = CFG.with_(log_path_prefix="pfx")
+    src = str(tmp_path / "in")
+    records = [
+        {"log_type": "purchase", "log_id": "p-1", "time": "2024-03-05T10:00:00Z"},
+        {"log_type": "click", "log_id": "c-1", "time": "2024-04-06T02:00:00Z"},
+        {"log_id": "x-1", "time": "2024-03-05T10:00:00Z"},
+        {"log_type": "click", "log_id": "c-2", "time": "not a time"},
+        "not json at all",
+    ]
+    _write_batch(src, "b1.jsonl", records)
+    outs = {}
+    for exact in (False, True):
+        outs["batch", exact] = str(tmp_path / f"batch-{exact}")
+        run_batch(spark, src, outs["batch", exact], cfg, exact_layout=exact)
+        outs["stream", exact] = str(tmp_path / f"stream-{exact}")
+        q = run_stream(
+            stream_source(spark, cfg, "file", src),
+            outs["stream", exact],
+            str(tmp_path / f"ckpt-{exact}"),
+            cfg,
+            exact_layout=exact,
+        )
+        q.awaitTermination(120)
+    for key, out in outs.items():
+        files = glob.glob(f"{out}/**/*.gz", recursive=True)
+        assert files and all(f.startswith(f"{out}/pfx/") for f in files), key
+    assert os.path.isdir(f"{outs['stream', False]}/pfx/_spark_metadata")
+    want = Counter(r if isinstance(r, str) else json.dumps(r) for r in records)
+    for kind in ("batch", "stream"):
+        got = Counter(r.payload for r in read_routed(spark, outs[kind, False], cfg).collect())
+        assert got == want, kind
 
 
 def test_run_stream_leaves_session_conf_unchanged(spark, tmp_path):
