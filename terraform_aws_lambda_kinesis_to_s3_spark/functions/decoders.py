@@ -14,9 +14,15 @@ at ``lambda/requirements.txt:4``):
 
 Spark mapping: base64 and the CloudWatch unwrap are pure JVM column
 expressions (``try_to_binary``, ``from_json`` + ``transform`` + one
-``explode``). KPL and gzip have no Spark builtin, so steps 2-3 plus
-UTF-8 run in one ``mapInArrow`` pass: each blob crosses the Python
-boundary once, as :func:`decode_blob`. A ``mapInArrow`` pass keeps no
+``explode``). The unwrap parses only a text that contains
+``messageType`` literally or a ``\\u`` escape: Spark matches JSON field
+names case-sensitively, and a ``\\uXXXX`` escape is the only way to
+spell that key without its bytes, so any other text cannot be an
+envelope and skips a JSON parse that ``extract_envelope`` would repeat
+(Sparser's "filter before you parse", Palkar et al., VLDB 2018). KPL
+and gzip have no Spark builtin, so steps 2-3 plus UTF-8 run in one
+``mapInArrow`` pass: each blob crosses the Python boundary once, as
+:func:`decode_blob`. A ``mapInArrow`` pass keeps no
 row queue on the JVM side, where an Arrow ``pandas_udf``
 (``ArrowEvalPython``) parks every input row with its Tungsten page and
 Spark's Python monitor thread keeps that page reachable for two seconds
@@ -233,8 +239,17 @@ def cloudwatch_unwrap(text: Column) -> Column:
     drops them, matching the deaggregation library's behavior of
     skipping control records. Pure JVM (`from_json` + `transform`);
     caller explodes once.
+
+    Only a text that contains ``messageType`` or a ``\\u`` escape is
+    parsed; every other text is NULL to ``from_json`` and comes back as
+    [text]. This is exact, not a heuristic: Spark matches JSON field
+    names case-sensitively (a ``MessageType`` key is no envelope), and
+    a key can spell ``messageType`` without its literal bytes only
+    through ``\\uXXXX`` escapes (``"message\\u0054ype"``). Single-quoted
+    keys still hold the bytes.
     """
-    parsed = F.from_json(text, _CW_SCHEMA)
+    maybe_envelope = text.contains("messageType") | text.contains("\\u")
+    parsed = F.from_json(F.when(maybe_envelope, text), _CW_SCHEMA)
     is_data = (parsed["messageType"] == F.lit("DATA_MESSAGE")) & parsed[
         "logEvents"
     ].isNotNull()

@@ -215,8 +215,8 @@ def compact_partitions(
     """Compact the small files of a hive-layout routed dataset at
     ``root`` (the dataset path plus its prefix).
 
-    Partitioned streaming sinks accumulate one file per task per
-    micro-batch; at 100 TB that is the classic small-files problem
+    Repeated appends accumulate one file per task per append; at
+    100 TB that is the classic small-files problem
     (S3 listing + open overhead dominates reads). This rewrites each
     (log_type, ym, dd) partition into ``files_per_partition`` files
     through the layout's own clustered write into a staging dir, then
@@ -233,8 +233,19 @@ def compact_partitions(
     atomic directory renames on file://+HDFS; on S3A the swap is a
     copy and readers can observe a partial listing mid-swap (prefer a
     table format's commit protocol there).
+
+    A root that holds ``_spark_metadata`` (a stream's file sink) is
+    refused with ``ValueError`` before anything is written: the swap
+    would drop that log, the stream's next batch would start a new one
+    at its own batch id, and a plain ``spark.read.text(root)`` would
+    then fail on the missing earlier log entries.
     """
     fs = _fs(spark, root, "compact_partitions")
+    if fs.exists(_jpath(spark, root + "/_spark_metadata")):
+        raise ValueError(
+            f"compact_partitions: {root!r} holds a stream's _spark_metadata "
+            "log, which compaction would drop; compact a batch root"
+        )
     stage = root + "__compact"
     salt = [F.crc32(F.col("value")) % files_per_partition] if files_per_partition > 1 else []
     _hive(_read(spark, root), stage, *salt).mode("overwrite").save()

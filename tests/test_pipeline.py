@@ -82,6 +82,65 @@ def test_p3_cloudwatch_envelope(spark):
     assert all(r.route == "purchase" for r in rows)
 
 
+def _kinesis_event_batch(spark, tmp_path, datas):
+    """``run_batch`` over one Kinesis event whose records carry
+    ``datas`` as their ``data`` fields; the routed (log_type, payload)
+    pairs it wrote, sorted."""
+    from terraform_aws_lambda_kinesis_to_s3_spark.job import run_batch
+    from terraform_aws_lambda_kinesis_to_s3_spark.sinks import read_routed
+
+    event = {
+        "Records": [
+            {"kinesis": {"data": d, "partitionKey": "pk", "sequenceNumber": "1"}}
+            for d in datas
+        ]
+    }
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "events.json").write_text(json.dumps(event) + "\n")
+    out = str(tmp_path / "out")
+    run_batch(spark, str(src), out, CFG, input_format="kinesis-event")
+    return sorted((r.log_type, r.payload) for r in read_routed(spark, out).collect())
+
+
+def _b64(blob: bytes) -> str:
+    return base64.b64encode(blob).decode()
+
+
+def _cw_envelope_text(key: str) -> str:
+    cw = {
+        "messageType": "DATA_MESSAGE",
+        "logGroup": "g",
+        "logEvents": [
+            {"id": "1", "timestamp": 1, "message": rec(log_id="cw-1").decode()},
+            {"id": "2", "timestamp": 2, "message": rec(log_id="cw-2").decode()},
+        ],
+    }
+    return json.dumps(cw).replace('"messageType"', key)
+
+
+def test_p3_escaped_key_envelope_unwraps(spark, tmp_path):
+    """A gzip envelope whose key is spelled with a ``\\u`` escape holds
+    no ``messageType`` bytes, yet Spark's JSON reader sees the key: it
+    unwraps into its messages."""
+    text = _cw_envelope_text('"message\\u0054ype"')
+    assert "messageType" not in text
+    back = _kinesis_event_batch(spark, tmp_path, [_b64(gzip.compress(text.encode()))])
+    assert back == [
+        ("purchase", rec(log_id="cw-1").decode()),
+        ("purchase", rec(log_id="cw-2").decode()),
+    ]
+
+
+def test_p3_wrong_case_key_stays_one_record(spark, tmp_path):
+    """Spark matches field names case-sensitively: a ``MessageType``
+    envelope is no envelope, and routes as one record (to ``unknown``,
+    as it has no ``log_type``)."""
+    text = _cw_envelope_text('"MessageType"')
+    back = _kinesis_event_batch(spark, tmp_path, [_b64(gzip.compress(text.encode()))])
+    assert back == [("unknown", text)]
+
+
 def test_p4_kpl_aggregated(spark):
     blob = kpl_aggregate_bytes([rec(log_id="k-1"), rec(log_id="k-2")])
     # unit-level roundtrip
@@ -297,25 +356,7 @@ def test_malformed_base64_routes_unknown(tmp_path, spark):
     with its raw text as payload; the good record in the same event
     still routes and the batch completes. A NULL ``data`` yields no
     row."""
-    from terraform_aws_lambda_kinesis_to_s3_spark.job import run_batch
-    from terraform_aws_lambda_kinesis_to_s3_spark.sinks import read_routed
-
-    def kinesis(data):
-        return {"kinesis": {"data": data, "partitionKey": "pk", "sequenceNumber": "1"}}
-
-    event = {
-        "Records": [
-            kinesis(base64.b64encode(rec()).decode()),
-            kinesis("!!not base64@@"),
-            kinesis(None),
-        ]
-    }
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "events.json").write_text(json.dumps(event) + "\n")
-    out = str(tmp_path / "out")
-    run_batch(spark, str(src), out, CFG, input_format="kinesis-event")
-    back = sorted((r.log_type, r.payload) for r in read_routed(spark, out).collect())
+    back = _kinesis_event_batch(spark, tmp_path, [_b64(rec()), "!!not base64@@", None])
     assert back == [("purchase", rec().decode()), ("unknown", "!!not base64@@")]
 
 

@@ -314,6 +314,91 @@ def test_decode_records_matches_explode(spark, blobs):
     assert sorted(out.collect()) == sorted(ref.collect())
 
 
+def _old_cloudwatch_unwrap(text):
+    """The CloudWatch unwrap before its parse gate, verbatim: every
+    text through ``from_json``."""
+    from terraform_aws_lambda_kinesis_to_s3_spark.functions.decoders import _CW_SCHEMA
+
+    parsed = F.from_json(text, _CW_SCHEMA)
+    is_data = (parsed["messageType"] == F.lit("DATA_MESSAGE")) & parsed[
+        "logEvents"
+    ].isNotNull()
+    is_control = parsed["messageType"] == F.lit("CONTROL_MESSAGE")
+    return (
+        F.when(is_data, F.transform(parsed["logEvents"], lambda e: e["message"]))
+        .when(is_control, F.array().cast("array<string>"))
+        .otherwise(F.array(text))
+    )
+
+
+# the key as Spark reads it, escaped spellings of it, and near misses
+_CW_KEYS = st.sampled_from(
+    [
+        '"messageType"',
+        '"message\\u0054ype"',
+        '"messag\\u0065Type"',
+        '"\\u006d\\u0065ssageType"',
+        "'messageType'",
+        '"MessageType"',
+        '"messagetype"',
+        '"message\\u0074ype"',
+    ]
+)
+
+
+@st.composite
+def _cw_texts(draw):
+    """Decoded units around the CloudWatch envelope: DATA and CONTROL
+    envelopes under the key's spellings, envelopes nested below the top
+    level or inside a top-level array, ``\\u`` escapes elsewhere, plain
+    records, non-JSON and empty text."""
+    kind = draw(st.sampled_from(["envelope", "nested", "array", "record", "escaped", "text"]))
+    if kind == "text":
+        return draw(st.one_of(st.just(""), st.text(max_size=30)))
+    if kind == "record":
+        return draw(_json_bytes).decode()
+    if kind == "escaped":  # a \u escape in a value, no envelope key
+        return json.dumps({"log_type": draw(st.text(max_size=4)), "msg": "café"}, ensure_ascii=True)
+    messages = st.one_of(st.text(max_size=8), _json_bytes.map(bytes.decode))
+    events = draw(
+        st.one_of(
+            st.none(),
+            st.lists(st.fixed_dictionaries({"id": st.just("1"), "message": messages}), max_size=3),
+        )
+    )
+    envelope = {"messageType": draw(st.sampled_from(["DATA_MESSAGE", "CONTROL_MESSAGE", "OTHER", None])),
+                "owner": "1", "logGroup": "g"}
+    if events is not None:
+        envelope["logEvents"] = events
+    text = json.dumps(envelope).replace('"messageType"', draw(_CW_KEYS), 1)
+    if kind == "nested":
+        return '{"outer": ' + text + "}"
+    if kind == "array":
+        return "[" + text + "]"
+    return text
+
+
+@settings(
+    max_examples=30,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(texts=st.lists(st.one_of(st.none(), _cw_texts()), max_size=10))
+def test_cloudwatch_unwrap_gate_matches_full_parse(spark, texts):
+    """Differential: parsing only the texts that contain
+    ``messageType`` or a ``\\u`` escape unwraps exactly what parsing
+    every text did."""
+    from terraform_aws_lambda_kinesis_to_s3_spark.functions.decoders import (
+        cloudwatch_unwrap,
+    )
+
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, t string")
+    got = df.select("id", cloudwatch_unwrap(F.col("t")).alias("new"),
+                    _old_cloudwatch_unwrap(F.col("t")).alias("old"))
+    for r in got.collect():
+        assert r.new == r.old, texts[r.id]
+
+
 def _old_dateutil_kernel(s):
     """The Arrow ``pandas_udf`` body the dateutil ``mapInArrow`` pass
     replaced, verbatim: a batch of strings in, UTC-naive

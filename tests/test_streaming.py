@@ -10,6 +10,8 @@ import os
 import shutil
 import time
 
+import pytest
+
 from terraform_aws_lambda_kinesis_to_s3_spark.config import PipelineConfig
 from terraform_aws_lambda_kinesis_to_s3_spark.streaming import (
     RouteMetricsListener,
@@ -305,6 +307,38 @@ def test_every_writer_roots_output_at_the_prefix(spark, tmp_path):
     for kind in ("batch", "stream"):
         got = Counter(r.payload for r in read_routed(spark, outs[kind, False], cfg).collect())
         assert got == want, kind
+
+
+def test_compaction_refuses_a_stream_sink_root(spark, tmp_path):
+    """``compact_partitions`` on a root a stream writes to raises before
+    it writes anything, so the file sink's ``_spark_metadata`` log stays
+    whole and a plain read of the root still sees every row."""
+    from terraform_aws_lambda_kinesis_to_s3_spark.sinks.partitioned_json import compact_partitions
+
+    src, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    n = 0
+    for b in range(2):
+        records = [
+            {"log_type": "purchase", "log_id": f"p-{b}-{i}", "time": "2024-03-05T10:00:00Z"}
+            for i in range(5)
+        ]
+        n += len(records)
+        _write_batch(src, f"b{b}.jsonl", records)
+        run_stream(stream_source(spark, CFG, "file", src), out, ckpt, CFG).awaitTermination(120)
+
+    def listing():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), out)
+            for d, _, files in os.walk(out)
+            for f in files
+        )
+
+    before = listing()
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        compact_partitions(spark, out)
+    assert listing() == before
+    assert not os.path.exists(out + "__compact")
+    assert spark.read.text(out).count() == n
 
 
 def test_run_stream_leaves_session_conf_unchanged(spark, tmp_path):

@@ -27,6 +27,7 @@ Exit: 1 on any contract violation, with the reproducing seed printed.
 from __future__ import annotations
 
 import gzip
+import json
 import os
 import random
 import sys
@@ -58,6 +59,13 @@ def corpus(rng: random.Random) -> list[bytes]:
         MM.synth_jpeg(64, 48, n_filler=9),
         kpl_aggregate_bytes([b"alpha" * 10, b"beta" * 10]),
         gzip.compress(b'{"log_type": "purchase", "log_id": "e-1"}\n' * 8, mtime=0),
+        gzip.compress(json.dumps({  # a CloudWatch Logs DATA_MESSAGE envelope
+            "messageType": "DATA_MESSAGE", "owner": "1", "logGroup": "g",
+            "logStream": "s", "subscriptionFilters": ["f"],
+            "logEvents": [{"id": str(i), "timestamp": 1704067200000 + i,
+                           "message": '{"log_type": "purchase", "log_id": "cw-%d"}' % i}
+                          for i in range(3)],
+        }).encode(), mtime=0),
         b"Tue, 02 Jan 2024 10:00:00 +0900",
         b"1677-09-21T00:12:43.145225+01:00",
         b"Jan 5 2024 3:04pm",
