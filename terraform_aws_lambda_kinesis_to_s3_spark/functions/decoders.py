@@ -239,6 +239,12 @@ def cloudwatch_unwrap(text: Column) -> Column:
     drops them, matching the deaggregation library's behavior of
     skipping control records. Pure JVM (`from_json` + `transform`);
     caller explodes once.
+    """
+    return _cw_units(_cw_parse(text), text)
+
+
+def _cw_parse(text: Column) -> Column:
+    """``text`` parsed as a CloudWatch envelope struct.
 
     Only a text that contains ``messageType`` or a ``\\u`` escape is
     parsed; every other text is NULL to ``from_json`` and comes back as
@@ -249,7 +255,11 @@ def cloudwatch_unwrap(text: Column) -> Column:
     keys still hold the bytes.
     """
     maybe_envelope = text.contains("messageType") | text.contains("\\u")
-    parsed = F.from_json(F.when(maybe_envelope, text), _CW_SCHEMA)
+    return F.from_json(F.when(maybe_envelope, text), _CW_SCHEMA)
+
+
+def _cw_units(parsed: Column, text: Column) -> Column:
+    """:func:`cloudwatch_unwrap`'s array from the parsed envelope."""
     is_data = (parsed["messageType"] == F.lit("DATA_MESSAGE")) & parsed[
         "logEvents"
     ].isNotNull()
@@ -286,5 +296,10 @@ def decode_records(df: DataFrame, data_col: str = "data", base64_encoded: bool =
         [f for f in df.schema.fields if f.name != data_col]
         + [T.StructField("__text", T.StringType())]
     )
+    # The envelope is parsed in a Project, which evaluates it once per
+    # unit; inside the explode's Generate (no subexpression
+    # elimination) each field reference would parse the text again.
     df = df.mapInArrow(_decode_batches(data_col), schema)
-    return df.withColumn("payload", F.explode(cloudwatch_unwrap(F.col("__text")))).drop("__text")
+    df = df.withColumn("__cw", _cw_parse(F.col("__text")))
+    units = _cw_units(F.col("__cw"), F.col("__text"))
+    return df.withColumn("payload", F.explode(units)).drop("__text", "__cw")

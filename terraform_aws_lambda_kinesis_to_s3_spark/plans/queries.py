@@ -19119,8 +19119,8 @@ FROM top CROSS JOIN totals
 # Registry
 # ---------------------------------------------------------------------------
 
-#: name -> (spark_fn, oracle_sql | None)
-REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+#: name -> (spark_fn, oracle_sql)
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
     # Tier A — reference pipeline semantics
     "pipeline_route": (q_pipeline_route, SQL_PIPELINE_ROUTE),
     "pipeline_unknown_routing": (q_pipeline_unknown, SQL_PIPELINE_UNKNOWN),
@@ -19584,4 +19584,4 @@ def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_queries() -> dict[str, str]:
-    return {name: sql for name, (_, sql) in REGISTRY.items() if sql is not None}
+    return {name: sql for name, (_, sql) in REGISTRY.items()}

@@ -91,12 +91,13 @@ def _hive(rows: DataFrame, root: str, *salt: Column):
 def _read(spark: SparkSession, root: str) -> DataFrame:
     """A hive-layout dataset at ``root`` as (value, log_type, ym, dd),
     all strings: partition type inference would read ``dd=02`` as the
-    integer 2, which a rewrite then writes back as ``dd=2``."""
+    integer 2, which a rewrite then writes back as ``dd=2``. A stream
+    sink's root is read through its ``_spark_metadata`` log, so only
+    files a committed batch lists are returned."""
     return (
         spark.read.format("text")
         .schema("value string, log_type string, ym string, dd string")
-        .option("basePath", root)
-        .load(root + "/log_type=*/ym=*/dd=*")
+        .load(root)
     )
 
 

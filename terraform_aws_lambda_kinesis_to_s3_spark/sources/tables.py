@@ -75,10 +75,3 @@ def load_table(
             # keeps unix_micros()/long-cast arithmetic working downstream
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view so users can query the
-    engine with plain ``spark.sql`` (same Catalyst plans either way)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -16,12 +16,17 @@ unchanged), so the signal survives at-least-once delivery without
 distinct-tracking state.  Within one batch, exact same-record
 re-deliveries collapse via dropDuplicates on event_id.
 
-The JS math matches the batch query exactly: full outer day-pairing at
-the (day, type) grain, probability 0 for types absent on one side,
-0·ln0 = 0 explicit, JS ≤ ln 2.
+The JS math is the batch query's: full outer day-pairing at the
+(day, type) grain, probability 0 for types absent on one side, 0·ln0 =
+0 explicit, JS ≤ ln 2.  The readout reads the pile once per batch (the
+census cells) and computes it on the driver.
 """
 
 from __future__ import annotations
+
+import datetime
+import decimal
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,34 +45,39 @@ def daily_type_census(batch_df: DataFrame) -> DataFrame:
     )
 
 
-def js_day_over_day(census: DataFrame) -> DataFrame:
-    """(day, js_divergence) for every day with a predecessor, from an
-    aggregated (d, event_type, c) census.  Bounded O(days·types)
-    joins — identical semantics to q_events_daily_type_drift."""
-    daily = census.groupBy("d", "event_type").agg(F.sum("c").alias("c"))
-    tot = daily.groupBy("d").agg(F.sum("c").alias("t"))
-    p = daily.join(tot, "d").select(
-        "d", "event_type", (F.col("c") / F.col("t")).alias("p")
-    )
-    q = p.select(
-        F.date_add("d", 1).alias("d"), "event_type", F.col("p").alias("q")
-    )
-    m = (
-        p.join(q, ["d", "event_type"], "full")
-        .withColumn("p", F.coalesce("p", F.lit(0.0)))
-        .withColumn("q", F.coalesce("q", F.lit(0.0)))
-    )
-    days_both = p.select("d").distinct().join(q.select("d").distinct(), "d")
-    m = m.join(days_both, "d")
-    mid = (F.col("p") + F.col("q")) / 2
-    term = F.when(
-        F.col("p") > 0, F.col("p") * F.log(F.col("p") / mid)
-    ).otherwise(F.lit(0.0)) + F.when(
-        F.col("q") > 0, F.col("q") * F.log(F.col("q") / mid)
-    ).otherwise(F.lit(0.0))
-    return m.groupBy("d").agg(
-        F.round(F.sum(term) / 2, 6).alias("js_divergence")
-    )
+def js_day_over_day(cells) -> dict:
+    """{day: js_divergence} for every day with a predecessor, from the
+    aggregated census cells (rows of d, event_type, c): the formula of
+    q_events_daily_type_drift, computed on the driver.  The census is
+    O(days·types) rows; the same joins as Spark jobs cost about a
+    second per readout.  As under that query's joins, a NULL day pairs
+    with nothing and a NULL type never pairs across days.  Rounded as
+    Spark's ``round(x, 6)`` rounds: half up on the printed decimal."""
+    days: dict = {}
+    for r in cells:
+        if r.d is not None:
+            days.setdefault(r.d, []).append((r.event_type, r.c))
+
+    def dist(day, null_key):
+        t = sum(c for _, c in days[day])
+        return {(k if k is not None else null_key): c / t for k, c in days[day]}
+
+    out = {}
+    for d in days:
+        prev = d - datetime.timedelta(days=1)
+        if prev not in days:
+            continue
+        p, q = dist(d, ("null", "p")), dist(prev, ("null", "q"))
+        total = 0.0
+        for k in sorted(p.keys() | q.keys(), key=repr):
+            pk, qk = p.get(k, 0.0), q.get(k, 0.0)
+            mid = (pk + qk) / 2
+            total += (pk * math.log(pk / mid) if pk > 0 else 0.0) + (
+                qk * math.log(qk / mid) if qk > 0 else 0.0
+            )
+        js = decimal.Decimal(repr(total / 2)).quantize(decimal.Decimal("1e-6"), decimal.ROUND_HALF_UP)
+        out[d] = float(js)
+    return out
 
 
 def run_type_drift_monitor(
@@ -88,13 +98,15 @@ def run_type_drift_monitor(
     exceeds ``alert_threshold``."""
 
     def readout(census: DataFrame) -> dict:
-        row = js_day_over_day(census).orderBy(F.col("d").desc()).limit(1).collect()
-        latest = row[0] if row else None
+        # the one read of the pile per batch
+        cells = census.groupBy("d", "event_type").agg(F.sum("c").alias("c")).collect()
+        js = js_day_over_day(cells)
+        latest = max(js, default=None)
         return {
-            "n_days": census.select("d").distinct().count(),
-            "latest_day": str(latest.d) if latest else None,
-            "latest_js": latest.js_divergence if latest else None,
-            "alert": bool(latest and latest.js_divergence > alert_threshold),
+            "n_days": len({r.d for r in cells}),
+            "latest_day": str(latest) if latest is not None else None,
+            "latest_js": js.get(latest),
+            "alert": latest is not None and js[latest] > alert_threshold,
         }
 
     return run_partial_merge(

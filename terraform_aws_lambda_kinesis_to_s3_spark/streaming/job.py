@@ -50,10 +50,6 @@ def stream_source(
     ``file``: newline-delimited payload files (tests, replay, and the
     S3-landing pattern where an agent drops raw batches). Payloads are
     already text — no decode chain.
-    ``binary-file``: one raw Kinesis ``Data`` blob per file, run
-    through the full A2 decode chain (KPL deaggregation, gunzip,
-    CloudWatch unwrap) — the connector-free stand-in that exercises the
-    exact decode path the kinesis format uses.
     ``kinesis``: requires a Kinesis connector on the cluster (EMR/Glue
     provide one). The connector surfaces ``data`` as raw bytes; the
     reference always runs those through ``kinesis.parse_records``
@@ -62,26 +58,13 @@ def stream_source(
     aggregated and CloudWatch records land correctly instead of being
     UTF-8-mangled (ADVICE r1, streaming/job.py:59).
     """
-    files_per_trigger = max(1, cfg.batch_size // 100)
     if format == "file":
         return (
             spark.readStream.format("text")
-            .option("maxFilesPerTrigger", files_per_trigger)
+            .option("maxFilesPerTrigger", max(1, cfg.batch_size // 100))
             .load(path)
             .withColumnRenamed("value", "payload")
         )
-    if format == "binary-file":
-        raw = (
-            spark.readStream.format("binaryFile")
-            # streaming sources need an explicit schema; binaryFile's is fixed
-            .schema(
-                "path string, modificationTime timestamp, length long, content binary"
-            )
-            .option("maxFilesPerTrigger", files_per_trigger)
-            .load(path)
-            .select(F.col("content").alias("data"))
-        )
-        return decode_records(raw, base64_encoded=False).select("payload")
     if format == "kinesis":
         if not cfg.kinesis_stream_arn:
             raise ValueError("kinesis source requires cfg.kinesis_stream_arn")

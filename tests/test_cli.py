@@ -8,6 +8,18 @@ import gzip
 import json
 import os
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _load_tool(name: str):
+    """``tools/<name>.py`` loaded by path, as a script is run."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(name, os.path.join(_REPO, "tools", f"{name}.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
 
 def test_cli_batch_payload_and_kinesis_event(spark, tmp_path):
     from terraform_aws_lambda_kinesis_to_s3_spark.__main__ import main
@@ -171,17 +183,9 @@ def test_bench_diff_refuses_mismatched_stamps(tmp_path, monkeypatch):
     """tools/bench_diff.py exits 2 with a named reason when either sweep
     has no nproc/cores/sf stamp or the two differ in one, and compares
     sweeps whose stamps agree."""
-    import importlib.util
-    import json
-    import os
     import sys
 
-    spec = importlib.util.spec_from_file_location(
-        "bench_diff",
-        os.path.join(os.path.dirname(__file__), "..", "tools", "bench_diff.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = _load_tool("bench_diff")
 
     stamps = {"nproc": 4, "cores": 4, "sf": "sf0.1", "rev": "a"}
     base = {"queries": {"q": 1.0}, "stamps": stamps}
@@ -209,32 +213,22 @@ def test_bench_diff_refuses_mismatched_stamps(tmp_path, monkeypatch):
         assert mod.main() == code
 
 
-def test_partition_invariance_hash_is_layout_blind():
-    """The invariance audit's frame hash must be blind to exactly the
-    things a partition layout reorders — row order and column order —
-    and sharp to a single value change; otherwise the 309/309
-    partition-invariant receipt would be vacuous (hash too loose) or
-    noise (too strict)."""
-    import importlib.util
-    import os
-    import sys
-
+def test_partition_invariance_compare_is_layout_blind():
+    """The invariance audit compares the two layouts' frames by the
+    oracle gate's rule: blind to exactly the things a partition layout
+    reorders — row order and column order — and sharp to a single value
+    change or a failed run; otherwise the 309/309 partition-invariant
+    receipt would be vacuous (too loose) or noise (too strict)."""
     import pandas as pd
 
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-    spec = importlib.util.spec_from_file_location(
-        "partition_invariance",
-        os.path.join(os.path.dirname(__file__), "..", "tools",
-                     "partition_invariance.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = _load_tool("partition_invariance")
     a = pd.DataFrame({"x": [1, 2, 3], "y": [0.15, 0.25, None]})
     shuffled = a.iloc[[2, 0, 1]][["y", "x"]]
-    assert mod.frame_hash(a) == mod.frame_hash(shuffled)
+    assert mod.varies("q", a, shuffled) is None
     changed = a.copy()
     changed.loc[0, "x"] = 99
-    assert mod.frame_hash(a) != mod.frame_hash(changed)
+    assert "row 0 col x" in mod.varies("q", a, changed)
+    assert "ERROR:ValueError" in mod.varies("q", a, "ERROR:ValueError")
 
 
 def test_shared_stage_cache_registry_is_total():
@@ -262,20 +256,9 @@ def test_bench_diff_cache_builders():
     build to) — never the flagged query itself, never a non-consumer,
     and nothing at all when the flagged query is itself the first
     consumer or consumes no cache."""
-    import importlib.util
     import inspect
-    import os
-    import sys
 
-    spec = importlib.util.spec_from_file_location(
-        "bench_diff",
-        os.path.join(os.path.dirname(__file__), "..", "tools",
-                     "bench_diff.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    mod = _load_tool("bench_diff")
     from bench import HEADLINE
     from terraform_aws_lambda_kinesis_to_s3_spark.plans.queries import (
         REGISTRY,
@@ -324,28 +307,51 @@ def test_bench_diff_cache_builders():
 
 
 def test_prose_counts_match_registry():
-    """tools/verify_contract.check_prose_counts: README's stated
-    registry size must equal len(REGISTRY) — drift is a failure."""
-    import os
-    import sys
+    """README states the registry size (as "N registry queries" or
+    "registry (N queries"); every statement must equal len(REGISTRY)
+    and at least one must remain — drift is a failure."""
+    import re
 
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-    from tools.verify_contract import check_prose_counts
+    from terraform_aws_lambda_kinesis_to_s3_spark.plans.queries import REGISTRY
 
-    assert check_prose_counts() == []
+    readme = open(os.path.join(_REPO, "README.md")).read()
+    stated = re.findall(r"(\d+) registry queries|registry \((\d+) queries", readme)
+    assert stated, "README no longer states the registry count"
+    assert {int(a or b) for a, b in stated} == {len(REGISTRY)}
 
 
 def test_explains_covers_registry():
-    """tools/verify_contract.check_explains_count: EXPLAINS.md must
-    carry one plan section per registry query — it lagged the registry
-    in r4 AND r5; now drift is a test failure (r5 verdict item 6)."""
-    import os
-    import sys
+    """EXPLAINS.md carries one plan section per registry query and none
+    for anything else — it lagged the registry twice before this was a
+    test. Regenerate with tools/gen_explains.py after a registry
+    change."""
+    import re
 
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-    from tools.verify_contract import check_explains_count
+    from terraform_aws_lambda_kinesis_to_s3_spark.plans.queries import REGISTRY
 
-    assert check_explains_count() == []
+    explains = open(os.path.join(_REPO, "EXPLAINS.md")).read()
+    shown = set(re.findall(r"^## (\S+)$", explains, re.MULTILINE))
+    assert sorted(set(REGISTRY) - shown) == [], "run tools/gen_explains.py"
+    assert sorted(shown - set(REGISTRY)) == []
+
+
+def test_entry_returns_rows(spark):
+    """``__spark_entry__.entry()``, the flagship pipeline query,
+    returns rows."""
+    import __spark_entry__ as m
+
+    assert m.entry(spark).count() > 0
+
+
+def test_tools_import():
+    """Every tool loads by path: a tool that imports a module since
+    deleted fails here, not on its next manual run."""
+    import glob
+
+    tools = sorted(glob.glob(os.path.join(_REPO, "tools", "*.py")))
+    assert tools
+    for path in tools:
+        _load_tool(os.path.basename(path)[:-3])
 
 
 def test_bench_only_exact_name_not_shadowed_by_substring():
@@ -378,9 +384,9 @@ def test_scale_override_oracles_agree_with_registry_at_sf001():
     import duckdb
 
     import __spark_entry__ as m
+    from terraform_aws_lambda_kinesis_to_s3_spark.sources.tables import TABLES
+    from tests.test_oracle import _compare
     from tools.scale_oracle_sweep import SCALE_ORACLE_OVERRIDES
-    from tools.verify_contract import TABLES, values_equal
-    from tests.test_oracle import canonicalize as canon
 
     sf = "/root/testdata/sf0.01"
     con = duckdb.connect()
@@ -390,14 +396,39 @@ def test_scale_override_oracles_agree_with_registry_at_sf001():
     assert SCALE_ORACLE_OVERRIDES, "override table unexpectedly empty"
     for name, sql in SCALE_ORACLE_OVERRIDES.items():
         assert name in osql, f"{name} override has no registry oracle"
-        a = canon(con.execute(sql).df())
-        b = canon(con.execute(osql[name]).df())
-        assert list(a.columns) == list(b.columns), (name, a.columns, b.columns)
-        assert len(a) == len(b), (name, len(a), len(b))
-        for c in a.columns:
-            assert all(
-                values_equal(x, y) for x, y in zip(a[c], b[c])
-            ), f"{name}: column {c} differs between override and registry oracle"
+        _compare(name, con.execute(sql).df(), con.execute(osql[name]).df())
+
+
+def test_scale_sweep_records_dtype_mismatch(tmp_path, monkeypatch):
+    """The sf1 sweep judges each entry by the oracle gate's rule: an
+    int64 Spark column against the oracle's float64 (DuckDB's HUGEINT
+    SUM) with equal values is a ``mismatch``, with the gate's message
+    as the detail, as it is red in tests/test_oracle.py."""
+    import sys
+
+    import pandas as pd
+
+    import __spark_entry__ as m
+    import terraform_aws_lambda_kinesis_to_s3_spark.session as session
+
+    mod = _load_tool("scale_oracle_sweep")
+    spark_pdf = pd.DataFrame({"k": ["x", "y"], "n": pd.array([1, 2], dtype="int64")})
+    oracle_pdf = pd.DataFrame({"k": ["x", "y"], "n": [1.0, 2.0]})
+
+    class Result:
+        def toPandas(self):
+            return spark_pdf
+
+    monkeypatch.setattr(m, "queries", lambda: {"uncast_sum": lambda spark, sf: Result()})
+    monkeypatch.setattr(m, "oracle_sql", lambda: {"uncast_sum": "SELECT 1"})
+    monkeypatch.setattr(session, "get_spark", lambda app_name: None)
+    monkeypatch.setattr(mod, "run_oracle", lambda *a: (oracle_pdf, None))
+    out = tmp_path / "sweep.json"
+    monkeypatch.setattr(sys, "argv", ["scale_oracle_sweep", str(tmp_path), "--out", str(out)])
+    assert mod.main() == 1
+    artifact = json.loads(out.read_text())
+    assert artifact["mismatch"] == ["uncast_sum"]
+    assert "dtype kind" in artifact["per_query"]["uncast_sum"]["detail"]
 
 
 def test_capture_plans_dedup_counts():
@@ -406,16 +437,7 @@ def test_capture_plans_dedup_counts():
     inside EVERY InMemoryTableScan reference) and skip == Initial
     Plan == sections; otherwise after-plans with persists read BIGGER
     than their before-plans while executing less."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "capture_plans",
-        os.path.join(os.path.dirname(__file__), "..", "tools",
-                     "capture_plans.py"),
-    )
-    cp = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(cp)
+    cp = _load_tool("capture_plans")
 
     plan = """== Physical Plan ==
 AdaptiveSparkPlan (20)
@@ -475,4 +497,4 @@ def test_driver_contract_is_the_registry_in_order():
     assert list(qs) == list(REGISTRY)
     assert all(qs[n] is REGISTRY[n][0] for n in REGISTRY)
     assert list(osql) == list(REGISTRY)
-    assert all(osql[n] == REGISTRY[n][1] for n in REGISTRY)
+    assert all(isinstance(osql[n], str) and osql[n] == REGISTRY[n][1] for n in REGISTRY)

@@ -82,6 +82,21 @@ def test_p3_cloudwatch_envelope(spark):
     assert all(r.route == "purchase" for r in rows)
 
 
+def test_cloudwatch_envelope_parsed_once(spark):
+    """The CloudWatch unwrap parses a unit in a ``Project`` before the
+    explode: the decode ``Generate`` (no subexpression elimination)
+    holds no ``from_json``, and the executed plan parses each envelope
+    field at most once."""
+    cw = {"messageType": "DATA_MESSAGE", "logEvents": [{"id": "1", "message": rec().decode()}]}
+    routed = route_records(decode_records(payloads_to_df(spark, [json.dumps(cw).encode(), rec()])), CFG)
+    assert len(routed.collect()) == 2
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    generates = [line for line in plan.splitlines() if "Generate " in line]
+    assert len(generates) == 1 and "from_json" not in generates[0], plan
+    for field in ("messageType", "logEvents"):
+        assert plan.count(f"StructField({field},") <= 1, plan
+
+
 def _kinesis_event_batch(spark, tmp_path, datas):
     """``run_batch`` over one Kinesis event whose records carry
     ``datas`` as their ``data`` fields; the routed (log_type, payload)

@@ -199,3 +199,67 @@ def test_restart_same_checkpoint_absorbed(spark, tmp_path):
     q = run_type_drift_monitor(_stream(spark, src), census, ckpt, metrics=[])
     q.awaitTermination(120)
     assert day_counts() == once  # absorbed, not doubled
+
+
+def test_js_day_over_day_matches_batch_query(spark):
+    """The driver-side JS equals the batch query's on every day of a
+    census with a gap day, a NULL event type, types present on one day
+    only, and uneven counts."""
+    import datetime
+    import random
+
+    from pyspark.sql import Row
+
+    import terraform_aws_lambda_kinesis_to_s3_spark.plans.queries as Q
+    from terraform_aws_lambda_kinesis_to_s3_spark.streaming.drift import js_day_over_day
+
+    rng = random.Random(7)
+    days = [datetime.date(2024, 3, d) for d in (1, 2, 3, 5, 6, 7)]
+    cells = [
+        Row(d=d, event_type=t, c=rng.randint(1, 40))
+        for d in days
+        for t in ("a", "b", "c", "d", None)
+        if rng.random() < 0.7
+    ]
+    ev = spark.createDataFrame(
+        [(i, datetime.datetime.combine(r.d, datetime.time(12)), 1, r.event_type, 1.0, "{}")
+         for i, r in enumerate(r for r in cells for _ in range(r.c))],
+        SCHEMA,
+    )
+    orig = Q._t
+    try:
+        Q._t = lambda spark, sf, name, **k: ev
+        batch = {r.day: r.js_divergence for r in Q.q_events_daily_type_drift(spark, "x").collect()}
+    finally:
+        Q._t = orig
+    assert {str(d): js for d, js in js_day_over_day(cells).items()} == batch
+    assert len(batch) == 4
+
+
+def test_readout_reads_the_pile_once_per_batch(spark, tmp_path):
+    """Each micro-batch's readout runs one Spark job over the census
+    pile; ``n_days`` and the JS come from that one read."""
+    import re
+
+    src = str(tmp_path / "src")
+    census = str(tmp_path / "census")
+    for b, day in enumerate((1, 2)):
+        _write_events(src, f"b{b}.json", [_ev(10 * b + i, day, t) for i, t in enumerate("aab")])
+
+    def plans():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        store = spark._jsparkSession.sharedState().statusStore()
+        conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+        return {e.executionId(): e.physicalPlanDescription() for e in conv.asJava(store.executionsList())}
+
+    before = plans()
+    metrics = []
+    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).json(src)
+    run_type_drift_monitor(stream, census, str(tmp_path / "ckpt"), metrics=metrics).awaitTermination(120)
+    reads = [
+        p for i, p in plans().items()
+        if i not in before and re.search(r"Scan parquet", p) and census in p
+    ]
+    assert [m["n_days"] for m in metrics] == [1, 2]
+    assert metrics[-1]["latest_js"] == 0.0
+    assert len(reads) == len(metrics)

@@ -11,7 +11,9 @@ ORDER BY feeding a computation, monotonically_increasing_id leaking
 into values) passes that gate and silently returns different answers
 at scale.  This tool runs each query twice in one session — the
 baseline config, then shuffle.partitions=7 with AQE off — and
-compares canonicalized value hashes.
+compares the two result frames by the oracle gate's rule
+(``tests/test_oracle.py::_compare``), so 'equal' here is the bar the
+gate applies.
 
 Run:  python tools/partition_invariance.py [sf_dir] [--only substr,..]
       (--exact: treat the --only list as exact names, not substrings,
@@ -21,12 +23,13 @@ Exit: 1 if any query's canonical values differ between configs.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
+
+from tests.test_oracle import _compare  # noqa: E402
 
 #: the alternate layout: a partition count that divides NOTHING the
 #: baseline's 32 does, and AQE off so runtime coalescing can't mask a
@@ -35,16 +38,17 @@ ALT = {"spark.sql.shuffle.partitions": "7", "spark.sql.adaptive.enabled": "false
 BASE = {"spark.sql.shuffle.partitions": "32", "spark.sql.adaptive.enabled": "true"}
 
 
-def frame_hash(pdf) -> str:
-    """Canonicalized value hash (column-name sort, row sort, float
-    rounding — the oracle gate's canonicalization, so 'equal' here is
-    the same bar the driver applies)."""
-    from tests.test_oracle import canonicalize
-
-    c = canonicalize(pdf)
-    return hashlib.sha256(
-        c.to_csv(index=False, float_format="%.6f").encode()
-    ).hexdigest()[:16]
+def varies(name: str, base, alt) -> str | None:
+    """Why ``alt`` differs from ``base`` under the oracle gate's rule
+    (a run's error text when either pass failed), or None when they
+    agree."""
+    if isinstance(base, str) or isinstance(alt, str):
+        return f"base={base} alt7/noAQE={alt}"
+    try:
+        _compare(name, base, alt)
+    except AssertionError as e:
+        return str(e)
+    return None
 
 
 def main() -> int:
@@ -66,7 +70,7 @@ def main() -> int:
         ]
     spark = get_spark(app_name="partition_invariance")
 
-    def run_all(conf: dict) -> dict[str, str]:
+    def run_all(conf: dict) -> dict:
         for k, v in conf.items():
             spark.conf.set(k, v)
         # shared persisted stages were built under SOME layout; clear
@@ -75,19 +79,17 @@ def main() -> int:
         out = {}
         for name in names:
             try:
-                out[name] = frame_hash(REGISTRY[name][0](spark, sf).toPandas())
+                out[name] = REGISTRY[name][0](spark, sf).toPandas()
             except Exception as e:  # noqa: BLE001
                 out[name] = f"ERROR:{type(e).__name__}"
         return out
 
     base = run_all(BASE)
     alt = run_all(ALT)
-    diffs = sorted(
-        n for n in names
-        if base[n] != alt[n] or base[n].startswith("ERROR")
-    )
+    why = {n: varies(n, base[n], alt[n]) for n in names}
+    diffs = sorted(n for n in names if why[n] is not None)
     for n in diffs:
-        print(f"  VARIES: {n}  base={base[n]}  alt7/noAQE={alt[n]}")
+        print(f"  VARIES: {n}  {why[n]}")
     print(
         f"{len(names)} queries, {len(diffs)} partition-dependent: "
         f"{diffs or 'NONE'}"

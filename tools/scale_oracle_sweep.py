@@ -1,18 +1,20 @@
 #!/usr/bin/env python
 """Full-registry cross-engine sweep at a scale replica (sf1 = 10x the
 driver's largest committed correctness point): run every registry
-query on Spark AND its DuckDB oracle at the given sf_dir, compare
-canonicalized values, and write a JSON artifact.
+query on Spark AND its DuckDB oracle at the given sf_dir, compare the
+two frames by the oracle gate's rule (``tests/test_oracle.py::_compare``:
+column names, dtype kinds, row count, canonicalized values), and write
+a JSON artifact.
 
 This is a CORRECTNESS receipt, not a timing one — host load does not
 affect it, so it records no host-load probes.  It extends the
 correctness ladder sf0.01 (driver, per-round) -> sf0.1 (r10 builder
 sweep, 309/309) by another order of magnitude.
 
-Two departures from tools/verify_contract.py (the sf0.01 mirror):
+Two departures from ``tests/test_oracle.py`` (the sf0.01 gate):
 
-* a per-oracle wall budget (default 600 s) enforced with
-  ``duckdb.interrupt()`` from a watchdog thread — a DuckDB oracle
+* a per-oracle wall budget (default 600 s), enforced by ending the
+  oracle's subprocess (below) — a DuckDB oracle
   whose FORMULATION cannot scale records ``oracle_budget_exceeded``
   (an honest skip, visible in the artifact) instead of wedging the
   whole sweep;
@@ -55,8 +57,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.test_oracle import canonicalize as canon  # noqa: E402
-from tools.verify_contract import TABLES, values_equal  # noqa: E402
+from terraform_aws_lambda_kinesis_to_s3_spark.sources.tables import TABLES  # noqa: E402
+from tests.test_oracle import _compare  # noqa: E402
 
 #: Scale-path oracle replacements, keyed by registry name.  Each must
 #: compute the SAME result schema as the registry oracle it replaces —
@@ -215,7 +217,6 @@ def main() -> int:
                 if str(r.get("status", "")).startswith("oracle_error:")
             ),
             "spark_error": by("spark_error"),
-            "rows_only": by("rows_only") + by("rows_only_empty"),
             "scale_overrides_used": sorted(
                 n for n in per if per[n].get("oracle") == "scale_override"
             ),
@@ -242,14 +243,7 @@ def main() -> int:
             continue
         rec["sec_spark"] = round(time.time() - t0, 2)
         rec["rows"] = len(s)
-        sql = SCALE_ORACLE_OVERRIDES.get(name) or osql.get(name)
-        if sql is None:
-            rec["status"] = "rows_only" if len(s) > 0 else "rows_only_empty"
-            per[name] = rec
-            write_artifact()
-            print(f"[{i+1}/{len(names)}] {name}: {rec['status']} "
-                  f"({len(s)} rows)", flush=True)
-            continue
+        sql = SCALE_ORACLE_OVERRIDES.get(name, osql[name])
         if name in SCALE_ORACLE_OVERRIDES:
             rec["oracle"] = "scale_override"
         t0 = time.time()
@@ -258,21 +252,11 @@ def main() -> int:
         if status is not None:
             rec["status"] = status
         else:
-            a, b = canon(s), canon(d)
-            ok = list(a.columns) == list(b.columns) and len(a) == len(b)
-            if ok:
-                for c in a.columns:
-                    if not all(
-                        values_equal(x, y) for x, y in zip(a[c], b[c])
-                    ):
-                        ok = False
-                        rec["detail"] = f"column {c} differs"
-                        break
-            elif list(a.columns) != list(b.columns):
-                rec["detail"] = f"schema {list(a.columns)} vs {list(b.columns)}"
-            else:
-                rec["detail"] = f"rows {len(a)} vs {len(b)}"
-            rec["status"] = "match" if ok else "mismatch"
+            try:
+                _compare(name, s, d)
+                rec["status"] = "match"
+            except AssertionError as e:
+                rec.update(status="mismatch", detail=str(e))
         per[name] = rec
         write_artifact()
         print(f"[{i+1}/{len(names)}] {name}: {rec['status'].upper()} "
